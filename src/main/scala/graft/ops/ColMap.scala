@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Per-version column NAME MAPPING — the Delta-style column-mapping
   * indirection that makes `ALTER TABLE … RENAME COLUMN` a METADATA
@@ -212,19 +213,31 @@ object ColMap {
     * bytes are never read. Non-mapped columns (including injected ones
     * like `_change_type`) pass through untouched.
     */
-  def toLogical(df: DataFrame, dir: String): DataFrame = {
+  def toLogical(df: DataFrame, dir: String): DataFrame =
+    logicalNames(dir, df.columns.toSeq).fold(df)(names =>
+      df.select(names.map { case (c, l) =>
+        if (c == l) col(s"`$c`") else col(s"`$c`").as(l)
+      }.toIndexedSeq: _*))
+
+  /** [[toLogical]] over a schema: the same drops and renames, no frame. */
+  def toLogicalSchema(schema: StructType, dir: String): StructType =
+    logicalNames(dir, schema.fieldNames.toSeq).fold(schema) { names =>
+      val byName = schema.fields.map(f => f.name -> f).toMap
+      StructType(names.map { case (c, l) => byName(c).copy(name = l) })
+    }
+
+  /** Each kept physical name paired with its logical name; None when
+    * `dir` is unmapped (nothing renamed or dropped).
+    */
+  private def logicalNames(dir: String,
+      physical: Seq[String]): Option[Seq[(String, String)]] = {
     val m = load(dir)
     val gone = dropped(dir).map(_.toLowerCase)
-    if (m.isEmpty && gone.isEmpty) df
+    if (m.isEmpty && gone.isEmpty) None
     else {
       val physToLogical = m.map { case (l, p) => p.toLowerCase -> l }
-      df.select(df.columns.toIndexedSeq
-        .filterNot(c => gone.contains(c.toLowerCase))
-        .map(c =>
-          physToLogical.get(c.toLowerCase) match {
-            case Some(l) => col(s"`$c`").as(l)
-            case None => col(s"`$c`")
-          }): _*)
+      Some(physical.filterNot(c => gone.contains(c.toLowerCase))
+        .map(c => c -> physToLogical.getOrElse(c.toLowerCase, c)))
     }
   }
 

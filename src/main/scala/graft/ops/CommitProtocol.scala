@@ -153,11 +153,30 @@ object LocalFsCommit extends CommitProtocol {
   // deadlock-freedom unchanged. Entries are never evicted (one small
   // lock object per table root touched by this JVM) — evicting a held
   // entry would hand a second thread a fresh lock for the same root.
+  // Keyed on the CANONICAL root (lockKey): two spellings of one table
+  // (a symlink alias) must share one lock, or both would take the same
+  // file lock from this JVM and one fails with
+  // OverlappingFileLockException.
   private val jvmLocks = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.locks.ReentrantLock]()
 
+  /** `root` with every symlink resolved — through its deepest existing
+    * ancestor while the root itself does not exist yet, so the key does
+    * not change when the root is created.
+    */
+  private def lockKey(root: String): String = {
+    val abs = Paths.get(root).toAbsolutePath.normalize
+    @annotation.tailrec
+    def existing(p: Path, rest: List[Path]): (Path, List[Path]) =
+      if (Files.exists(p) || p.getParent == null) (p, rest)
+      else existing(p.getParent, p.getFileName :: rest)
+    val (base, rest) = existing(abs, Nil)
+    try rest.foldLeft(base.toRealPath())(_ resolve _).toString
+    catch { case _: java.io.IOException => abs.toString }
+  }
+
   override def withCommitLock[T](root: String)(body: => T): T = {
-    val key = Paths.get(root).toAbsolutePath.normalize.toString
+    val key = lockKey(root)
     val l = jvmLocks.computeIfAbsent(key,
       _ => new java.util.concurrent.locks.ReentrantLock)
     l.lock()

@@ -70,16 +70,25 @@ object EqDel {
     exists(dir) || Files.isDirectory(Paths.get(dir, SeqSidecar))
 
   /** The key columns of `dir`'s pending tombstones (sidecar schema
-    * minus the sequence column).
+    * minus the sequence column), from the driver-side footer inference.
     */
   def keyColumns(spark: SparkSession, dir: String): Seq[String] =
     if (!exists(dir)) Nil
-    else spark.read.parquet(s"$dir/$Sidecar").columns.filterNot(_ == SeqCol).toSeq
+    else Sinks.inferSchema(spark, s"$dir/$Sidecar").fieldNames
+      .filterNot(_ == SeqCol).toSeq
+
+  /** One sidecar of `dir` as a frame under its driver-inferred schema —
+    * building the read launches no inference job.
+    */
+  private def readSidecar(spark: SparkSession, dir: String, which: String): DataFrame = {
+    val p = s"$dir/$which"
+    spark.read.schema(Sinks.inferSchema(spark, p)).parquet(p)
+  }
 
   /** Pending tombstones as (seq, keys...) — inspection/spec surface. */
   def pending(spark: SparkSession, dir: String): DataFrame = {
     require(exists(dir), s"no $Sidecar under $dir")
-    spark.read.parquet(s"$dir/$Sidecar")
+    readSidecar(spark, dir, Sidecar)
   }
 
   /** Subtract `dir`'s equality deletes from a frame carrying the
@@ -91,7 +100,7 @@ object EqDel {
   private[graft] def subtractByKey(df: DataFrame, dir: String,
       fileKey: Column): DataFrame = {
     val spark = df.sparkSession
-    val dels = spark.read.parquet(s"$dir/$Sidecar")
+    val dels = readSidecar(spark, dir, Sidecar)
     val keys = dels.columns.filterNot(_ == SeqCol).toSeq
     require(keys.nonEmpty, s"$dir/$Sidecar carries no key columns")
     val clash = df.columns.filter(_.startsWith("__gf_"))
@@ -109,7 +118,7 @@ object EqDel {
       if (!Files.isDirectory(Paths.get(dir, SeqSidecar)))
         spark.range(0).selectExpr("CAST(NULL AS STRING) AS __gf_sfile",
           "CAST(NULL AS BIGINT) AS __gf_fseq")
-      else spark.read.parquet(s"$dir/$SeqSidecar")
+      else readSidecar(spark, dir, SeqSidecar)
         .groupBy(col("file").as("__gf_sfile"))
         .agg(max("seq").as("__gf_fseq"))
         .select(col("__gf_sfile"), col("__gf_fseq"))
@@ -167,7 +176,7 @@ object EqDel {
     val scDir = Paths.get(stageDir, which)
     if (!Files.isDirectory(scDir)) return
     import spark.implicits._
-    val raw = spark.read.parquet(scDir.toString)
+    val raw = readSidecar(spark, stageDir, which)
     val liveFiles = graft.io.Fs.walkParquet(Paths.get(stageDir))
       .map(p => Paths.get(stageDir).relativize(p).toString)
     if (which == SeqSidecar) {
@@ -185,7 +194,7 @@ object EqDel {
       val seqDir = Paths.get(stageDir, SeqSidecar)
       val stamps: Map[String, Long] =
         if (!Files.isDirectory(seqDir)) Map.empty
-        else spark.read.parquet(seqDir.toString)
+        else readSidecar(spark, stageDir, SeqSidecar)
           .groupBy("file").agg(max("seq").as("seq"))
           .as[(String, Long)].collect().toMap
       val minLive =
@@ -280,6 +289,7 @@ object EqDel {
   def applyCdc(batch0: DataFrame, root: String, keys: Seq[String],
       opCol: Option[String] = None, dedupeBy: Seq[String] = Nil,
       batchTag: Option[String] = None): Long = {
+    require(keys.nonEmpty, "applyCdc requires at least one key column")
     val spark = batch0.sparkSession
     val collapsed =
       if (dedupeBy.isEmpty) batch0

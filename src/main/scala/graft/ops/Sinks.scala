@@ -331,19 +331,20 @@ object Sinks
     } else TableProps.partitionSchema(root)
   }
 
-  /** Memoized parquet schema inference over one directory. Every
-    * inference is a driver-blocking Spark job (footer read + Hadoop-conf
-    * broadcast, tens of ms of fixed overhead), and a single DDL/DML
-    * statement's analysis infers the same version dir several times —
-    * stack-sampling showed the catalog family spending more wall time
-    * waiting on these footer jobs than on the statements' real work.
-    * Version dirs are immutable once their stage→vN rename lands, so
-    * the result is memoizable; the stamp guards the cases where a PATH
-    * is nonetheless reused (drop+recreate restarting at v0, a stage dir
-    * growing mid-build, sidecar folds) by walking the data files' names,
-    * sizes and mtimes — O(files) stat calls, orders of magnitude cheaper
-    * than the job it replaces, and the same walk every commit already
-    * does. Keyed per session (inference obeys session confs).
+  /** Memoized parquet schema inference over one directory. A flat
+    * directory (no partition subdirectories) is inferred on the driver
+    * from one footer ([[footerSchema]]) — no Spark job. A partitioned
+    * directory keeps Spark's own inference, which also discovers the
+    * partition columns and runs as a driver-blocking job (footer read +
+    * Hadoop-conf broadcast, tens of ms of fixed overhead). Either way a
+    * single DDL/DML statement's analysis infers the same version dir
+    * several times, so the result is memoized: version dirs are
+    * immutable once their stage→vN rename lands, and the stamp guards
+    * the cases where a PATH is nonetheless reused (drop+recreate
+    * restarting at v0, a stage dir growing mid-build, sidecar folds) by
+    * walking the data files' names, sizes and mtimes — O(files) stat
+    * calls, the same walk every commit already does. Keyed per session
+    * (inference obeys session confs).
     */
   private val inferMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String, String), org.apache.spark.sql.types.StructType]()
@@ -373,10 +374,57 @@ object Sinks
     val hit = inferMemo.get(key)
     if (hit != null) hit
     else {
-      val s = spark.read.parquet(p).schema
+      val s = footerSchema(spark, p).getOrElse(spark.read.parquet(p).schema)
       if (inferMemo.size > 4096) inferMemo.clear() // crude bound; refill is cheap
       inferMemo.put(key, s)
       s
+    }
+  }
+
+  /** Spark's non-merging parquet inference of FLAT directory `p`, run on
+    * the driver: the first visible data file by path — the one file
+    * `ParquetUtils.splitFiles` hands the inference job — has its footer
+    * read through parquet-hadoop and converted by Spark's own
+    * footer-to-schema rule under the session's parquet confs, then made
+    * nullable as a file-source relation does. One footer read on top of
+    * one directory listing. None when `p` holds a partition
+    * subdirectory, a summary file, no data file, or an unreadable
+    * footer: the caller then runs Spark's inference, which also owns
+    * the errors.
+    */
+  private def footerSchema(spark: SparkSession,
+      p: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    // Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName)
+    def hidden(n: String) = n.startsWith(".") || n.endsWith("._COPYING_") ||
+      (n.startsWith("_") && !n.contains("="))
+    val entries = Fs.listDir(Paths.get(p))
+    val summary = entries.exists { c =>
+      val n = c.getFileName.toString
+      n.startsWith("_metadata") || n.startsWith("_common_metadata")
+    }
+    val visible = entries.filterNot(c => hidden(c.getFileName.toString))
+    if (summary || visible.exists(Files.isDirectory(_))) None
+    else visible.sortBy(_.getFileName.toString).headOption.flatMap { f =>
+      val conf = spark.sessionState.conf
+      // the converter Spark's inference job builds (mergeSchemasInParallel)
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+      val path = new org.apache.hadoop.fs.Path(f.toUri)
+      try {
+        val footer = ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path,
+            spark.sessionState.newHadoopConf()),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        Some(org.apache.spark.sql.graft.PlanBridge.asNullable(
+          ParquetFileFormat.readSchemaFromFooter(
+            new org.apache.parquet.hadoop.Footer(path, footer), converter)))
+      } catch { case scala.util.control.NonFatal(_) => None }
     }
   }
 
@@ -1041,7 +1089,10 @@ object Sinks
     // commit check, which reports it as the CME it is
     case Some(v) if !Files.exists(Paths.get(versionPath(root, v))) => df
     case Some(v) =>
-      val live = readDir(df.sparkSession, root, versionPath(root, v)).schema
+      val p = versionPath(root, v)
+      val live =
+        if (hasLayoutLegs(p)) readDir(df.sparkSession, root, p).schema
+        else liveSchema(df.sparkSession, root, p)
       val missing = live.fieldNames.filterNot(df.columns.contains)
       val extra = df.columns.filterNot(live.fieldNames.contains)
       require(missing.isEmpty && extra.isEmpty,
@@ -1060,6 +1111,25 @@ object Sinks
             s"append carries ${df.schema(f.name).dataType.simpleString}")
             .mkString("; ") + " — cast before appending")
       df.select(live.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+  }
+
+  /** The logical schema [[readDir]] gives single-layout version dir `p`,
+    * from metadata alone: the pinned read schema in a file-source
+    * relation's column order (data columns, then partition columns),
+    * derived `_tp_*` columns dropped, [[ColMap]]'s logical names
+    * applied. The eq-delete and DV subtractions keep the data columns
+    * unchanged, so they are not built — building them reads the
+    * sidecars.
+    */
+  private def liveSchema(spark: SparkSession, root: String,
+      p: String): org.apache.spark.sql.types.StructType = {
+    val pinned = readSchemaFor(spark, root, p).getOrElse(inferSchema(spark, p))
+    val parts = partitionSchemaFor(root, p).toSeq.flatMap(_.fieldNames)
+    val (partFields, dataFields) =
+      pinned.fields.toSeq.partition(f => parts.exists(_.equalsIgnoreCase(f.name)))
+    val visible = (dataFields ++ partFields)
+      .filterNot(f => Transforms.parse(f.name).isDefined)
+    ColMap.toLogicalSchema(org.apache.spark.sql.types.StructType(visible), p)
   }
 
   /** Copy-on-write publish (file-granular DML): `rewritten` replaces the

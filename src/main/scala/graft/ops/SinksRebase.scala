@@ -85,15 +85,19 @@ private[graft] trait SinksRebase { this: Sinks.type =>
   val rebaseRetries = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Table properties whose concurrent movement does NOT invalidate a
-    * rebase: streaming high-water marks and COPY INTO receipts are the
-    * bookkeeping OF concurrent appends — exactly the traffic rebase
-    * exists for. Everything else (CHECK constraints `check.*`, the
-    * partition spec, index parameters) is part of the write contract
-    * the staged delta was validated under: if it moved, refuse.
+    * rebase: streaming high-water marks, COPY INTO receipts and identity
+    * high-water marks are the bookkeeping OF concurrent appends —
+    * exactly the traffic rebase exists for (identity ranges are
+    * reserved disjointly under the props lock, so staged values stay
+    * unique in any commit order). Everything else (CHECK constraints
+    * `check.*`, the partition spec, identity specs, index parameters) is
+    * part of the write contract the staged delta was validated under:
+    * if it moved, refuse.
     */
   private def semanticProps(p: Map[String, String]): Map[String, String] =
     p.filterNot { case (k, _) =>
-      k.startsWith("graft.stream.lastBatch.") || k.startsWith("graft.copyin.")
+      k.startsWith("graft.stream.lastBatch.") || k.startsWith("graft.copyin.") ||
+        k.startsWith(Identity.HwmPrefix)
     }
 
   private def relParquetKeys(dir: Path): Set[String] =

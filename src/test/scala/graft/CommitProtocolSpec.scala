@@ -221,6 +221,44 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(TableProps.load(a).get("x").contains("1"))
   }
 
+  test("commit lock: a root and its symlink alias share one lock; concurrent commits through both land") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_lockalias")
+    Files.createDirectories(base.resolve("real"))
+    Files.createSymbolicLink(base.resolve("link"), base.resolve("real"))
+    val root = base.resolve("real/t").toString
+    val alias = base.resolve("link/t").toString
+    Sinks.publishVersioned(Seq((0L, "seed")).toDF("k", "v"), root, None)
+    // a scope held through one spelling BLOCKS the other (two JVM locks
+    // for one file lock would throw OverlappingFileLockException instead)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val entered = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val blocked = Sinks.withTableLock(root) {
+      val th = new Thread(() =>
+        try Sinks.withTableLock(alias)(entered.set(true))
+        catch { case e: Throwable => failure.set(e) })
+      th.start()
+      th.join(300)
+      assert(failure.get == null, s"alias scope failed: ${failure.get}")
+      assert(!entered.get, "the alias entered a scope held through the root")
+      th
+    }
+    blocked.join(10000)
+    assert(failure.get == null && entered.get, s"alias scope never ran: ${failure.get}")
+    // concurrent appends through both spellings all commit
+    val writers = Seq(root, alias).zipWithIndex.map { case (r, w) =>
+      new Thread(() =>
+        try (1 to 4).foreach { i =>
+          Sinks.appendVersioned(Seq((w * 100L + i, r)).toDF("k", "v"), r,
+            Sinks.currentVersion(r))
+        } catch { case e: Throwable => failure.compareAndSet(null, e) })
+    }
+    writers.foreach(_.start())
+    writers.foreach(_.join(120000))
+    assert(failure.get == null, s"a writer failed: ${failure.get}")
+    assert(Sinks.readCurrent(spark, root).count() == 9)
+  }
+
   test("multi-table transaction: bronze+silver commit atomically; stale OCC aborts both") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_txn").toString

@@ -77,6 +77,18 @@ class EqDelSpec extends AnyFunSuite {
     assert(got2.size == 99)
   }
 
+  test("applyCdc with no key columns fails loudly on the op-column route and commits nothing") {
+    import spark.implicits._
+    val root = tmp("eqdnokeys") + "/t"
+    Sinks.publishVersioned(Seq((1L, "a")).toDF("k", "v"), root, None)
+    val batch = Seq((1L, "b", "upsert"), (2L, "c", "delete")).toDF("k", "v", "op")
+    val e = intercept[IllegalArgumentException](
+      EqDel.applyCdc(batch, root, Nil, opCol = Some("op")))
+    assert(e.getMessage.contains("key column"), e.getMessage)
+    assert(Sinks.listVersions(root) == Seq(0L))
+    assert(state(root) == Seq((1L, "a")))
+  }
+
   test("SQL reads, stats-pruned reads, and MOR DML all apply pending tombstones; COW refuses") {
     import spark.implicits._
     val root = tmp("eqdsql")

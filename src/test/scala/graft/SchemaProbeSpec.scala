@@ -1,0 +1,234 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import graft.ops.{Dv, EqDel, Sinks}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Schema probes on the commit path: driver-side footer inference must
+  * agree with Spark's own inference wherever it replaces it, and the
+  * schema work of an eq-delete micro-batch and of append alignment
+  * must submit no Spark job of its own.
+  */
+class SchemaProbeSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** Descriptions of the jobs submitted (from any thread) while `body`
+    * runs. Fence jobs before and after bound the window on the listener
+    * bus, so no event of `body` is still in flight when this returns
+    * and none from before it is counted.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val tag = s"fence-${System.nanoTime()}"
+    val opened = new CountDownLatch(1)
+    val closed = new CountDownLatch(1)
+    @volatile var recording = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        if (d == s"$tag-open") { recording = true; opened.countDown() }
+        else if (d == s"$tag-close") { recording = false; closed.countDown() }
+        else if (recording) seen.add(d)
+      }
+    }
+    def fence(name: String, latch: CountDownLatch): Unit = {
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
+      assert(latch.await(60, TimeUnit.SECONDS), s"listener never saw $name")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence(s"$tag-open", opened)
+      val out = body
+      fence(s"$tag-close", closed)
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def assertParity(p: String): Unit = {
+    val (got, jobs) = jobsOf(Sinks.inferSchema(spark, p))
+    assert(jobs.isEmpty, s"driver-side inference of $p submitted jobs: $jobs")
+    val want = spark.read.parquet(p).schema
+    assert(got == want, s"\n got: ${got.treeString}\nwant: ${want.treeString}")
+  }
+
+  /** One zero-row parquet file written by parquet-hadoop (no Spark
+    * schema in its footer), so inference runs the footer converter.
+    */
+  private def writeRaw(dir: Path, name: String, message: String): Unit = {
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    Files.createDirectories(dir)
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(message)
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    GroupWriteSupport.setSchema(schema, conf)
+    ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dir.resolve(name).toUri), conf))
+      .withConf(conf).build().close()
+  }
+
+  private val rawTypes =
+    """message m {
+      |  required int64 k;
+      |  optional binary bin;
+      |  optional binary s (UTF8);
+      |  optional fixed_len_byte_array(9) dec (DECIMAL(20,4));
+      |  optional int64 dl (DECIMAL(18,2));
+      |  optional int64 ts (TIMESTAMP(MICROS,true));
+      |  optional int64 ntz (TIMESTAMP(MICROS,false));
+      |  optional int96 legacy_ts;
+      |  optional group st { optional int32 a; optional group inner { optional binary c (UTF8); } }
+      |  optional group arr (LIST) { repeated group list { optional int64 element; } }
+      |  optional group mp (MAP) { repeated group key_value { required binary key (UTF8); optional double value; } }
+      |}""".stripMargin
+
+  test("driver-side inference equals Spark's on flat dirs: Spark-written rich types, raw footers, binaryAsString") {
+    // Spark-written files carry Spark's own schema in the footer
+    val sparkDir = tmp("probe_spark") + "/d"
+    spark.sql(
+      """SELECT CAST(id AS DECIMAL(18,4)) AS d, CAST(id AS DECIMAL(38,10)) AS big,
+        |  TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,
+        |  TIMESTAMP_NTZ'2024-01-01 00:00:00' AS ntz,
+        |  named_struct('a', id, 'b', named_struct('c', CAST(id AS STRING))) AS s,
+        |  array(id, id + 1) AS arr, map(CAST(id AS STRING), array(id)) AS m,
+        |  CAST(CAST(id AS STRING) AS BINARY) AS bin, id AS k
+        |FROM range(10)""".stripMargin)
+      .repartition(3).write.parquet(sparkDir)
+    assertParity(sparkDir)
+    // raw footers go through the converter, under the session's confs
+    val key = "spark.sql.parquet.binaryAsString"
+    val prev = spark.conf.getOption(key)
+    for (asString <- Seq("false", "true")) {
+      spark.conf.set(key, asString)
+      try {
+        val rawDir = Paths.get(tmp("probe_raw"), "d")
+        writeRaw(rawDir, "part-00000.parquet", rawTypes)
+        assertParity(rawDir.toString)
+        val bin = Sinks.inferSchema(spark, rawDir.toString)("bin").dataType
+        assert(bin.simpleString == (if (asString == "true") "string" else "binary"))
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  test("driver-side inference reads the first data file by path, skips hidden files, and matches a driver-written _eqseq part") {
+    val dir = Paths.get(tmp("probe_pick"), "d")
+    writeRaw(dir, "part-b.parquet", "message m { required int64 late; }")
+    writeRaw(dir, "part-a.parquet", "message m { required int64 early; optional double x; }")
+    writeRaw(dir, ".hidden.parquet", "message m { required int32 dot; }")
+    writeRaw(dir, "_side.parquet", "message m { required int32 under; }")
+    assertParity(dir.toString)
+    assert(Sinks.inferSchema(spark, dir.toString).fieldNames.toSeq == Seq("early", "x"))
+    val seq = Paths.get(tmp("probe_seq"), EqDel.SeqSidecar)
+    graft.io.Fs.writeFileSeqParquet(seq, Seq(("part-0.parquet", 3L), ("part-1.parquet", 4L)))
+    assertParity(seq.toString)
+  }
+
+  test("partitioned dirs keep Spark's inference") {
+    import spark.implicits._
+    val dir = tmp("probe_part") + "/d"
+    Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p")
+      .write.partitionBy("p").parquet(dir)
+    val got = Sinks.inferSchema(spark, dir)
+    assert(got == spark.read.parquet(dir).schema)
+    assert(got.fieldNames.toSeq == Seq("k", "v", "p"))
+  }
+
+  test("an upsertStreamTo micro-batch on a maintained table submits only graft-labelled jobs") {
+    import spark.implicits._
+    val root = tmp("probe_stream") + "/t"
+    val cp = tmp("probe_streamcp")
+    val src = tmp("probe_streamsrc")
+    Sinks.publishVersioned((0L until 100L).map(i => (i, s"base$i")).toDF("k", "v"), root, None)
+    EqDel.upsertBatch(spark, Seq((1L, "u1")).toDF("k", "v"), root, Seq("k"))
+    assert(EqDel.exists(Sinks.resolve(root)))
+    def land(rows: Seq[(Long, String, String)]): Unit =
+      rows.toDF("k", "v", "op").coalesce(1).write.mode("append").parquet(src)
+    land(Seq((2L, "s1_2", "upsert"), (3L, null, "delete")))
+    val q = EqDel.upsertStreamTo(
+      spark.readStream.schema("k LONG, v STRING, op STRING").parquet(src), root, cp,
+      keys = Seq("k"), opCol = Some("op"))
+    try {
+      q.processAllAvailable()
+      land(Seq((4L, "s2_4", "upsert"), (2L, "s2_2", "upsert"), (5L, null, "delete")))
+      val before = Sinks.currentVersion(root)
+      val (_, jobs) = jobsOf(q.processAllAvailable())
+      assert(Sinks.currentVersion(root) == before.map(_ + 1), "the batch must commit")
+      assert(jobs.nonEmpty)
+      assert(jobs.forall(_.startsWith("graft: ")), s"unlabelled jobs in one batch: $jobs")
+    } finally q.stop()
+    val got = Sinks.readCurrent(spark, root).as[(Long, String)].collect().toMap
+    assert(got(2L) == "s2_2" && got(4L) == "s2_4" && got(1L) == "u1")
+    assert(!got.contains(3L) && !got.contains(5L))
+  }
+
+  test("alignToLive's live schema equals the read funnel's: partitioned + added column, rename, drop, hidden partitions") {
+    val root = tmp("probe_shapes")
+    spark.conf.set("spark.sql.catalog.gprobe", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gprobe.root", root)
+    def sameAsFunnel(t: String): Unit = {
+      val tr = s"$root/$t"
+      val funnel = Sinks.readCurrent(spark, tr)
+      val aligned = Sinks.alignToLive(funnel, tr, Sinks.currentVersion(tr))
+      assert(aligned.schema.map(f => (f.name, f.dataType)) ==
+        funnel.schema.map(f => (f.name, f.dataType)), t)
+    }
+    spark.sql("CREATE TABLE gprobe.pa (k BIGINT, v STRING, p INT) USING parquet PARTITIONED BY (p)")
+    spark.sql("INSERT INTO gprobe.pa VALUES (1, 'a', 1), (2, 'b', 2)")
+    // no file carries the added column yet: the read schema appends it
+    // after the partition column, and the funnel's relation moves the
+    // partition column last again
+    spark.sql("ALTER TABLE gprobe.pa ADD COLUMNS (score DOUBLE)")
+    assert(graft.ops.ColMap.added(Sinks.resolve(s"$root/pa")).nonEmpty)
+    assert(Sinks.readCurrent(spark, s"$root/pa").columns.toSeq == Seq("k", "v", "score", "p"))
+    sameAsFunnel("pa")
+    spark.sql("CREATE TABLE gprobe.rd (k BIGINT, v STRING, w STRING) USING parquet")
+    spark.sql("INSERT INTO gprobe.rd VALUES (1, 'a', 'x')")
+    spark.sql("ALTER TABLE gprobe.rd RENAME COLUMN v TO vv")
+    spark.sql("ALTER TABLE gprobe.rd DROP COLUMN w")
+    assert(graft.ops.ColMap.exists(Sinks.resolve(s"$root/rd")))
+    sameAsFunnel("rd")
+    spark.sql("CREATE TABLE gprobe.hp (ts TIMESTAMP, u BIGINT) USING parquet " +
+      "PARTITIONED BY (days(ts))")
+    spark.sql("INSERT INTO gprobe.hp VALUES (TIMESTAMP'2024-01-01 10:00:00', 1)")
+    sameAsFunnel("hp")
+  }
+
+  test("alignToLive on an eq-delete + DV version submits no job and still rejects drift") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = tmp("probe_align") + "/t"
+    Sinks.publishVersioned((0L until 50L).map(i => (i, s"v$i", i * 1.5)).toDF("k", "v", "x"),
+      root, None)
+    EqDel.upsertBatch(spark, Seq((1L, "u1", 0.0)).toDF("k", "v", "x"), root, Seq("k"))
+    Sinks.deleteVector(spark, root, col("k") === 7L)
+    val v = Sinks.currentVersion(root)
+    val dir = Sinks.resolve(root)
+    assert(EqDel.exists(dir) && Dv.exists(dir))
+    val live = Sinks.readCurrent(spark, root).schema
+    // column order follows the table, whatever the append's order
+    val (aligned, jobs) = jobsOf(
+      Sinks.alignToLive(Seq((99.0, "n", 60L)).toDF("x", "v", "k"), root, v))
+    assert(jobs.isEmpty, s"alignToLive submitted jobs: $jobs")
+    assert(aligned.columns.toSeq == live.fieldNames.toSeq)
+    def rejected(df: => org.apache.spark.sql.DataFrame, msg: String): Unit = {
+      val (e, js) = jobsOf(intercept[IllegalArgumentException](Sinks.alignToLive(df, root, v)))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      assert(js.isEmpty, s"rejecting alignToLive submitted jobs: $js")
+    }
+    rejected(Seq((60L, "n")).toDF("k", "v"), "missing: x")
+    rejected(Seq((60L, "n", 1.0, 2)).toDF("k", "v", "x", "y"), "extra: y")
+    rejected(Seq((60L, "n", "1.0")).toDF("k", "v", "x"), "x is double but the append carries string")
+  }
+}
