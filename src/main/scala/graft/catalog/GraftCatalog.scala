@@ -1394,7 +1394,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
       .getOrElse(throw new NoSuchTableException(ident))
     val spark = SparkSession.active
     val liveDir = Sinks.versionPath(tr, v)
-    val cur = Sinks.readDir(spark, tr, liveDir)
+    val cur = Sinks.snapshotRead(spark, tr, liveDir)
     val cols = cur.columns.toSeq
     def canonical(n: String): Option[String] = cols.find(_.equalsIgnoreCase(n))
 
@@ -1579,14 +1579,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     */
   private def widenTypes(ident: Identifier,
       retypes: Seq[TableChange.UpdateColumnType]): Table = {
-    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
     val tr = tableRoot(ident)
     val v = Sinks.currentVersion(tr)
       .getOrElse(throw new NoSuchTableException(ident))
     val spark = SparkSession.active
     val liveDir = Sinks.versionPath(tr, v)
-    val cur = Sinks.readDir(spark, tr, liveDir)
+    val cur = Sinks.snapshotRead(spark, tr, liveDir)
     def widens(from: DataType, to: DataType): Boolean = (from, to) match {
       case (ByteType, ShortType | IntegerType | LongType) => true
       case (ShortType, IntegerType | LongType) => true

@@ -163,11 +163,12 @@ class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvid
     // absent capabilities route it to the V1 create funnel) or a read
     // that must fail loudly — at scan build, with the same message the
     // schema-inferred path throws at load
+    val declared = schema // the member below would shadow the parameter
     if (Sinks.currentVersion(root).isEmpty &&
         !Seq("versionAsOf", "tag", "timestampAsOf").exists(options.containsKey))
       new Table {
         override def name(): String = s"graft.`$root`"
-        override def schema(): StructType = schema
+        override def schema(): StructType = declared
         override def capabilities(): util.Set[TableCapability] =
           new util.HashSet[TableCapability]()
       }
@@ -352,7 +353,10 @@ class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvid
         ".option(\"checkpointLocation\", ...): the exactly-once batch " +
         "dedupe tag derives from it, and a session-default checkpoint " +
         "is not visible to the sink — two default-checkpointed queries " +
-        "writing one table would silently dedupe each other's batches"))
+        "writing one table would silently dedupe each other's batches. A " +
+        "pipeline moving from the session-default checkpoint to an " +
+        "explicit one re-commits its first replayed batch once (a " +
+        "one-time duplicate); see the README's streaming-sink note"))
     new org.apache.spark.sql.execution.streaming.Sink {
       override def name(): String = s"graft.`$root`"
       override def addBatch(batchId: Long,

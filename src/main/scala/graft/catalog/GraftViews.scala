@@ -206,14 +206,6 @@ private[graft] object GraftViews {
     }
   }
 
-  /** Graft-view references of a (qualified) body — the cycle walk's edge
-    * set. Resolution failures are left for analysis to report.
-    */
-  private def viewRefs(spark: SparkSession, qualified: LogicalPlan): Seq[String] =
-    qualified.collect { case u: UnresolvedRelation =>
-      resolveView(spark, u.multipartIdentifier).map(_._2)
-    }.flatten
-
   /** Resolve a multipart name to (catalog, viewRoot, def) when it names a
     * Graft catalog view.
     */

@@ -33,14 +33,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `array<bigint>` → `array<string>` cast the HOF's concat_ws inserted.
   * Slice semantics mirror Spark's `slice`: a band window past the end
   * of the signature contributes the elements that remain (possibly
-  * none → the empty string, concat_ws's empty-array rendering). Null
-  * signature → null.
+  * none → the empty string, concat_ws's empty-array rendering). A null
+  * signature, band count or band width → null.
   */
 case class Bands(first: Expression, second: Expression, third: Expression)
   extends TernaryExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = first.nullable
+  override def nullable: Boolean = children.exists(_.nullable)
 
   private lazy val isStringSig = first.dataType match {
     case ArrayType(StringType, _) => true

@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hex-substring parse produced — same number, no hex string, no parse.
   * Unigrams come first, then bigrams, exactly like the HOF's
   * `concat(t, bigrams)` (callers aggregate, so order is inert anyway).
-  * Null text → null. Whole-stage codegen preserved via the static-call
+  * A null text or bucket count → null. Whole-stage codegen preserved via the static-call
   * doGenCode (the [[MinHashSig]] pattern). DsirSpec pins parity with
   * the HOF chain.
   */
@@ -35,7 +35,7 @@ case class DsirBuckets(left: Expression, right: Expression)
   extends BinaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = left.nullable
+  override def nullable: Boolean = children.exists(_.nullable)
 
   override protected def nullSafeEval(text: Any, bAny: Any): Any =
     DsirBuckets.compute(text.asInstanceOf[UTF8String],

@@ -213,21 +213,23 @@ object AnnIndex {
       .select(col("vec_id"), col("embedding"))
   }
 
-  // The DECODED quantizer (label → centroid, sorted by label), memoized
-  // per (session, live version dir) like the PQ codebook below: the
-  // sidecar is a few KB and immutable per version (a rebuild resolves
-  // to a new dir and misses), so collecting it once per version removes
-  // the per-search centroid-side stages outright — see [[probeLive]].
+  // The DECODED quantizer (label → centroid, sorted by label) of index
+  // version dir `live`, memoized per (session, version dir) like the PQ
+  // codebook below: the sidecar is a few KB and immutable per version
+  // (a rebuild resolves to a new dir and misses), so collecting it once
+  // per version removes the per-search centroid-side stages outright —
+  // see [[probeLive]]. The caller resolves once and the value is read
+  // from that same dir, so a concurrent rebuild can never file one
+  // version's quantizer under another's key.
   private val centroidArrMemo = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[(Long, Seq[Double])]]()
-  private def centroidsDecoded(spark: SparkSession,
-      root: String): Seq[(Long, Seq[Double])] = {
-    val live = Sinks.resolve(root)
-    centroids(spark, root) // existence / loud-failure contract first
+  private[graft] def centroidsDecoded(spark: SparkSession,
+      live: String): Seq[(Long, Seq[Double])] = {
+    val p = centroidsDir(live) // existence / loud-failure contract first
     if (centroidArrMemo.size > 256) centroidArrMemo.clear()
     centroidArrMemo.computeIfAbsent(
       s"${org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark)}|$live",
-      _ => centroids(spark, root)
+      _ => sidecarFrame(spark, p)
         .select(col("label").cast("long"),
           col("centroid").cast("array<double>"))
         .collect()
@@ -256,7 +258,7 @@ object AnnIndex {
     */
   private[graft] def probeLive(spark: SparkSession, root: String,
       queries: DataFrame, nprobe: Int): DataFrame = {
-    val cents = typedLit(centroidsDecoded(spark, root))
+    val cents = typedLit(centroidsDecoded(spark, Sinks.resolve(root)))
     // (sort key, label) per centroid: ascending struct order ==
     // (c_sim DESC NULLS LAST, label ASC) — cosine is in [-1, 1], so a
     // null (zero-norm centroid) maps past every real score
@@ -503,13 +505,18 @@ object AnnIndex {
   }
 
   /** The persisted quantizer of the LIVE index version. */
-  def centroids(spark: SparkSession, root: String): DataFrame = {
-    val live = Sinks.resolve(root)
+  def centroids(spark: SparkSession, root: String): DataFrame =
+    sidecarFrame(spark, centroidsDir(Sinks.resolve(root)))
+
+  /** The quantizer sidecar of index version dir `live`, failing loudly
+    * when it is missing.
+    */
+  private def centroidsDir(live: String): String = {
     val p = s"$live/$CentroidsSidecar"
     require(Files.isDirectory(Paths.get(p)),
       s"no $CentroidsSidecar under $live — index incomplete (crash between " +
         "commit and quantizer write?); rebuild with AnnIndex.buildFixed/buildLearned")
-    sidecarFrame(spark, p)
+    p
   }
 
   /** Search observability (round-14): every `search*` attaches an

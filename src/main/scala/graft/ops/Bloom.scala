@@ -3,7 +3,7 @@ package graft.ops
 import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -273,10 +273,15 @@ object Bloom {
     * hash-identical to `spark.read.parquet(dir).filter(col === value)`.
     */
   def readWhereEq(spark: SparkSession, dir: String,
-      colName: String, value: Any,
-      readSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    // sidecars and files speak PHYSICAL names under a column mapping;
-    // the caller's name is LOGICAL (identity when unmapped)
+      colName: String, value: Any): DataFrame =
+    pointRead(spark, dir, dir, colName, value)
+
+  /** [[readWhereEq]] of version dir `dir` of table `root`: the kept files
+    * read through [[Sinks.snapshotRead]], the predicate applied by the
+    * caller's LOGICAL name (sidecars speak physical names).
+    */
+  private def pointRead(spark: SparkSession, root: String, dir: String,
+      colName: String, value: Any): DataFrame = {
     val physCol = ColMap.toPhysicalName(dir, colName)
     val bloomKept = prunedFilesEq(spark, dir, physCol, value)
     val kept =
@@ -285,55 +290,18 @@ object Bloom {
           .intersect(Stats.prunedFiles(spark, dir, physCol, value, value).toSet)
           .toSeq.sorted
       else bloomKept
-    val pred = col(physCol) === lit(value)
-    val res = if (kept.isEmpty) {
-      val schema = readSchema.getOrElse(spark.read.parquet(dir).schema)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    } else if (graft.ops.Sinks.hasLayoutLegs(dir)) {
-      // mixed-layout version: group surviving files per layout root
-      // (their partition-directory columns differ), union, subtract —
-      // the same recipe as Stats.readWhere's mixed branch
-      val raw = graft.ops.Sinks.readFilesMixed(spark, dir, kept)
-      val cols = raw.columns.toSeq.filterNot(_ == "_metadata")
-      val eq = if (!EqDel.exists(dir)) raw else EqDel.subtract(raw, dir)
-      val subtracted =
-        if (!Dv.exists(dir)) eq.select(cols.map(col).toIndexedSeq: _*)
-        else Dv.subtract(eq, dir, cols)
-      subtracted.filter(pred)
-    } else {
-      val rd = spark.read.option("basePath", dir)
-      val raw = readSchema.fold(rd)(rd.schema).parquet(kept: _*)
-      // equality-delete and deletion-vector subtraction ride the point
-      // lookup too — membership pruning stays conservative (a surviving
-      // file whose matching row was hidden contributes nothing)
-      val subtracted =
-        if (!Dv.exists(dir) && !EqDel.exists(dir)) raw
-        else {
-          val cols = raw.columns.toSeq
-          val withMeta =
-            raw.select((cols.map(col) :+ col("_metadata")).toIndexedSeq: _*)
-          val eq =
-            if (!EqDel.exists(dir)) withMeta else EqDel.subtract(withMeta, dir)
-          if (!Dv.exists(dir)) eq.select(cols.map(col).toIndexedSeq: _*)
-          else Dv.subtract(eq, dir, cols)
-        }
-      subtracted.filter(pred)
-    }
-    // hidden partitioning: derived directory columns stay scan-side
-    Transforms.dropHidden(ColMap.toLogical(res, dir))
+    Sinks.snapshotRead(spark, root, dir, Some(kept)).filter(col(colName) === lit(value))
   }
 
   /** [[readWhereEq]] over the LIVE version of a [[Sinks]] versioned
     * table (run [[annotate]] against `Sinks.resolve(root)` after
-    * publishing). The read schema is pinned to the table's DECLARED
-    * partition types ([[Sinks.readSchemaFor]]) — both the kept-files
-    * read and the empty-prune frame — so a partitioned table's partition
+    * publishing). The table root lets [[Sinks.snapshotRead]] pin the
+    * table's DECLARED partition types — for the kept-files read and the
+    * empty-prune frame alike — so a partitioned table's partition
     * columns can never come back with inference-rewritten types
     * ('00123' → int) diverging from [[Sinks.readCurrent]].
     */
   def readCurrentWhereEq(spark: SparkSession, root: String,
-      colName: String, value: Any): DataFrame = {
-    val live = Sinks.resolve(root)
-    readWhereEq(spark, live, colName, value, Sinks.readSchemaFor(spark, root, live))
-  }
+      colName: String, value: Any): DataFrame =
+    pointRead(spark, root, Sinks.resolve(root), colName, value)
 }

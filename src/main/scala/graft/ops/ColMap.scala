@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.StructType
   *    commits) translate their new rows logical→physical before the
   *    write ([[Sinks]]'s staged-publish path) and carry the marker
   *    forward, so every file of a version shares one physical schema.
-  *  - Everything user-facing speaks LOGICAL names: [[Sinks.readDir]]
+  *  - Everything user-facing speaks LOGICAL names: [[Sinks.snapshotRead]]
   *    (the single read funnel) aliases physical→logical right after
   *    the scan, and the SQL route swaps through the same funnel
   *    ([[graft.plans.DvReadRule]]); CHECK constraints and the change

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * ([[compactSidecar]]), the log-checkpoint analog. Zero data bytes
   * rewritten either way.
   *
-  * Readers subtract the vector at scan time: [[Sinks.readDir]] (the
+  * Readers subtract the vector at scan time: [[Sinks.snapshotRead]] (the
   * single funnel every Scala read, snapshot diff, CDC read, and
   * compaction flows through) filters on a codegen'd bitmap probe over
   * Spark's `_metadata` file/row-position columns ([[probe]] — zero
@@ -32,10 +32,10 @@ import org.apache.spark.sql.functions._
   * system.compact` IS the purge: the rewrite materializes survivors
   * and drops the sidecar.
   *
-  * Every reader subtracts: [[Sinks.readDir]], the catalog rule, and
-  * the stats/bloom pruned fast paths ([[subtract]] restricted to the
-  * kept files — pruning stays conservative, a kept file whose matching
-  * rows were MOR-deleted contributes nothing). SQL DELETE/UPDATE/MERGE
+  * Every reader subtracts: the catalog rules and the stats/bloom
+  * pruned fast paths read through [[Sinks.snapshotRead]] too (over the
+  * kept files only — pruning stays conservative, a kept file whose
+  * matching rows were MOR-deleted contributes nothing). SQL DELETE/UPDATE/MERGE
   * all route merge-on-read on a vectored table, so the only remaining
   * refusals are the inherently incompatible ones: a direct COW publish
   * over a vector ([[requireNone]] — raw touched-file reads would

@@ -44,8 +44,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * writer scan subtracts eq-deletes first); metadata-only partition
   * evolution re-keys the `_eqseq` stamps with the moved files and
   * carries the tombstones verbatim (they name no files); and every
-  * read funnel — Scala, SQL via [[graft.plans.DvReadRule]],
-  * stats/bloom-pruned fast paths — applies the same subtraction.
+  * read — Scala, SQL via [[graft.plans.DvReadRule]], stats/bloom-pruned
+  * fast paths — goes through [[Sinks.snapshotRead]], the one place the
+  * subtraction is applied.
   * [[graft.plans.MetaCountRewrite]] declines outright (hidden-row
   * counts are not knowable from metadata).
   */

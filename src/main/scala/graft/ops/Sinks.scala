@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.io.Fs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Batch sink patterns for pipeline reruns (the A4 emit-to-storage analog
   * with production semantics).
@@ -64,7 +64,7 @@ object Sinks
   }
 
   def readCurrent(spark: SparkSession, root: String): DataFrame =
-    readDir(spark, root, resolve(root))
+    snapshotRead(spark, root, resolve(root))
 
   /** True iff any `*.parquet` data file exists under `p` (recursively,
     * partition dirs included; the layout's own `_`/`.`-prefixed sidecars
@@ -73,70 +73,74 @@ object Sinks
   private[graft] def hasParquetFile(p: java.nio.file.Path): Boolean =
     Fs.walkParquet(p).nonEmpty
 
-  /** One version directory as a DataFrame, with partition-column types
-    * pinned to the table's DECLARED types ([[TableProps.partitionSchema]])
-    * when the table is partitioned. Directory-name type inference is
-    * what it is fenced against: a STRING partition column holding
-    * `2024-01-08`-shaped values would otherwise come back as DATE (and
-    * `00123` as INT, silently dropping the leading zeros) — a schema
-    * corruption, not a cosmetic change. Unpartitioned tables read
-    * exactly as before.
+  /** Version dir `p` of table `root` as its readers see it — the one read
+    * recipe every Scala read, snapshot diff, CDC read, replica bootstrap,
+    * compaction, pruned read and SQL swap ([[graft.plans.DvReadRule]],
+    * [[graft.plans.StatsSkipRule]], [[graft.plans.MetaCountRewrite]])
+    * flows through, so no path can resurface a deleted row or a
+    * write-side column. `files = None` scans the whole version;
+    * `Some(fs)` scans only those absolute paths (the stats/bloom-pruned
+    * reads), each with its scan root as `basePath` so partition-directory
+    * columns stay in scope. Pruning stays conservative: a kept file whose
+    * rows are all hidden contributes nothing.
+    *
+    * The read schema is always pinned ([[snapshotSchema]]), so building
+    * the plan launches no inference job for a flat version, and
+    * partition columns keep their DECLARED types (directory-name
+    * inference would turn a STRING `00123` into INT).
+    * After the scan, in order:
+    *  1. derived hidden-partitioning `_tp_*` columns (B161) drop in the
+    *     same projection as the data columns — a Project ABOVE the scan,
+    *     so a pushed-down filter still reaches the scan with them in
+    *     scope, which is where HiddenPartitionRule injects its directory
+    *     predicate;
+    *  2. pending equality deletes (round-14) subtract — they need
+    *     `_metadata.file_path` for the file-sequence scope;
+    *  3. the deletion vector (B135) subtracts, consuming `_metadata`;
+    *  4. metadata-only renames/drops map PHYSICAL names to LOGICAL ones
+    *     ([[ColMap.toLogical]]).
+    * `_metadata` is projected ONLY when a subtraction will run: touching
+    * the struct at all materializes `row_index` into every scan
+    * (CatalogSpec's column-pruning assert catches it).
     */
-  private[graft] def readDir(spark: SparkSession, root: String, p: String): DataFrame = {
-    if (hasLayoutLegs(p)) {
-      // mixed-layout version (metadata-only partition evolution): the
-      // legs union under their own specs; the vector keys are version-
-      // dir-relative (`_layout<k>/…` for leg rows), so one subtraction
-      // over the union stays exact
-      val base = scanVersion(spark, root, p)
-      val cols = base.columns.filterNot(_ == "_metadata").toSeq
-      // equality deletes apply FIRST (they need `_metadata.file_path`
-      // for the file-sequence scope; the DV stage consumes the struct)
-      val eqApplied = if (!EqDel.exists(p)) base else EqDel.subtract(base, p)
-      val subtracted =
-        if (!Dv.exists(p))
-          eqApplied.select(cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-        else Dv.subtract(eqApplied, p, cols)
-      return ColMap.toLogical(subtracted, p)
-    }
+  private[graft] def snapshotRead(spark: SparkSession, root: String, dir: String,
+      files: Option[Seq[String]] = None): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    // nothing survived the prune: no rows, the version's schema
+    if (files.exists(_.isEmpty))
+      return ColMap.toLogical(Transforms.dropHidden(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        snapshotSchema(spark, root, dir))), dir)
+    val subtracts = EqDel.exists(dir) || Dv.exists(dir)
     val base =
-      spark.read.schema(readSchemaFor(spark, root, p)
-        .getOrElse(inferSchema(spark, p))).parquet(p)
-    // hidden partitioning (B161): derived `_tp_*` directory columns are
-    // write-side machinery — the caller sees the source columns only.
-    // The drop lands as a Project ABOVE the scan, so a pushed-down
-    // filter still reaches the scan with the derived attributes in
-    // scope — which is where HiddenPartitionRule injects the directory
-    // predicate. (`_metadata` is captured in the SAME projection as the
-    // data columns below, before any drop, so the DV path keeps it.)
-    val dataCols = base.columns.toSeq
-      .filterNot(c => Transforms.parse(c).isDefined)
-    // a version carrying a deletion vector (B135 merge-on-read DELETE)
-    // subtracts it at scan time — this is the single funnel every Scala
-    // read, snapshot diff, CDC read, replica bootstrap, and compaction
-    // flows through, so deleted rows can never resurface from any of
-    // them (SQL reads take the same subtraction via DvReadRule)
-    // pending equality deletes (round-14) subtract before the deletion
-    // vector: both need `_metadata`, and the DV stage consumes it. The
-    // `_metadata` projection is built ONLY when a subtraction will run —
-    // touching the struct at all materializes `row_index` into every
-    // scan (CatalogSpec's column-pruning assert catches it)
+      if (hasLayoutLegs(dir)) scanVersion(spark, root, dir, files, subtracts)
+      else scanRoot(spark, dir, files, subtracts, snapshotSchema(spark, root, dir))
+    val dataCols = base.columns.toSeq.filterNot(_ == "_metadata")
     val subtracted =
-      if (!Dv.exists(p) && !EqDel.exists(p))
-        base.select(dataCols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+      if (!subtracts) base
       else {
-        val withMeta = base.select(
-          (dataCols.map(org.apache.spark.sql.functions.col) :+
-            org.apache.spark.sql.functions.col("_metadata")).toIndexedSeq: _*)
-        val eqApplied =
-          if (!EqDel.exists(p)) withMeta else EqDel.subtract(withMeta, p)
-        if (!Dv.exists(p))
-          eqApplied.select(dataCols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-        else Dv.subtract(eqApplied, p, dataCols)
+        val eqApplied = if (EqDel.exists(dir)) EqDel.subtract(base, dir) else base
+        if (Dv.exists(dir)) Dv.subtract(eqApplied, dir, dataCols)
+        else eqApplied.select(dataCols.map(col).toIndexedSeq: _*)
       }
-    // metadata-only renames: the files speak PHYSICAL names, the caller
-    // gets LOGICAL ones ([[ColMap]]); unmapped versions pass through
-    ColMap.toLogical(subtracted, p)
+    ColMap.toLogical(subtracted, dir)
+  }
+
+  /** One scan root (a version dir, or a `_layout<k>/` leg of one) read
+    * under `schema`: the whole root, or only `files` with the root as
+    * `basePath`. Derived `_tp_*` directory columns are left out of the
+    * projection, which carries `_metadata` last when `withMeta`.
+    */
+  private def scanRoot(spark: SparkSession, scanDir: String,
+      files: Option[Seq[String]], withMeta: Boolean,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val rd = spark.read.schema(schema)
+    val df = files.fold(rd.parquet(scanDir))(fs =>
+      rd.option("basePath", scanDir).parquet(fs: _*))
+    val cols = df.columns.toSeq.filterNot(c => Transforms.parse(c).isDefined)
+      .map(c => col(s"`$c`"))
+    df.select((if (withMeta) cols :+ col("_metadata") else cols).toIndexedSeq: _*)
   }
 
   // -------------------- mixed-layout versions (metadata-only evolution)
@@ -166,34 +170,6 @@ object Sinks
 
   private[graft] def hasLayoutLegs(p: String): Boolean = layoutLegs(p).nonEmpty
 
-  /** True iff version dir `p` was committed under a HIDDEN (transform)
-    * partition spec — its directory columns are derived `_tp_*` names
-    * ([[Transforms]]). Such versions must read through the funnel (the
-    * bare scan would surface the derived columns), exactly like DV /
-    * column-mapped / mixed-layout versions.
-    */
-  private[graft] def hasHiddenPartitioning(root: String, p: String): Boolean =
-    partitionSchemaFor(root, p).exists(
-      _.fieldNames.exists(n => Transforms.parse(n).isDefined))
-
-  /** A hidden spec whose EVERY derived column is a `bucket()` (identity
-    * columns may ride alongside). Such versions are the one hidden
-    * family the bare v2 scan serves CORRECTLY — the `_tp_*=v` dirs are
-    * partition directories ("=" exempts them from the underscore
-    * hiding), rows are complete, and the table object hides the derived
-    * columns from the schema — so [[graft.plans.DvReadRule]] does not
-    * swap them: they stay on the v2 path where the scan wrapper serves
-    * storage-partitioned joins (B189) and implied bucket-equality
-    * pruning. Range transforms (day/truncate/…) keep swapping — their
-    * pruning lives in HiddenPartitionRule on the funnel plan.
-    */
-  private[graft] def pureBucketHidden(root: String, p: String): Boolean =
-    partitionSchemaFor(root, p).exists { st =>
-      val parsed = st.fieldNames.toSeq.map(Transforms.parse)
-      parsed.exists(_.isDefined) &&
-        parsed.flatten.forall(_.isInstanceOf[Transforms.Bucket])
-    }
-
   /** True iff any CURRENT-layout (top-level, Spark-visible) data file
     * exists under version dir `p` — right after a metadata-only
     * evolution there are none (everything moved into the new leg).
@@ -204,33 +180,33 @@ object Sinks
       !Fs.isLayoutLeg(d.relativize(f).getName(0).toString))
   }
 
-  /** The partition spec of one scan root inside version dir `p`: a
-    * leg's own `_PSPEC` stamp (always written by the evolution commit),
-    * or — for the top level — the version's spec via
-    * [[partitionSchemaFor]].
+  /** The scan roots of version dir `p` that hold data: its non-empty
+    * layout legs in creation order, then the top level. Legs emptied by
+    * churn are skipped.
     */
-  private def scanDirSpec(root: String, p: String,
-      scanDir: String): Option[org.apache.spark.sql.types.StructType] =
-    if (scanDir == p) partitionSchemaFor(root, p)
-    else {
-      val f = Paths.get(scanDir, PartitionSpecFile)
-      require(Files.exists(f),
-        s"layout leg $scanDir lacks its $PartitionSpecFile stamp — the " +
-          "version dir is corrupt (evolution commits always stamp legs)")
-      val ddl = new String(Files.readAllBytes(f), "UTF-8").trim
-      if (ddl.isEmpty) None
-      else Some(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    }
+  private def scanRoots(p: String): Seq[String] =
+    layoutLegs(p).filter(l => Fs.walkParquet(l).nonEmpty).map(_.toString) ++
+      (if (topLevelParquetExists(p)) Seq(p) else Nil)
 
   /** Read schema of one scan root inside version dir `p`: partition
-    * types pinned from the scan root's own spec, metadata-ADDED columns
-    * (version-level, [[ColMap.added]]) appended — the per-leg analog of
-    * [[readSchemaFor]].
+    * types pinned from the scan root's own spec (a leg's own `_PSPEC`
+    * stamp, always written by the evolution commit, or the version's
+    * spec via [[partitionSchemaFor]] for the top level), metadata-ADDED
+    * columns ([[ColMap.added]]) appended so parquet serves NULL from
+    * files that predate the ADD, and metadata-only widenings
+    * ([[ColMap.widened]], B162) pinned to the declared WIDE type — the
+    * parquet reader upcasts narrow footers per file. Added and widened
+    * columns are version-level and apply to every leg alike.
     */
   private def legReadSchema(spark: SparkSession, root: String, p: String,
       scanDir: String): org.apache.spark.sql.types.StructType = {
     val inferred = inferSchema(spark, scanDir)
-    val pinned = scanDirSpec(root, p, scanDir) match {
+    val spec =
+      if (scanDir == p) partitionSchemaFor(root, p)
+      else specStamp(scanDir).getOrElse(throw new IllegalArgumentException(
+        s"layout leg $scanDir lacks its $PartitionSpecFile stamp — the " +
+          "version dir is corrupt (evolution commits always stamp legs)"))
+    val pinned = spec match {
       case None => inferred
       case Some(declared) =>
         org.apache.spark.sql.types.StructType(inferred.map { f =>
@@ -238,73 +214,45 @@ object Sinks
             .map(d => f.copy(dataType = d.dataType)).getOrElse(f)
         })
     }
-    val added = ColMap.added(p)
+    // a field already present in the footers (a post-ADD linked commit
+    // wrote it, or inference picked a new file) is not appended twice
     val have = pinned.fieldNames.map(_.toLowerCase).toSet
-    val withAdded = added.foldLeft(pinned)((s, f) =>
+    val withAdded = ColMap.added(p).foldLeft(pinned)((s, f) =>
       if (have(f.name.toLowerCase)) s else s.add(f.copy(nullable = true)))
-    // widen overrides are VERSION-level and apply to every leg alike
     ColMap.applyWidened(p, withAdded)
   }
 
-  /** Every data file of version dir `p` as ONE physical-named frame
-    * carrying the `_metadata` struct as a regular last column — the
-    * shared scan base of [[readDir]] and [[liveWithPositions]] for
-    * mixed-layout versions. Each leg reads under its own partition
-    * spec; `unionByName` aligns the differing column orders (a leg's
-    * partition columns are directories there, data columns elsewhere)
-    * with leg 0's order winning. Legs emptied by churn are skipped.
+  /** Data files of mixed-layout version dir `p` as ONE physical-named
+    * frame, `_metadata` as its last column when `withMeta` — the scan
+    * base of [[snapshotRead]] and [[liveWithPositions]] for such
+    * versions. `files = None` reads every scan root whole; `Some(fs)`
+    * groups the files by their owning scan root (a `_layout<k>/` leg or
+    * the top level). Each root reads under its own partition spec, and
+    * `unionByName` aligns the differing column orders (a leg's partition
+    * columns are directories there, data columns elsewhere) with the
+    * oldest leg's order winning. Derived `_tp_*` columns never surface:
+    * legs under DIFFERENT hidden specs would break the union if they did.
+    * Deletion-vector and eq-delete keys are version-dir-relative
+    * (`_layout<k>/…` for leg rows), so one subtraction over the union
+    * stays exact.
     */
-  private[graft] def scanVersion(spark: SparkSession, root: String,
-      p: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    def one(scanDir: String): DataFrame = {
-      val df = spark.read.schema(legReadSchema(spark, root, p, scanDir))
-        .parquet(scanDir)
-      // hidden partitioning: a leg's derived `_tp_*` directory columns
-      // never surface (and legs under DIFFERENT hidden specs would
-      // break the unionByName below if they did)
-      val cols = df.columns.filterNot(c => Transforms.parse(c).isDefined)
-      df.select((cols.map(c => col(s"`$c`")) :+ col("_metadata"))
-        .toIndexedSeq: _*)
+  private[graft] def scanVersion(spark: SparkSession, root: String, p: String,
+      files: Option[Seq[String]] = None, withMeta: Boolean = true): DataFrame = {
+    val roots: Seq[(String, Option[Seq[String]])] = files match {
+      case None => scanRoots(p).map(_ -> None)
+      case Some(fs) =>
+        val base = Paths.get(p)
+        val groups = fs.groupBy { f =>
+          val head = base.relativize(Paths.get(f)).getName(0).toString
+          if (Fs.isLayoutLeg(head)) base.resolve(head).toString else p
+        }
+        (layoutLegs(p).map(_.toString) :+ p).filter(groups.contains)
+          .map(r => r -> Some(groups(r)))
     }
-    val legs = layoutLegs(p).filter(l => Fs.walkParquet(l).nonEmpty)
-    val tops = if (topLevelParquetExists(p)) Seq(p) else Nil
-    val frames = legs.map(_.toString) ++ tops
-    require(frames.nonEmpty, s"no data files under version dir $p")
-    frames.map(one).reduce(_ unionByName _)
-  }
-
-  /** Individually-addressed files of mixed-layout version dir `p` as one
-    * physical-named frame with `_metadata` — the stats/bloom pruned-read
-    * analog of [[scanVersion]]. Files are grouped by their owning scan
-    * root (a `_layout<k>/` leg or the top level), each group read with
-    * its root as `basePath` (partition-directory columns stay in scope)
-    * under the root's own pinned schema, then unioned by name. Mixed
-    * versions always carry their own `_PSPEC` stamps, so no table root
-    * is needed to resolve specs (`p` doubles as the fallback argument,
-    * which is never consulted).
-    */
-  private[graft] def readFilesMixed(spark: SparkSession, p: String,
-      files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val base = Paths.get(p)
-    val groups = files.groupBy { f =>
-      val head = base.relativize(Paths.get(f)).getName(0).toString
-      if (Fs.isLayoutLeg(head)) base.resolve(head).toString else p
-    }
-    // leg order first (canonical column order = oldest leg's), top last
-    val ordered = (layoutLegs(p).map(_.toString) :+ p).filter(groups.contains)
-    val frames = ordered.map { scanRoot =>
-      val df = spark.read.option("basePath", scanRoot)
-        .schema(legReadSchema(spark, p, p, scanRoot))
-        .parquet(groups(scanRoot): _*)
-      // same hiding as scanVersion: derived directory columns stay
-      // scan-side
-      val cols = df.columns.filterNot(c => Transforms.parse(c).isDefined)
-      df.select((cols.map(c => col(s"`$c`")) :+ col("_metadata"))
-        .toIndexedSeq: _*)
-    }
-    frames.reduce(_ unionByName _)
+    require(roots.nonEmpty, s"no data files under version dir $p")
+    roots.map { case (r, fs) =>
+      scanRoot(spark, r, fs, withMeta, legReadSchema(spark, root, p, r))
+    }.reduce(_ unionByName _)
   }
 
   /** Version-local partition spec stamp: the partition-column DDL of the
@@ -316,20 +264,27 @@ object Sinks
     */
   private[graft] val PartitionSpecFile = "_PSPEC"
 
+  /** The `_PSPEC` stamp of scan root `dir`: None when there is no stamp,
+    * Some(None) when it says unpartitioned.
+    */
+  private def specStamp(dir: String): Option[Option[org.apache.spark.sql.types.StructType]] = {
+    val f = Paths.get(dir, PartitionSpecFile)
+    if (!Files.exists(f)) None
+    else {
+      val ddl = new String(Files.readAllBytes(f), "UTF-8").trim
+      Some(if (ddl.isEmpty) None
+        else Some(org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+    }
+  }
+
   /** The partition schema version dir `p` was committed under: its own
     * `_PSPEC` when present (None inside = explicitly unpartitioned),
     * falling back to the table-level spec for versions committed before
     * the stamp existed.
     */
   private[graft] def partitionSchemaFor(root: String,
-      p: String): Option[org.apache.spark.sql.types.StructType] = {
-    val f = Paths.get(p, PartitionSpecFile)
-    if (Files.exists(f)) {
-      val ddl = new String(Files.readAllBytes(f), "UTF-8").trim
-      if (ddl.isEmpty) None
-      else Some(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    } else TableProps.partitionSchema(root)
-  }
+      p: String): Option[org.apache.spark.sql.types.StructType] =
+    specStamp(p).getOrElse(TableProps.partitionSchema(root))
 
   /** Memoized parquet schema inference over one directory. A flat
     * directory (no partition subdirectories) is inferred on the driver
@@ -431,53 +386,32 @@ object Sinks
   /** The full read schema of version dir `p` with declared partition
     * types substituted — what a reader (or the catalog's user-specified
     * schema) must pin so inference never rewrites partition types. None
-    * when the version is unpartitioned (let the reader infer as usual).
+    * when nothing needs pinning: an unpartitioned single-layout version
+    * with no metadata-added or widened column (let the reader infer as
+    * usual).
     */
   private[graft] def readSchemaFor(spark: SparkSession, root: String,
-      p: String): Option[org.apache.spark.sql.types.StructType] = {
-    // mixed-layout version: the canonical schema is leg 0's (the
-    // pre-evolution table order [[scanVersion]]'s union preserves),
-    // extended by any column only later legs / the top level carry
-    // (none in practice — evolution never changes the column set)
-    val legs0 = layoutLegs(p).filter(l => Fs.walkParquet(l).nonEmpty)
-    if (legs0.nonEmpty) {
-      val all = legs0.map(_.toString) ++
-        (if (topLevelParquetExists(p)) Seq(p) else Nil)
-      val schemas = all.map(legReadSchema(spark, root, p, _))
-      val merged = schemas.tail.foldLeft(schemas.head) { (acc, s) =>
-        s.foldLeft(acc)((a, f) =>
-          if (a.fieldNames.exists(_.equalsIgnoreCase(f.name))) a else a.add(f))
-      }
-      return Some(merged)
+      p: String): Option[org.apache.spark.sql.types.StructType] =
+    if (layoutLegs(p).exists(l => Fs.walkParquet(l).nonEmpty) ||
+        partitionSchemaFor(root, p).isDefined || ColMap.added(p).nonEmpty ||
+        ColMap.widened(p).nonEmpty) Some(snapshotSchema(spark, root, p))
+    else None
+
+  /** The physical read schema of version dir `p`: [[readSchemaFor]]'s
+    * pin where there is one, else the memoized [[inferSchema]]. A
+    * mixed-layout version's is leg 0's (the pre-evolution table order
+    * [[scanVersion]]'s union preserves), extended by any column only
+    * later legs / the top level carry (none in practice — evolution
+    * never changes the column set).
+    */
+  private[graft] def snapshotSchema(spark: SparkSession, root: String,
+      p: String): org.apache.spark.sql.types.StructType =
+    if (!layoutLegs(p).exists(l => Fs.walkParquet(l).nonEmpty))
+      legReadSchema(spark, root, p, p)
+    else scanRoots(p).map(legReadSchema(spark, root, p, _)).reduce { (acc, s) =>
+      s.foldLeft(acc)((a, f) =>
+        if (a.fieldNames.exists(_.equalsIgnoreCase(f.name))) a else a.add(f))
     }
-    val pinned = partitionSchemaFor(root, p).map { declared =>
-      val inferred = inferSchema(spark, p)
-      org.apache.spark.sql.types.StructType(inferred.map { f =>
-        declared.find(_.name.equalsIgnoreCase(f.name))
-          .map(d => f.copy(dataType = d.dataType)).getOrElse(f)
-      })
-    }
-    // metadata-only ADD COLUMN ([[ColMap.added]]): append the added
-    // fields to the read schema so parquet serves NULL from files that
-    // predate the ADD and real values from files written after. A field
-    // already present in the footers (a post-ADD linked commit wrote
-    // it, or inference picked a new file) is not appended twice.
-    val added = ColMap.added(p)
-    val withAdded =
-      if (added.isEmpty) pinned
-      else {
-        val base = pinned.getOrElse(inferSchema(spark, p))
-        val have = base.fieldNames.map(_.toLowerCase).toSet
-        Some(added.foldLeft(base)((s, f) =>
-          if (have(f.name.toLowerCase)) s else s.add(f.copy(nullable = true))))
-      }
-    // metadata-only type widening ([[ColMap.widened]], B162): pin the
-    // declared WIDE type — the parquet reader upcasts narrow footers
-    // per file, files written after the widen are wide already
-    if (ColMap.widened(p).isEmpty) withAdded
-    else Some(ColMap.applyWidened(p,
-      withAdded.getOrElse(inferSchema(spark, p))))
-  }
 
   /** Snapshot versions present under `root`, ascending — the time-travel
     * inventory. Every listed version directory holds complete, immutable
@@ -670,7 +604,7 @@ object Sinks
       throw new IllegalStateException(
         s"version $v does not exist under $root (available: ${listVersions(root).mkString(", ")})" +
           " — it may have been vacuumed by compaction")
-    readDir(spark, root, p)
+    snapshotRead(spark, root, p)
   }
 
   /** Name of the write-side change-feed sidecar inside a version dir
@@ -1091,7 +1025,7 @@ object Sinks
     case Some(v) =>
       val p = versionPath(root, v)
       val live =
-        if (hasLayoutLegs(p)) readDir(df.sparkSession, root, p).schema
+        if (hasLayoutLegs(p)) snapshotRead(df.sparkSession, root, p).schema
         else liveSchema(df.sparkSession, root, p)
       val missing = live.fieldNames.filterNot(df.columns.contains)
       val extra = df.columns.filterNot(live.fieldNames.contains)
@@ -1113,7 +1047,7 @@ object Sinks
       df.select(live.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
   }
 
-  /** The logical schema [[readDir]] gives single-layout version dir `p`,
+  /** The logical schema [[snapshotRead]] gives single-layout version dir `p`,
     * from metadata alone: the pinned read schema in a file-source
     * relation's column order (data columns, then partition columns),
     * derived `_tp_*` columns dropped, [[ColMap]]'s logical names
@@ -1123,7 +1057,7 @@ object Sinks
     */
   private def liveSchema(spark: SparkSession, root: String,
       p: String): org.apache.spark.sql.types.StructType = {
-    val pinned = readSchemaFor(spark, root, p).getOrElse(inferSchema(spark, p))
+    val pinned = snapshotSchema(spark, root, p)
     val parts = partitionSchemaFor(root, p).toSeq.flatMap(_.fieldNames)
     val (partFields, dataFields) =
       pinned.fields.toSeq.partition(f => parts.exists(_.equalsIgnoreCase(f.name)))
@@ -1397,7 +1331,7 @@ object Sinks
         // read back the staged delta (file listing happens here, before
         // any carry-over or the _changes write below lands in the dir)
         val back =
-          if (hasNew) readDir(spark, root, stage.toString)
+          if (hasNew) snapshotRead(spark, root, stage.toString)
           else aligned.limit(0)
         labeled(spark, "insert feed readback") {
           back.withColumn("_change_type", lit("insert"))

@@ -146,7 +146,7 @@ private[graft] trait SinksMaintenance { this: Sinks.type =>
       .map(ColMap.toLogicalName(live, _)) ++ TableProps.statsColumns(root) ++
       TableProps.clusterColumns(root))
       .distinct
-    val base = readDir(spark, root, live)
+    val base = snapshotRead(spark, root, live)
     val pcols = TableProps.partitionCols(root)
     // DECLARED clustering ('graft.cluster.columns', round-14) owns the
     // rewrite's layout when present: compaction RE-CLUSTERS by the
@@ -213,7 +213,7 @@ private[graft] trait SinksMaintenance { this: Sinks.type =>
     * landing under the current layout, materializing its evolution.
     *
     * Composition: the rewrite reads its files through the reconciling
-    * funnel ([[Stats.readFiles]]), so deletion vectors and pending
+    * funnel ([[snapshotRead]]), so deletion vectors and pending
     * equality-delete tombstones are MATERIALIZED into the rewritten
     * partitions (their stale sidecar rows, keyed by replaced files, are
     * inert); carried files keep subtracting exactly as before — under
@@ -287,10 +287,8 @@ private[graft] trait SinksMaintenance { this: Sinks.type =>
       Files.size(liveP.resolve(r))).sum
     val nFiles = math.max(1,
       math.ceil(matchBytes.toDouble / targetBytes).toInt)
-    val readSchema = readSchemaFor(spark, root, live)
-    val aligned = Transforms.dropHidden(ColMap.toLogical(
-      Stats.readFiles(spark, live,
-        matching.toSeq.sorted.map(k => s"$live/$k"), readSchema), live))
+    val aligned = snapshotRead(spark, root, live,
+      Some(matching.toSeq.sorted.map(k => s"$live/$k")))
     // same layout selection as the full rewrite: declared clustering
     // wins; else range-cluster by the stats columns; else cluster by
     // the partition columns so each value lands from one task
@@ -598,21 +596,18 @@ private[graft] trait SinksMaintenance { this: Sinks.type =>
       val fs = Fs.walkParquet(Paths.get(dir)).map(_.toString)
       if (fs.isEmpty)
         return readCurrent(spark, root).limit(0)
-      val rd = spark.read.option("basePath", dir)
-      Transforms.dropHidden(
-        readSchemaFor(spark, root, dir).fold(rd)(rd.schema).parquet(fs: _*))
+      Transforms.dropHidden(spark.read.option("basePath", dir)
+        .schema(snapshotSchema(spark, root, dir)).parquet(fs: _*))
     }
     val touchedAbs = rawLive(live).filter(pred).select(input_file_name())
       .distinct().collect().map(r => decode(r.getString(0))).toSeq
     val touched = touchedAbs.map(relOf).toSet
     var purgedRows = 0L
     if (touched.nonEmpty) {
-      val readSchema = readSchemaFor(spark, root, live)
       // reconciled content of ONLY the touched files (their DVs
       // materialize away here), minus the matching rows — DELETE
       // semantics: NULL-evaluating rows survive
-      val reconciled = Transforms.dropHidden(
-        Stats.readFiles(spark, live, touchedAbs.sorted, readSchema))
+      val reconciled = snapshotRead(spark, root, live, Some(touchedAbs.sorted))
       val survivors = reconciled.filter(not(coalesce(pred, lit(false))))
       // counted BEFORE the commit (the pre-purge reconciled state is
       // still readable) — O(touched files), the honest number a privacy

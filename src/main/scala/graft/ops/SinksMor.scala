@@ -1,8 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import graft.io.Fs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Merge-on-read DML (deletion vectors): the positioned live scan,
@@ -21,7 +18,7 @@ private[graft] trait SinksMor { this: Sinks.type =>
     * COW worst case this exists for: a predicate matching 0.1% of rows
     * spread across every file rewrites the whole table under B114;
     * here it writes one small sidecar. Readers subtract the vector at
-    * scan time ([[readDir]], [[graft.plans.DvReadRule]]); `CALL
+    * scan time ([[snapshotRead]], [[graft.plans.DvReadRule]]); `CALL
     * system.compact` purges it into files. The commit emits the deleted
     * rows as its `_changes` feed (only NEWLY deleted rows — re-matching
     * an already-deleted row is a no-op), so CDC consumers and replicas

@@ -158,9 +158,9 @@ private[graft] trait SinksRebase { this: Sinks.type =>
         // logical read schema unchanged (names + types; a concurrent
         // widening retype rewrote the footers under types our staged
         // files do not carry)
-        else if (readDir(spark, root, oldDir.toString).schema
+        else if (snapshotRead(spark, root, oldDir.toString).schema
                    .map(f => (f.name, f.dataType.simpleString)) !=
-                 readDir(spark, root, newDir.toString).schema
+                 snapshotRead(spark, root, newDir.toString).schema
                    .map(f => (f.name, f.dataType.simpleString))) false
         else policy match {
           case MorRebase(_) | CowRebase(_) =>

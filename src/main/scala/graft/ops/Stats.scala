@@ -272,7 +272,7 @@ object Stats {
   private def exactDataPass(spark: SparkSession,
       files: Seq[(String, String)], colSet: Seq[String],
       stats: org.apache.spark.sql.Dataset[FileColStat],
-      ndvCols: Seq[String] = Nil, histCols: Seq[String] = Nil)
+      ndvCols: Seq[String], histCols: Seq[String])
       : org.apache.spark.sql.Dataset[FileColStat] = {
     import org.apache.spark.sql.types._
     // requested columns present across ALL listed files (a retrofit
@@ -835,66 +835,18 @@ object Stats {
     * — q_stats_skipping hash-proves it against the unclustered fixture.
     */
   def readWhere(spark: SparkSession, dir: String,
-      colName: String, lo: Any, hi: Any,
-      readSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    // under a column mapping the caller's name is LOGICAL while the
-    // sidecar and files speak PHYSICAL — translate for the prune and
-    // the predicate, alias the result back (identity when unmapped)
-    val physCol = ColMap.toPhysicalName(dir, colName)
-    val files = prunedFiles(spark, dir, physCol, lo, hi)
-    val pred = col(physCol).between(lit(lo), lit(hi))
-    Transforms.dropHidden(ColMap.toLogical(
-      readFiles(spark, dir, files, readSchema).filter(pred), dir))
-  }
+      colName: String, lo: Any, hi: Any): DataFrame =
+    rangeRead(spark, dir, dir, colName, lo, hi)
 
-  /** The surviving files of version dir `dir` as one frame — the shared
-    * explicit-file read half of [[readWhere]] and the SQL-side
-    * [[graft.plans.StatsSkipRule]]: deletion-vector subtraction applies
-    * exactly as in the full read, mixed-layout versions group per leg.
-    * PHYSICAL names, hidden columns still present — callers translate
-    * ([[ColMap.toLogical]] / [[Transforms.dropHidden]]).
+  /** [[readWhere]] of version dir `dir` of table `root`: the kept files
+    * read through [[Sinks.snapshotRead]], the predicate applied by the
+    * caller's LOGICAL name (the sidecar speaks physical names;
+    * [[prunedFiles]] translates).
     */
-  private[graft] def readFiles(spark: SparkSession, dir: String,
-      files: Seq[String],
-      readSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    if (files.isEmpty) {
-      val schema = readSchema.getOrElse(spark.read.parquet(dir).schema)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    if (Sinks.hasLayoutLegs(dir)) {
-      // mixed-layout version (metadata-only partition evolution): the
-      // surviving files span layouts whose partition-directory columns
-      // differ — group per layout root, union, then subtract exactly
-      // as below (keys stay version-dir-relative)
-      val raw = Sinks.readFilesMixed(spark, dir, files)
-      val cols = raw.columns.toSeq.filterNot(_ == "_metadata")
-      // pending equality deletes hide rows from pruned reads too
-      // (round-14) — they apply before the DV stage consumes _metadata
-      val eq = if (!EqDel.exists(dir)) raw else EqDel.subtract(raw, dir)
-      if (!Dv.exists(dir)) eq.select(cols.map(col).toIndexedSeq: _*)
-      else Dv.subtract(eq, dir, cols)
-    } else {
-      // basePath keeps partition-dir columns in scope when the surviving
-      // files are addressed individually (no-op for flat layouts)
-      val rd = spark.read.option("basePath", dir)
-      val raw = readSchema.fold(rd)(rd.schema).parquet(files: _*)
-      // equality deletes and the deletion vector subtract here exactly
-      // as in the full read — pruning stays conservative (a kept file
-      // whose matching rows were all hidden just contributes nothing)
-      // and the keys are file_path-relative, valid for individually-
-      // addressed files too
-      if (!Dv.exists(dir) && !EqDel.exists(dir)) raw
-      else {
-        val cols = raw.columns.toSeq
-        val withMeta = raw.select((cols.map(col) :+ col("_metadata")).toIndexedSeq: _*)
-        val eq =
-          if (!EqDel.exists(dir)) withMeta else EqDel.subtract(withMeta, dir)
-        if (!Dv.exists(dir)) eq.select(cols.map(col).toIndexedSeq: _*)
-        else Dv.subtract(eq, dir, cols)
-      }
-    }
-  }
+  private def rangeRead(spark: SparkSession, root: String, dir: String,
+      colName: String, lo: Any, hi: Any): DataFrame =
+    Sinks.snapshotRead(spark, root, dir, Some(prunedFiles(spark, dir, colName, lo, hi)))
+      .filter(col(colName).between(lit(lo), lit(hi)))
 
   /** Metadata-served distinct counts (B180): merge the per-file HLL
     * sketches the annotator records for `'graft.ndv.columns'` into one
@@ -942,7 +894,6 @@ object Stats {
         "system.annotate_stats to retrofit")
     val liveRels = graft.io.Fs.walkParquet(Paths.get(live))
       .map(p => relKey(live, p.toString)).toSet
-    import spark.implicits._
     cols.map { c =>
       val phys = ColMap.toPhysicalName(live, c)
       val colSide = side.filter(lower(col("col")) === phys.toLowerCase)
@@ -1037,15 +988,11 @@ object Stats {
   private val NdvFanIn = 64
 
   /** [[readWhere]] over the LIVE version of a [[Sinks]] versioned table
-    * (publish with `statsCols` to make the sidecar exist). The read
-    * schema is pinned to the table's DECLARED partition types
-    * ([[Sinks.readSchemaFor]]) so partition columns keep the same types
-    * as [[Sinks.readCurrent]] even when pruning addresses files
-    * individually.
+    * (publish with `statsCols` to make the sidecar exist). The table
+    * root lets [[Sinks.snapshotRead]] pin the table's DECLARED partition
+    * types even for a version that predates its own spec stamp.
     */
   def readCurrentWhere(spark: SparkSession, root: String,
-      colName: String, lo: Any, hi: Any): DataFrame = {
-    val live = Sinks.resolve(root)
-    readWhere(spark, live, colName, lo, hi, Sinks.readSchemaFor(spark, root, live))
-  }
+      colName: String, lo: Any, hi: Any): DataFrame =
+    rangeRead(spark, root, Sinks.resolve(root), colName, lo, hi)
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -11,7 +11,7 @@ import graft.ops.{ColMap, Dv, EqDel, Sinks}
 
 /** SQL-side deletion-vector subtraction (B135): when a Graft catalog
   * relation's resolved version dir carries a `_dv` sidecar, swap the
-  * relation for the subtracted plan [[Sinks.readDir]] builds — a
+  * relation for the subtracted plan [[Sinks.snapshotRead]] builds — a
   * file-scan anti-joined with the (small, usually broadcast) vector on
   * Spark's `_metadata` file/row-position columns — re-aliased to the
   * original output attribute ids so everything above rebinds untouched.
@@ -77,15 +77,25 @@ object DvReadRule extends Rule[LogicalPlan] {
   }
 
   private def swap(r: DataSourceV2Relation, t: GraftSnapshotDir): LogicalPlan = {
-    val spark = SparkSession.active
-    val subtracted = Sinks.readDir(spark, t.snapshotTableRoot, t.snapshotVersionDir)
-      .queryExecution.analyzed
-    val out: Seq[NamedExpression] = r.output.map { a =>
-      val src = subtracted.output.find(_.name.equalsIgnoreCase(a.name)).getOrElse(
-        throw new IllegalStateException(
-          s"deletion-vector subtraction lost column ${a.name} of ${r.table.name()}"))
-      Alias(src, a.name)(exprId = a.exprId, qualifier = a.qualifier)
-    }
+    val subtracted = Sinks.snapshotRead(SparkSession.active, t.snapshotTableRoot,
+      t.snapshotVersionDir).queryExecution.analyzed
+    val out = realias(r.output, subtracted).getOrElse(throw new IllegalStateException(
+      s"the snapshot read of ${r.table.name()} serves " +
+        s"(${subtracted.output.map(_.name).mkString(", ")}), not every column of " +
+        s"(${r.output.map(_.name).mkString(", ")})"))
     Project(out, subtracted)
+  }
+
+  /** A swapped relation's `output` re-aliased by name onto `plan`'s
+    * columns, each alias keeping the original attribute's exprId and
+    * qualifier so everything above the swap rebinds untouched; None when
+    * `plan` lacks one of them. Shared by every rule that swaps a Graft
+    * relation for a [[Sinks.snapshotRead]] plan.
+    */
+  private[plans] def realias(output: Seq[Attribute],
+      plan: LogicalPlan): Option[Seq[NamedExpression]] = {
+    val out = output.map(a => plan.output.find(_.name.equalsIgnoreCase(a.name))
+      .map(src => Alias(src, a.name)(exprId = a.exprId, qualifier = a.qualifier)))
+    if (out.forall(_.isDefined)) Some(out.flatten) else None
   }
 }

@@ -25,7 +25,7 @@ import graft.ops.Transforms
   *
   * Runs in the operator-optimization fixed point: predicate pushdown
   * first moves the user filter down to the scan (whose output still
-  * carries the derived columns — [[graft.ops.Sinks.readDir]] drops them
+  * carries the derived columns — [[graft.ops.Sinks.snapshotRead]] drops them
   * in a Project ABOVE); this rule then augments it; the injected
   * mapping expressions are literal-only and constant-fold before
   * planning. Idempotent: a filter already referencing a derived column

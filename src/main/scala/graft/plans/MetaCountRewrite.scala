@@ -379,7 +379,7 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
 
   /** The filtered metadata count: see the block comment above. */
   private def rewriteFiltered(agg: Aggregate): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.{Add, Attribute}
+    import org.apache.spark.sql.catalyst.expressions.Add
     import org.apache.spark.sql.catalyst.plans.logical.Filter
     val f = stripProjects(agg.child) match {
       case flt: Filter => flt
@@ -521,16 +521,9 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     if (fkinds.exists(_.isInstanceOf[AvgOf])) return None
     // hybrid: scan ONLY the boundary files under the exact predicate and
     // add the interior constant inside the aggregate
-    val readSchema = graft.ops.Sinks.readSchemaFor(spark, t.snapshotTableRoot, dir)
-    val prunedDf = graft.ops.Transforms.dropHidden(graft.ops.ColMap.toLogical(
-      graft.ops.Stats.readFiles(spark, dir,
-        boundary.map(k => s"$dir/$k"), readSchema), dir))
-    val analyzed = prunedDf.queryExecution.analyzed
-    val out: Seq[NamedExpression] = rel.output.map { a =>
-      val src = analyzed.output.find(_.name.equalsIgnoreCase(a.name))
-        .getOrElse(return None)
-      Alias(src, a.name)(exprId = a.exprId, qualifier = a.qualifier)
-    }
+    val analyzed = graft.ops.Sinks.snapshotRead(spark, t.snapshotTableRoot, dir,
+      Some(boundary.map(k => s"$dir/$k"))).queryExecution.analyzed
+    val out = DvReadRule.realias(rel.output, analyzed).getOrElse(return None)
     val newAggs: Seq[NamedExpression] = agg.aggregateExpressions.zip(fkinds).map {
       case (al @ Alias(ae: AggregateExpression, name), b @ BoundOf(_, dt, isMin)) =>
         // union-min/max semantics: Least/Greatest skip nulls (an empty
@@ -790,16 +783,9 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     if (grouped.isEmpty) return None
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.logical.Union
-    val readSchema = graft.ops.Sinks.readSchemaFor(spark, t.snapshotTableRoot, dir)
-    val prunedDf = graft.ops.Transforms.dropHidden(graft.ops.ColMap.toLogical(
-      graft.ops.Stats.readFiles(spark, dir,
-        boundaryB.toSeq.sorted.map(k => s"$dir/$k"), readSchema), dir))
-    val analyzed = prunedDf.queryExecution.analyzed
-    val out: Seq[NamedExpression] = rel.output.map { a =>
-      val src = analyzed.output.find(_.name.equalsIgnoreCase(a.name))
-        .getOrElse(return None)
-      Alias(src, a.name)(exprId = a.exprId, qualifier = a.qualifier)
-    }
+    val analyzed = graft.ops.Sinks.snapshotRead(spark, t.snapshotTableRoot, dir,
+      Some(boundaryB.toSeq.sorted.map(k => s"$dir/$k"))).queryExecution.analyzed
+    val out = DvReadRule.realias(rel.output, analyzed).getOrElse(return None)
     val scanChild: LogicalPlan = cond match {
       case Some(c) => Filter(c, Project(out, analyzed))
       case None => Project(out, analyzed)
@@ -1169,7 +1155,7 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     * column), distinct from declining.
     */
   private def metaValues(dir: String, kinds: Seq[Kind],
-      rootOpt: Option[String] = None): Option[Seq[Any]] = {
+      rootOpt: Option[String]): Option[Seq[Any]] = {
     // under a deletion vector the sidecar describes PRE-delete files.
     // count(*) stays answerable — vector entries are unique positions
     // in live files (COW never reaches a DV version, carries preserve

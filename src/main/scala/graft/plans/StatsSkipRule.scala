@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
 
 import graft.catalog.GraftSnapshotDir
-import graft.ops.{Bloom, ColMap, Sinks, Stats, Transforms}
+import graft.ops.{Bloom, ColMap, Sinks, Stats}
 
 /** SQL-side file skipping (B164): a filter over a Graft catalog
   * relation whose version dir carries a `_stats` sidecar opens ONLY the
@@ -29,9 +29,9 @@ import graft.ops.{Bloom, ColMap, Sinks, Stats, Transforms}
   * construction. When nothing prunes, the plan is left untouched (a
   * DV/mapped/mixed table then still swaps through [[DvReadRule]]).
   *
-  * The swapped scan reads through [[Stats.readFiles]] — deletion
-  * vectors subtract, mixed layouts union per leg, column mapping
-  * translates, hidden partition columns drop — so the rule composes
+  * The swapped scan reads the kept files through [[Sinks.snapshotRead]]
+  * — deletion vectors subtract, mixed layouts union per leg, column
+  * mapping translates, hidden partition columns drop — so the rule composes
   * with every other table-format tier. Registered BEFORE [[DvReadRule]]
   * (a pruned swap already contains the subtraction; an unpruned
   * relation falls through to it).
@@ -195,15 +195,9 @@ object StatsSkipRule extends Rule[LogicalPlan] {
     // histograms/NDV — FilterEstimation runs above THIS node) and its
     // key-grouped partition reporting. Skip only when real rows skip.
     if (Stats.maxRowsOf(spark, dir, all -- kept) == 0L) return None
-    val readSchema = Sinks.readSchemaFor(spark, t.snapshotTableRoot, dir)
-    val pruned = Transforms.dropHidden(ColMap.toLogical(
-      Stats.readFiles(spark, dir, kept.toSeq.sorted, readSchema), dir))
-    val analyzed = pruned.queryExecution.analyzed
-    val out: Seq[NamedExpression] = r.output.map { a =>
-      val src = analyzed.output.find(_.name.equalsIgnoreCase(a.name)).getOrElse(
-        return None) // a column the pruned funnel cannot serve: decline
-      Alias(src, a.name)(exprId = a.exprId, qualifier = a.qualifier)
-    }
-    Some(Filter(cond, Project(out, analyzed)))
+    val analyzed = Sinks.snapshotRead(spark, t.snapshotTableRoot, dir,
+      Some(kept.toSeq.sorted)).queryExecution.analyzed
+    // a column the pruned read cannot serve: decline
+    DvReadRule.realias(r.output, analyzed).map(out => Filter(cond, Project(out, analyzed)))
   }
 }

@@ -543,4 +543,25 @@ class AnnIndexSpec extends AnyFunSuite {
     val got = AnnIndex.search(spark, root, queries5, nprobe = 3, k = 5)
     assert(got.count() == 25)
   }
+
+  test("the decoded quantizer is keyed by and read from one version dir across a rebuild") {
+    val root = tmp("annrekey")
+    val emb = Tables.embeddings(spark, sf001)
+    AnnIndex.buildFixed(spark, emb, root)
+    val oldLive = Sinks.resolve(root)
+    // a rebuild over half the corpus: different per-label means
+    AnnIndex.buildFixed(spark, emb.filter(col("vec_id") % 2 === 0), root)
+    val newLive = Sinks.resolve(root)
+    assert(oldLive != newLive)
+    def stored(live: String): Seq[(Long, Seq[Double])] =
+      spark.read.parquet(s"$live/${AnnIndex.CentroidsSidecar}")
+        .select(col("label").cast("long"), col("centroid").cast("array<double>"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    val (oldQ, newQ) = (stored(oldLive), stored(newLive))
+    assert(oldQ != newQ, "the rebuild must change the quantizer")
+    assert(AnnIndex.centroidsDecoded(spark, oldLive) == oldQ)
+    assert(AnnIndex.centroidsDecoded(spark, newLive) == newQ)
+    // memoized answers stay per version dir
+    assert(AnnIndex.centroidsDecoded(spark, oldLive) == oldQ)
+  }
 }

@@ -109,6 +109,17 @@ class DataSourceSpec extends AnyFunSuite {
     assert(Sinks.listVersions(tbl) == Seq(0L))
   }
 
+  test("the write stub for an unpublished root reports the schema it was handed") {
+    import org.apache.spark.sql.types._
+    val declared = StructType(Seq(StructField("k", LongType), StructField("s", StringType)))
+    val props = new java.util.HashMap[String, String]()
+    props.put("path", s"${tmp()}/unpublished")
+    val stub = new graft.catalog.GraftDataSource().getTable(declared,
+      Array.empty[org.apache.spark.sql.connector.expressions.Transform], props)
+    assert(stub.schema() == declared)
+    assert(stub.capabilities().isEmpty)
+  }
+
   test("the write door: create, append O(delta), overwrite, save modes, gates (round-16)") {
     val tbl = s"${tmp()}/t"
     import spark.implicits._

@@ -60,6 +60,14 @@ class DsirSpec extends AnyFunSuite {
     }
   }
 
+  test("dsir_buckets() with a null bucket count returns a null row and declares a nullable result") {
+    graft.functions.DsirBuckets.register(spark)
+    val df = spark.sql("SELECT dsir_buckets(text, CAST(NULL AS INT)) AS b FROM " +
+      "(SELECT 'alpha beta' AS text)")
+    assert(df.schema("b").nullable, df.schema.treeString)
+    assert(df.collect().toSeq == Seq(org.apache.spark.sql.Row(null)))
+  }
+
   test("selectTopK flags only raw docs, ranks deterministically, targets rank 0") {
     val sel = Dsir.selectTopK(
         Dsir.weights(docs, "doc_id", "text", col("tgt"), buckets = 64),

@@ -201,6 +201,15 @@ class LlmSpec extends AnyFunSuite {
     assert(natType == hofType, s"result type drifted: $natType vs $hofType")
   }
 
+  test("bands() with a null band count returns a null row and declares a nullable result") {
+    graft.functions.Bands.register(spark)
+    // the signature is never null, so only the count can null the result
+    val df = spark.sql("SELECT bands(sig, CAST(NULL AS INT), 2) AS bk FROM " +
+      "(SELECT array('a', 'b', 'c', 'd') AS sig)")
+    assert(df.schema("bk").nullable, df.schema.treeString)
+    assert(df.collect().toSeq == Seq(org.apache.spark.sql.Row(null)))
+  }
+
   test("B60 LSH candidates include every truly-similar pair (no false negatives)") {
     import spark.implicits._
     // construct near-duplicates: doc + same doc with last token changed

@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import graft.ops.{Dv, EqDel, Sinks}
+import graft.ops.{Dv, EqDel, Sinks, Stats}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -230,5 +230,40 @@ class SchemaProbeSpec extends AnyFunSuite {
     rejected(Seq((60L, "n")).toDF("k", "v"), "missing: x")
     rejected(Seq((60L, "n", 1.0, 2)).toDF("k", "v", "x", "y"), "extra: y")
     rejected(Seq((60L, "n", "1.0")).toDF("k", "v", "x"), "x is double but the append carries string")
+  }
+
+  test("stats-pruned reads of an unpartitioned, unmapped table build their plan without a schema-inference job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val wh = tmp("probe_prune")
+    spark.conf.set("spark.sql.catalog.graftprobe", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graftprobe.root", wh)
+    val root = s"$wh/t"
+    Sinks.publishVersioned((0L until 400L).map(i => (i, s"v$i")).toDF("k", "v")
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
+      root, None, statsCols = Seq("k"))
+    val live = Sinks.resolve(root)
+    assert(Sinks.readSchemaFor(spark, root, live).isEmpty,
+      "the table must be one whose read schema nothing pins")
+    // Scala door: the per-(dir, column) prune is memoized, so once it
+    // is warm the plan build is the read alone
+    assert(Stats.prunedFiles(spark, live, "k", 100L, 120L).size == 1)
+    val (pruned, jobs) = jobsOf(Stats.readWhere(spark, live, "k", 100L, 120L)
+      .queryExecution.analyzed)
+    assert(jobs.isEmpty, s"readWhere's plan build submitted jobs: $jobs")
+    assert(pruned.collectLeaves().size == 1)
+    // SQL door: the swap's only jobs are its unmemoized sidecar
+    // row-count read (Stats.maxRowsOf), which the same call counts
+    val sql = "SELECT k, v FROM graftprobe.t WHERE k BETWEEN 100 AND 120"
+    spark.sql(sql).queryExecution.optimizedPlan // warms the pruning memos
+    val q = spark.sql(sql)
+    val (_, sidecarJobs) = jobsOf(Stats.maxRowsOf(spark, live, Set(s"$live/x.parquet")))
+    val (optimized, swapJobs) = jobsOf(q.queryExecution.optimizedPlan)
+    assert(optimized.collectFirst {
+      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
+    }.isDefined, s"the filter did not swap to the pruned read: $optimized")
+    assert(swapJobs.size == sidecarJobs.size,
+      s"the StatsSkipRule swap submitted $swapJobs beyond the sidecar read's $sidecarJobs")
+    assert(q.inputFiles.length == 1 && q.count() == 21)
   }
 }

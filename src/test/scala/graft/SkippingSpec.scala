@@ -1006,4 +1006,63 @@ class SkippingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("must be 'true' or 'false'"), e.getMessage)
   }
 
+  test("snapshotRead over every live file equals the whole-version read on every version shape") {
+    import spark.implicits._
+    val wh = tmp("snapparity")
+    spark.conf.set("spark.sql.catalog.graftsnap", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graftsnap.root", wh)
+    val base = (0L until 60L).map(i => (i, (i % 4).toString, i.toInt, s"w$i"))
+      .toDF("k", "grp", "n", "w")
+    def mk(name: String): String = {
+      val t = s"$wh/$name"
+      Sinks.publishVersioned(base.repartition(3), t, None, statsCols = Seq("k"))
+      t
+    }
+    val flat = mk("flat")
+    val parted = mk("parted")
+    Sinks.repartitionTable(spark, parted, Seq("grp"))
+    val dv = mk("dv")
+    Sinks.deleteVector(spark, dv, col("k") % 5 === 0)
+    val eqd = mk("eqd")
+    graft.ops.EqDel.upsertBatch(spark,
+      (0L until 8L).map(i => (i, "9", -i.toInt, s"up$i")).toDF("k", "grp", "n", "w"),
+      eqd, Seq("k"))
+    val mapped = mk("mapped")
+    spark.sql("ALTER TABLE graftsnap.mapped RENAME COLUMN w TO word")
+    spark.sql("ALTER TABLE graftsnap.mapped DROP COLUMN grp")
+    spark.sql("ALTER TABLE graftsnap.mapped ADD COLUMNS (extra STRING)")
+    spark.sql("ALTER TABLE graftsnap.mapped ALTER COLUMN n TYPE BIGINT")
+    val hidden = mk("hidden")
+    Sinks.repartitionTable(spark, hidden, Seq("bucket(4, k)"))
+    val mixed = mk("mixed")
+    Sinks.repartitionTable(spark, mixed, Seq("grp"), metadataOnly = true)
+    Sinks.appendVersioned(
+      (60L until 80L).map(i => (i, (i % 4).toString, i.toInt, s"w$i")).toDF("k", "grp", "n", "w"),
+      mixed, Sinks.currentVersion(mixed))
+    Sinks.deleteVector(spark, mixed, col("k") % 7 === 0)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    for (t <- Seq(flat, parted, dv, eqd, mapped, hidden, mixed)) {
+      val live = Sinks.resolve(t)
+      val files = graft.io.Fs.walkParquet(java.nio.file.Paths.get(live)).map(_.toString)
+      val whole = Sinks.snapshotRead(spark, t, live)
+      val listed = Sinks.snapshotRead(spark, t, live, Some(files))
+      assert(listed.schema == whole.schema,
+        s"$t:\n listed: ${listed.schema.treeString}\n whole: ${whole.schema.treeString}")
+      assert(rows(listed) == rows(whole), s"$t: rows differ")
+      // nothing kept: no rows, the same columns and types
+      val none = Sinks.snapshotRead(spark, t, live, Some(Nil))
+      assert(none.schema.map(f => (f.name, f.dataType)) ==
+        whole.schema.map(f => (f.name, f.dataType)), s"$t: ${none.schema.treeString}")
+      assert(none.count() == 0)
+    }
+    // the shapes really are what they claim
+    assert(Sinks.hasLayoutLegs(Sinks.resolve(mixed)))
+    assert(graft.ops.ColMap.exists(Sinks.resolve(mapped)))
+    assert(Sinks.snapshotRead(spark, mapped, Sinks.resolve(mapped)).columns.toSeq ==
+      Seq("k", "n", "word", "extra"))
+    assert(Sinks.readCurrent(spark, dv).count() == 48)
+    assert(Sinks.readCurrent(spark, eqd).filter(col("w").startsWith("up")).count() == 8)
+    assert(Sinks.readCurrent(spark, hidden).columns.toSeq == Seq("k", "grp", "n", "w"))
+  }
 }
