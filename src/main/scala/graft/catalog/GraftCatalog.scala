@@ -1997,32 +1997,15 @@ private[catalog] object GraftTables {
     * translates physical footer names to logical; hidden-transform
     * columns drop from the logical schema.
     */
-  // Session-scoped memo of the delegate itself (round-17): every
-  // loadTable builds a fresh ParquetTable, and its schema()/fileIndex
-  // re-lists the version dir and re-runs partition discovery — stack-
-  // sampled as a per-STATEMENT driver cost across the whole catalog
-  // query family. A version dir is immutable once its stage→vN rename
-  // lands; the content stamp (names/sizes/mtimes walk, the inferSchema
-  // discipline) guards path reuse (drop+recreate at v0, sidecar folds),
-  // and the session UUID keeps confs/sessions apart.
-  private val delegateMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Boolean, String), ParquetTable]()
+  // every loadTable builds a fresh ParquetTable, and its schema()/fileIndex
+  // re-lists the version dir and re-runs partition discovery
+  private val delegateMemo = new graft.ops.VersionMemo[ParquetTable](512)
 
   private[catalog] def delegate(name: String, tRoot: String,
-      path: String, physicalNames: Boolean = false): ParquetTable = {
-    val spark = SparkSession.active
-    val stamp =
-      try Sinks.dirStamp(path)
-      catch { case _: java.io.IOException => java.util.UUID.randomUUID.toString }
-    val key = (org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark),
-      name, path, physicalNames, stamp)
-    val hit = delegateMemo.get(key)
-    if (hit != null) return hit
-    val built = buildDelegate(name, tRoot, path, physicalNames)
-    if (delegateMemo.size > 512) delegateMemo.clear()
-    delegateMemo.put(key, built)
-    built
-  }
+      path: String, physicalNames: Boolean = false): ParquetTable =
+    delegateMemo(SparkSession.active, Seq(path), s"$name|$physicalNames") {
+      buildDelegate(name, tRoot, path, physicalNames)
+    }
 
   private def buildDelegate(name: String, tRoot: String,
       path: String, physicalNames: Boolean): ParquetTable = {

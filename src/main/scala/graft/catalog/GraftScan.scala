@@ -2,9 +2,6 @@ package graft.catalog
 
 import java.nio.file.{Files, Paths}
 import java.util.{Optional, OptionalLong}
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -579,45 +576,19 @@ private[graft] object CboStats {
       hist: Option[Seq[Double]])
   private final case class FileStats(rows: Long, cols: Map[String, ColRow])
 
-  /** Session-scoped memo per immutable version dir, stamped with the
-    * sidecar's part count + max mtime so a deliberately rewritten
-    * sidecar (retrofit, era repair) misses instead of serving stale
-    * numbers — the [[graft.plans.MetaCountRewrite]] discipline.
-    */
-  private val memo = new ConcurrentHashMap[String, Map[String, FileStats]]()
-
   private def load(spark: SparkSession, dir: String): Map[String, FileStats] = {
-    val sidecar = Paths.get(dir, Stats.Sidecar)
-    val parts = graft.io.Fs.listDir(sidecar)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val stamp = parts.size + ":" +
-      (if (parts.isEmpty) "0"
-       else parts.map(p => Files.getLastModifiedTime(p).toMillis).max.toString)
-    val key = s"${org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark)}|$dir|$stamp"
-    if (memo.size > 256) memo.clear()
-    memo.computeIfAbsent(key, _ => {
-      val raw = spark.read.option("mergeSchema", "true").parquet(sidecar.toString)
-      import org.apache.spark.sql.functions.{col => c, lit}
-      def opt(name: String, dt: DataType) =
-        if (raw.columns.contains(name)) c(name) else lit(null).cast(dt).as(name)
-      val rows = raw.select(c("file"), c("col"), c("rows"), c("nulls"),
-        c("has_stats"), c("lo_l"), c("hi_l"), c("lo_d"), c("hi_d"),
-        opt("lo_t", LongType), opt("hi_t", LongType),
-        opt("dec_scale", IntegerType), opt("hll", BinaryType),
-        opt("hist", ArrayType(DoubleType))).collect()
-      def optAt[T](r: org.apache.spark.sql.Row, i: Int): Option[T] =
-        if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[T])
-      rows.groupBy(_.getString(0)).map { case (file, rs) =>
-        file -> FileStats(rs.head.getLong(2), rs.map { r =>
-          r.getString(1).toLowerCase -> ColRow(r.getLong(2), r.getLong(3),
-            r.getBoolean(4), optAt[Long](r, 5), optAt[Long](r, 6),
-            optAt[Double](r, 7), optAt[Double](r, 8),
-            optAt[Long](r, 9), optAt[Long](r, 10),
-            optAt[Int](r, 11), optAt[Array[Byte]](r, 12),
-            optAt[scala.collection.Seq[Double]](r, 13).map(_.toSeq))
-        }.toMap)
-      }
-    })
+    def optAt[T](r: org.apache.spark.sql.Row, i: Int): Option[T] =
+      if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[T])
+    Stats.sidecarRows(spark, dir).byFile.map { case (file, rs) =>
+      file -> FileStats(rs.head.getLong(2), rs.map { r =>
+        r.getString(1).toLowerCase -> ColRow(r.getLong(2), r.getLong(3),
+          r.getBoolean(4), optAt[Long](r, 5), optAt[Long](r, 6),
+          optAt[Double](r, 7), optAt[Double](r, 8),
+          optAt[Long](r, 9), optAt[Long](r, 10),
+          optAt[Int](r, 16), optAt[Array[Byte]](r, 18),
+          optAt[scala.collection.Seq[Double]](r, 19).map(_.toSeq))
+      }.toMap)
+    }
   }
 
   def statsFor(scan: ParquetScan, tRoot: String,

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-import graft.ops.{ColMap, Dv, EqDel, Roaring, Sinks, Transforms}
+import graft.ops.{ColMap, Dv, EqDel, Roaring, Sinks, VersionMemo}
 
 /** Storage-partitioned joins UNDER merge-on-read sidecars (round-15,
   * the r14 verdict's top item): before this, one MOR DELETE (deletion
@@ -100,25 +99,23 @@ private[graft] object MorSpj {
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map(Files.size).sum
 
-  // version dirs are immutable once published, so the structural verdict
-  // for one never changes — memo by (root, dir)
-  private val memo = new ConcurrentHashMap[String, java.lang.Boolean]()
+  private val verdicts = new VersionMemo[Boolean](512)
+
+  /** The MOR sidecars of version `dir`: their stamps key both memos. */
+  private def morSidecars(dir: String): Seq[String] =
+    Seq(Dv.Sidecar, EqDel.Sidecar, EqDel.SeqSidecar).map(s => s"$dir/$s")
 
   /** True iff version `dir` of table `root` takes the reader-side MOR
     * subtraction path (v2 scan kept, SPJ preserved) instead of the v1
     * funnel swap. MUST be the single source of truth for both
     * [[graft.plans.DvReadRule]] and [[GraftScanBuilder]].
     */
-  def readerSide(root: String, dir: String): Boolean = {
-    val key = s"$root|$dir"
-    val cached = memo.get(key)
-    if (cached != null) return cached.booleanValue
-    val v = try compute(root, dir)
-    catch { case scala.util.control.NonFatal(_) => false }
-    if (memo.size > 512) memo.clear()
-    memo.put(key, java.lang.Boolean.valueOf(v))
-    v
-  }
+  def readerSide(root: String, dir: String): Boolean =
+    verdicts(SparkSession.active,
+        morSidecars(dir) :+ s"$dir/${ColMap.MarkerFile}", root) {
+      try compute(root, dir)
+      catch { case scala.util.control.NonFatal(_) => false }
+    }
 
   private def compute(root: String, dir: String): Boolean = {
     val hasDv = Dv.exists(dir)
@@ -242,81 +239,44 @@ private[graft] object MorSpj {
       eqKeys: Seq[String], maxSeq: Map[Vector[Any], Long],
       fileSeq: Map[String, Long])
 
-  // round-16: the sidecar collection costs 1-3 driver jobs; on a hot
-  // table that fixed cost used to recur on EVERY query. Version dirs
-  // are immutable once published, so the payload memoizes per
-  // (session, dir) — stamped with the sidecar part counts + mtimes so
-  // a repaired/retrofitted sidecar misses instead of serving stale
-  // tombstones (the CboStats discipline). Small cap: budgets allow a
-  // 256 MB bitmap payload, so keep few entries rather than many.
-  private val sideMemo = new ConcurrentHashMap[String, SideCache]()
+  // Small cap: budgets allow a 256 MB bitmap payload, so keep few
+  // entries rather than many.
+  private val sideMemo = new VersionMemo[SideCache](8)
 
-  // Stamp discipline matches Sinks.dirStamp (names + sizes + mtimes +
-  // count, round-18 back-port of the r17 inference-memo stamp): the old
-  // count+max-mtime stamp could serve STALE TOMBSTONES — this memo is
-  // on the deletion-correctness path — when a sidecar part was rewritten
-  // in place within one mtime granule with the same part count
-  // (part-file names are writer-unique, so the name fold alone breaks
-  // that class). MorSpjSpec pins the same-millisecond rewrite.
-  private def sideStamp(dir: String): String =
-    Seq(Dv.Sidecar, EqDel.Sidecar, EqDel.SeqSidecar).map { s =>
-      val d = Paths.get(dir, s)
-      if (!Files.isDirectory(d)) "-"
-      else {
-        val parts = graft.io.Fs.listDir(d)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        val sig = parts.foldLeft((0L, 0L, 0L, 0L)) {
-          case ((n, bytes, mt, hh), f) =>
-            val a = Files.readAttributes(f,
-              classOf[java.nio.file.attribute.BasicFileAttributes])
-            (n + 1, bytes + a.size,
-              math.max(mt, a.lastModifiedTime.toMillis),
-              hh + f.getFileName.toString.hashCode.toLong)
+  private def sidecars(spark: SparkSession, dir: String): SideCache =
+    sideMemo(spark, morSidecars(dir)) {
+      val dvEntries = Dv.bitmapEntries(spark, dir)
+      val (eqKeys, maxSeq, fileSeq) =
+        if (!EqDel.exists(dir)) (Nil, Map.empty[Vector[Any], Long], Map.empty[String, Long])
+        else {
+          import org.apache.spark.sql.functions.{col, max}
+          val dels = spark.read.parquet(s"$dir/${EqDel.Sidecar}")
+          val keys = dels.columns.filterNot(_ == SeqCol).toSeq
+          val converters = dels.schema.filter(f => keys.contains(f.name)).map { f =>
+            org.apache.spark.sql.catalyst.CatalystTypeConverters
+              .createToCatalystConverter(f.dataType)
+          }
+          val ms: Map[Vector[Any], Long] = dels
+            .groupBy(keys.map(col): _*)
+            .agg(max(col(SeqCol)).as(SeqCol))
+            .collect()
+            .flatMap { r =>
+              val vals = keys.indices.map(i =>
+                if (r.isNullAt(i)) null else converters(i)(r.get(i)))
+              // null-keyed tombstones never match (writer contract: non-null)
+              if (vals.contains(null)) None
+              else Some(vals.toVector -> r.getLong(keys.length))
+            }.toMap
+          val seqDir = Paths.get(dir, EqDel.SeqSidecar)
+          val fs: Map[String, Long] =
+            if (!Files.isDirectory(seqDir)) Map.empty
+            else spark.read.parquet(seqDir.toString)
+              .groupBy(col("file")).agg(max(col("seq")).as("seq"))
+              .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          (keys, ms, fs)
         }
-        sig.toString
-      }
-    }.mkString(",")
-
-  private def sidecars(spark: SparkSession, dir: String): SideCache = {
-    val key = s"${org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark)}|" +
-      s"$dir|${sideStamp(dir)}"
-    val hit = sideMemo.get(key)
-    if (hit != null) return hit
-    val dvEntries = Dv.bitmapEntries(spark, dir)
-    val (eqKeys, maxSeq, fileSeq) =
-      if (!EqDel.exists(dir)) (Nil, Map.empty[Vector[Any], Long], Map.empty[String, Long])
-      else {
-        import org.apache.spark.sql.functions.{col, max}
-        val dels = spark.read.parquet(s"$dir/${EqDel.Sidecar}")
-        val keys = dels.columns.filterNot(_ == SeqCol).toSeq
-        val converters = dels.schema.filter(f => keys.contains(f.name)).map { f =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToCatalystConverter(f.dataType)
-        }
-        val ms: Map[Vector[Any], Long] = dels
-          .groupBy(keys.map(col): _*)
-          .agg(max(col(SeqCol)).as(SeqCol))
-          .collect()
-          .flatMap { r =>
-            val vals = keys.indices.map(i =>
-              if (r.isNullAt(i)) null else converters(i)(r.get(i)))
-            // null-keyed tombstones never match (writer contract: non-null)
-            if (vals.contains(null)) None
-            else Some(vals.toVector -> r.getLong(keys.length))
-          }.toMap
-        val seqDir = Paths.get(dir, EqDel.SeqSidecar)
-        val fs: Map[String, Long] =
-          if (!Files.isDirectory(seqDir)) Map.empty
-          else spark.read.parquet(seqDir.toString)
-            .groupBy(col("file")).agg(max(col("seq")).as("seq"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        (keys, ms, fs)
-      }
-    val computed = SideCache(dvEntries, eqKeys, maxSeq, fileSeq)
-    if (sideMemo.size > 8) sideMemo.clear()
-    sideMemo.put(key, computed)
-    computed
-  }
+      SideCache(dvEntries, eqKeys, maxSeq, fileSeq)
+    }
 
   /** Build the wrapping reader factory for the (already augmented)
     * current scan. Driver-side: collects the metadata-scale sidecars

@@ -214,27 +214,23 @@ object AnnIndex {
   }
 
   // The DECODED quantizer (label → centroid, sorted by label) of index
-  // version dir `live`, memoized per (session, version dir) like the PQ
-  // codebook below: the sidecar is a few KB and immutable per version
-  // (a rebuild resolves to a new dir and misses), so collecting it once
-  // per version removes the per-search centroid-side stages outright —
-  // see [[probeLive]]. The caller resolves once and the value is read
-  // from that same dir, so a concurrent rebuild can never file one
-  // version's quantizer under another's key.
-  private val centroidArrMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Seq[Double])]]()
+  // version dir `live`: collecting the few-KB sidecar once per version
+  // removes the per-search centroid-side stages outright — see
+  // [[probeLive]]. The caller resolves once and the value is read from
+  // that same dir, so a concurrent rebuild can never file one version's
+  // quantizer under another's key.
+  private val centroidArrMemo = new VersionMemo[Seq[(Long, Seq[Double])]](256)
   private[graft] def centroidsDecoded(spark: SparkSession,
       live: String): Seq[(Long, Seq[Double])] = {
     val p = centroidsDir(live) // existence / loud-failure contract first
-    if (centroidArrMemo.size > 256) centroidArrMemo.clear()
-    centroidArrMemo.computeIfAbsent(
-      s"${org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark)}|$live",
-      _ => sidecarFrame(spark, p)
+    centroidArrMemo(spark, Seq(p)) {
+      spark.read.parquet(p)
         .select(col("label").cast("long"),
           col("centroid").cast("array<double>"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        .sortBy(_._1).toSeq)
+        .sortBy(_._1).toSeq
+    }
   }
 
   /** Per-query probe-bucket ranking against the LIVE persisted
@@ -271,54 +267,26 @@ object AnnIndex {
       .select(col("query_id"), col("qvec"), col("p.label").as("label"))
   }
 
-  // The DECODED codebook array, memoized per (session, live version
-  // dir) like [[sidecarFrame]]: the codebook is immutable per version
-  // (a rebuild resolves to a new dir and misses), and without the memo
+  // The DECODED codebook array of the live version: without the memo
   // every searchPq call paid one collect job at plan-construction time
   // — pure driver latency in the probe-many serving pattern.
-  private val pqBooksMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Double]]]]()
+  private val pqBooksMemo = new VersionMemo[Array[Array[Array[Double]]]](256)
   private def pqBooksDecoded(spark: SparkSession,
       root: String): Array[Array[Array[Double]]] = {
-    val live = Sinks.resolve(root)
-    if (pqBooksMemo.size > 256) pqBooksMemo.clear()
-    pqBooksMemo.computeIfAbsent(
-      s"${org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark)}|$live",
-      _ => Pq.fromFrame(pqBooks(spark, root)))
+    val p = pqBooksDir(Sinks.resolve(root))
+    pqBooksMemo(spark, Seq(p))(Pq.fromFrame(spark.read.parquet(p)))
   }
 
   /** The persisted PQ codebooks of the LIVE index version. */
-  def pqBooks(spark: SparkSession, root: String): DataFrame = {
-    val live = Sinks.resolve(root)
+  def pqBooks(spark: SparkSession, root: String): DataFrame =
+    spark.read.parquet(pqBooksDir(Sinks.resolve(root)))
+
+  private def pqBooksDir(live: String): String = {
     val p = s"$live/${Pq.Sidecar}"
     require(Files.isDirectory(Paths.get(p)),
       s"no ${Pq.Sidecar} under $live — not a PQ index; build with " +
         "AnnIndex.buildFixedPq")
-    sidecarFrame(spark, p)
-  }
-
-  /** Session-scoped memo of a sidecar read keyed by its VERSION-DIR
-    * path: version dirs are immutable once committed (a rebuild or
-    * append resolves to a NEW dir and misses), so the file listing +
-    * footer inference `spark.read.parquet` performs per call is pure
-    * waste in the probe-many serving pattern — each two-stage search
-    * read the quantizer twice (shortlist + rerank probe) and the PQ
-    * path the codebooks besides, all driver-side latency per query.
-    * Existence is still re-checked by every caller before the memo, so
-    * a hand-damaged index keeps failing loudly. Bounded: cleared
-    * wholesale past 256 entries (each entry is a tiny lazy frame).
-    * Keyed by `spark.sessionUUID` — stable for a session's lifetime and
-    * never reused, unlike an identity hash, which a NEW session can
-    * collide on after the old one is GC'd and thereby receive a cached
-    * frame bound to the dead session (round-11 advisor finding).
-    */
-  private val sidecars =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def sidecarFrame(spark: SparkSession, path: String): DataFrame = {
-    if (sidecars.size > 256) sidecars.clear()
-    sidecars.computeIfAbsent(
-      s"${org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark)}|$path",
-      _ => spark.read.parquet(path))
+    p
   }
 
   /** The SQ8 approx pass (stage 1 of [[searchSq8]]), exposed so the spec
@@ -506,7 +474,7 @@ object AnnIndex {
 
   /** The persisted quantizer of the LIVE index version. */
   def centroids(spark: SparkSession, root: String): DataFrame =
-    sidecarFrame(spark, centroidsDir(Sinks.resolve(root)))
+    spark.read.parquet(centroidsDir(Sinks.resolve(root)))
 
   /** The quantizer sidecar of index version dir `live`, failing loudly
     * when it is missing.

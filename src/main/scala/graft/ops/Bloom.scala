@@ -170,22 +170,12 @@ object Bloom {
     * indexed column set — an append must not silently demote a table
     * from point-skippable to full-scan.
     */
-  // Session-scoped memo keyed on the sidecar dir's content stamp —
-  // same discipline (and same rationale) as Stats.sidecarCols: each
-  // call was a distinct+collect Spark job at plan/commit time.
-  private val sidecarColsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), Seq[String]]()
+  private val colsMemo = new VersionMemo[Seq[String]](4096)
 
   def sidecarCols(spark: SparkSession, dir: String): Seq[String] =
-    if (!Files.isDirectory(Paths.get(dir, Sidecar))) Nil
-    else {
-      val stamp =
-        try graft.ops.Sinks.dirStamp(s"$dir/$Sidecar")
-        catch { case _: java.io.IOException => java.util.UUID.randomUUID.toString }
-      val key = (org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark),
-        Paths.get(dir).toAbsolutePath.normalize.toString, stamp)
-      if (sidecarColsMemo.size > 4096) sidecarColsMemo.clear()
-      sidecarColsMemo.computeIfAbsent(key, _ => {
+    colsMemo(spark, Seq(s"$dir/$Sidecar")) {
+      if (!Files.isDirectory(Paths.get(dir, Sidecar))) Nil
+      else {
         import spark.implicits._
         // tombstoned (metadata-dropped) columns leave the indexed set —
         // same shedding contract as Stats.sidecarCols
@@ -193,7 +183,7 @@ object Bloom {
         spark.read.parquet(s"$dir/$Sidecar")
           .select("cname").distinct().as[String].collect().toSeq
           .filterNot(c => gone.contains(c.toLowerCase)).sorted
-      })
+      }
     }
 
   /** Rewrite `dir`'s bloom sidecar to ONE file holding only rows whose

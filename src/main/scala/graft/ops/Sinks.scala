@@ -286,55 +286,20 @@ object Sinks
       p: String): Option[org.apache.spark.sql.types.StructType] =
     specStamp(p).getOrElse(TableProps.partitionSchema(root))
 
-  /** Memoized parquet schema inference over one directory. A flat
-    * directory (no partition subdirectories) is inferred on the driver
-    * from one footer ([[footerSchema]]) — no Spark job. A partitioned
-    * directory keeps Spark's own inference, which also discovers the
-    * partition columns and runs as a driver-blocking job (footer read +
-    * Hadoop-conf broadcast, tens of ms of fixed overhead). Either way a
-    * single DDL/DML statement's analysis infers the same version dir
-    * several times, so the result is memoized: version dirs are
-    * immutable once their stage→vN rename lands, and the stamp guards
-    * the cases where a PATH is nonetheless reused (drop+recreate
-    * restarting at v0, a stage dir growing mid-build, sidecar folds) by
-    * walking the data files' names, sizes and mtimes — O(files) stat
-    * calls, the same walk every commit already does. Keyed per session
-    * (inference obeys session confs).
+  /** Parquet schema inference over one directory, memoized per stamped
+    * version dir ([[VersionMemo]]): one DDL/DML statement's analysis
+    * infers the same version dir several times. A flat directory (no
+    * partition subdirectories) is inferred on the driver from one
+    * footer ([[footerSchema]]) — no Spark job. A partitioned directory
+    * keeps Spark's own inference, which also discovers the partition
+    * columns and runs as a driver-blocking job.
     */
-  private val inferMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), org.apache.spark.sql.types.StructType]()
-  private[graft] def dirStamp(p: String): String = {
-    val d = Paths.get(p)
-    val top = Files.readAttributes(d,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val files = Fs.walkParquet(d)
-    val sig = files.foldLeft((0L, 0L, 0L, 0L)) { case ((n, bytes, mt, hh), f) =>
-      val a = Files.readAttributes(f,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      (n + 1, bytes + a.size,
-        math.max(mt, a.lastModifiedTime.toMillis),
-        hh + d.relativize(f).toString.hashCode.toLong)
-    }
-    s"${top.fileKey}|${top.lastModifiedTime.toMillis}|$sig"
-  }
+  private val inferMemo = new VersionMemo[org.apache.spark.sql.types.StructType](4096)
   private[graft] def inferSchema(spark: SparkSession, p: String)
-      : org.apache.spark.sql.types.StructType = {
-    val stamp =
-      try dirStamp(p)
-      catch { case _: java.io.IOException => return spark.read.parquet(p).schema }
-    // sessionUUID, not an identity hash: a NEW session can collide with
-    // a GC'd one's hash and adopt a schema inferred under different
-    // session confs (the round-11 advisor finding on the sidecar memo)
-    val key = (org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark), p, stamp)
-    val hit = inferMemo.get(key)
-    if (hit != null) hit
-    else {
-      val s = footerSchema(spark, p).getOrElse(spark.read.parquet(p).schema)
-      if (inferMemo.size > 4096) inferMemo.clear() // crude bound; refill is cheap
-      inferMemo.put(key, s)
-      s
+      : org.apache.spark.sql.types.StructType =
+    inferMemo(spark, Seq(p)) {
+      footerSchema(spark, p).getOrElse(spark.read.parquet(p).schema)
     }
-  }
 
   /** Spark's non-merging parquet inference of FLAT directory `p`, run on
     * the driver: the first visible data file by path — the one file
@@ -342,8 +307,8 @@ object Sinks
     * read through parquet-hadoop and converted by Spark's own
     * footer-to-schema rule under the session's parquet confs, then made
     * nullable as a file-source relation does. One footer read on top of
-    * one directory listing. None when `p` holds a partition
-    * subdirectory, a summary file, no data file, or an unreadable
+    * one directory listing. None when `p` is no directory, holds a
+    * partition subdirectory, a summary file, no data file, or an unreadable
     * footer: the caller then runs Spark's inference, which also owns
     * the errors.
     */
@@ -354,6 +319,7 @@ object Sinks
     // Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName)
     def hidden(n: String) = n.startsWith(".") || n.endsWith("._COPYING_") ||
       (n.startsWith("_") && !n.contains("="))
+    if (!Files.isDirectory(Paths.get(p))) return None
     val entries = Fs.listDir(Paths.get(p))
     val summary = entries.exists { c =>
       val n = c.getFileName.toString

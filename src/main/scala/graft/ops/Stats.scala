@@ -63,6 +63,19 @@ case class FileColStat(file: String, col: String, rows: Long, nulls: Long,
     hll: Option[Array[Byte]] = None,
     hist: Option[Seq[Double]] = None)
 
+/** The collected `_stats` rows of one version dir
+  * ([[Stats.sidecarRows]]), padded to [[Stats.SidecarLayout]];
+  * `columns` is the set the sidecar really carries.
+  */
+private[graft] final case class SidecarRows(rows: Array[org.apache.spark.sql.Row],
+    columns: Set[String]) {
+  lazy val byFile: Map[String, Array[org.apache.spark.sql.Row]] =
+    rows.groupBy(_.getString(0))
+  /** Rows by (file, lower-cased column). */
+  lazy val byFileCol: Map[(String, String), org.apache.spark.sql.Row] =
+    rows.map(r => (r.getString(0), r.getString(1).toLowerCase) -> r).toMap
+}
+
 /** File-level data skipping over parquet tables (the Delta/Iceberg
   * "file statistics" capability): per-file min/max collected from parquet
   * FOOTERS — metadata pages only, never a data scan — into a `_stats`
@@ -223,10 +236,6 @@ object Stats {
     val upgraded = exactDataPass(spark, files, colSet, stats, ndvSet, histSet)
     upgraded.coalesce(1).write.mode(if (append) "append" else "overwrite")
       .parquet(s"$dir/$Sidecar")
-    // an in-place retrofit of an already-memoized version dir must not
-    // leave the pruning memo on the older (more conservative) rows
-    val canon = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-    boundsMemo.keySet.removeIf(_._1 == canon)
   }
 
   /** Exact string bounds stay answering-grade only while they stay
@@ -452,16 +461,15 @@ object Stats {
     * paths under `dir`) — [[graft.plans.StatsSkipRule]]'s "did the
     * prune skip any real rows" gate. A file without a sidecar row is
     * unknown and reports Long.MaxValue (the caller then treats the
-    * prune as real). Metadata-scale: one sidecar read.
+    * prune as real). Served from [[sidecarRows]].
     */
   private[graft] def maxRowsOf(spark: SparkSession, dir: String,
       abs: Set[String]): Long = {
     if (abs.isEmpty) return 0L
     if (!java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(dir, Sidecar))) return Long.MaxValue
-    val rows = sidecar(spark, dir).select("file", "rows").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    abs.map(a => rows.getOrElse(relKey(dir, a), Long.MaxValue))
+    val byFile = sidecarRows(spark, dir).byFile
+    abs.map(a => byFile.get(relKey(dir, a)).fold(Long.MaxValue)(_.head.getLong(2)))
       .foldLeft(0L)(math.max)
   }
 
@@ -664,42 +672,57 @@ object Stats {
   def sidecar(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(s"$dir/$Sidecar")
 
+  /** Every `_stats` column in one fixed order, typed as
+    * [[FileColStat]] writes it: [[sidecarRows]] pads the columns an
+    * older sidecar lacks with typed nulls, so row indices stay stable
+    * across eras.
+    */
+  private[graft] val SidecarLayout: Seq[String] = Seq("file", "col", "rows",
+    "nulls", "has_stats", "lo_l", "hi_l", "lo_d", "hi_d", "lo_t", "hi_t",
+    "t_adj", "t_exact", "lo_s", "hi_s", "s_exact", "dec_scale", "sum_l",
+    "hll", "hist")
+
+  private val rowsMemo = new VersionMemo[SidecarRows](256)
+
+  /** The `_stats` rows of version dir `dir` in [[SidecarLayout]] order,
+    * collected once per stamped version: every plan-time consumer
+    * (pruning, row-count gates, metadata answers, CBO statistics)
+    * derives from this one read. `columns` names the columns the sidecar
+    * really carries — an all-null padded column must never read as
+    * "all-null data", only as "this sidecar cannot answer". No rows
+    * when the version has no sidecar.
+    */
+  private[graft] def sidecarRows(spark: SparkSession, dir: String): SidecarRows = {
+    val path = s"$dir/$Sidecar"
+    rowsMemo(spark, Seq(path)) {
+      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path)))
+        SidecarRows(Array.empty, Set.empty)
+      else {
+        val raw = sidecar(spark, dir)
+        val types = org.apache.spark.sql.Encoders.product[FileColStat].schema
+        SidecarRows(raw.select(SidecarLayout.map(n =>
+          if (raw.columns.contains(n)) col(n)
+          else lit(null).cast(types(n).dataType).as(n)): _*).collect(),
+          raw.columns.toSet)
+      }
+    }
+  }
+
   /** Distinct columns recorded in version dir `dir`'s sidecar (sorted),
     * or Nil when it has none — what a rewrite/append must re-annotate so
     * it never silently demotes a skippable table to full scans. Shared
     * by compaction, appends, and INSERT OVERWRITE.
     */
-  // Session-scoped memo (the inferSchema treatment): every linked
-  // commit, rewrite, compaction AND StatsSkipRule planning pass asks
-  // for the recorded column set, and each call was a distinct+collect
-  // Spark job over the sidecar (plus a mergeSchema footer job) —
-  // stack-sampled as a top driver cost of the warehouse query family.
-  // The stamp walks the sidecar dir's part names/sizes/mtimes, so an
-  // in-place retrofit ([[annotatePairs]]) or a carried-part append
-  // misses naturally; version dirs are otherwise immutable.
-  private val sidecarColsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), Seq[String]]()
-
-  def sidecarCols(spark: SparkSession, dir: String): Seq[String] =
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, Sidecar))) {
-      val stamp =
-        try Sinks.dirStamp(s"$dir/$Sidecar")
-        catch { case _: java.io.IOException => java.util.UUID.randomUUID.toString }
-      val key = (org.apache.spark.sql.graft.ExprBridge.sessionUUID(spark),
-        java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString, stamp)
-      if (sidecarColsMemo.size > 4096) sidecarColsMemo.clear()
-      sidecarColsMemo.computeIfAbsent(key, _ => {
-        // a metadata-dropped column sheds its stats entries everywhere at
-        // once: carried rows keyed by a tombstoned physical are inert (no
-        // predicate can name the column) and must not propagate into the
-        // re-annotation set of appends/rewrites — the new files don't
-        // carry the column at all
-        val gone = ColMap.dropped(dir).map(_.toLowerCase)
-        sidecar(spark, dir).select("col").distinct()
-          .collect().map(_.getString(0)).toSeq
-          .filterNot(c => gone.contains(c.toLowerCase)).sorted
-      })
-    } else Nil
+  def sidecarCols(spark: SparkSession, dir: String): Seq[String] = {
+    // a metadata-dropped column sheds its stats entries everywhere at
+    // once: carried rows keyed by a tombstoned physical are inert (no
+    // predicate can name the column) and must not propagate into the
+    // re-annotation set of appends/rewrites — the new files don't
+    // carry the column at all
+    val gone = ColMap.dropped(dir).map(_.toLowerCase)
+    sidecarRows(spark, dir).rows.map(_.getString(1)).distinct.toSeq
+      .filterNot(c => gone.contains(c.toLowerCase)).sorted
+  }
 
   /** Files of `dir` that MIGHT contain a row with `colName` in
     * `[lo, hi]` (inclusive), per the sidecar. Conservative by
@@ -719,9 +742,6 @@ object Stats {
     * max is below 10). At least one bound must be present; an all-null
     * file prunes under any bound (a range predicate never matches null).
     */
-  private val boundsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Map[String, org.apache.spark.sql.Row]]()
-
   def prunedFilesBounds(spark: SparkSession, dir: String,
       colName: String, lo: Option[Any], hi: Option[Any]): Seq[String] = {
     require(lo.isDefined || hi.isDefined, "at least one bound is required")
@@ -737,30 +757,15 @@ object Stats {
     // the sidecar speaks PHYSICAL names; accept a logical name under a
     // column mapping (idempotent — a physical name maps to itself)
     val physName = ColMap.toPhysicalName(dir, colName)
-    // Session-scoped memo (round-14, the MetaCountRewrite treatment):
-    // version dirs are immutable, so the per-(dir, column) collected
-    // rows never change except through an in-place retrofit
-    // ([[annotatePairs]] invalidates). Without this every pruning
-    // conjunct of every SQL query paid one sidecar collect at PLAN
-    // time — metadata-scale but latency-visible on dashboards that
-    // fire the same pruned probe repeatedly.
-    val memoKey = (java.nio.file.Paths.get(dir).toAbsolutePath
-      .normalize.toString, physName)
-    if (boundsMemo.size > 256) boundsMemo.clear()
-    val side = boundsMemo.computeIfAbsent(memoKey, _ =>
-      sidecar(spark, dir).filter(col("col") === physName)
-        .collect().map { r =>
-          r.getAs[String]("file") -> r
-        }.toMap)
+    val side = sidecarRows(spark, dir).rows
+      .filter(_.getString(1) == physName).map(r => r.getString(0) -> r).toMap
     // NTZ stats vs instant bounds (or vice versa) only coincide when
     // the session renders instants in UTC; elsewhere keep the file
     val sessionUtc = java.time.ZoneId
       .of(spark.sessionState.conf.sessionLocalTimeZone).normalized() ==
       java.time.ZoneOffset.UTC
-    def notNull(r: org.apache.spark.sql.Row, f: String): Boolean = {
-      val i = r.schema.fieldNames.indexOf(f) // pre-round-13 sidecars lack lo_t
-      i >= 0 && !r.isNullAt(i)
-    }
+    def notNull(r: org.apache.spark.sql.Row, f: String): Boolean =
+      !r.isNullAt(r.fieldIndex(f))
     all.filter { f =>
       side.get(f.stripPrefix(dir).stripPrefix("/")) match {
         case None => true // no stats row → cannot prune

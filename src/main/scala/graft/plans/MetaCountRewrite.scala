@@ -437,10 +437,9 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     val live = graft.io.Fs.walkParquet(Paths.get(dir))
       .map(_.toString.stripPrefix(dir).stripPrefix("/")).toSet
     if (live.isEmpty) return None
-    val (srows, flags) = answeringRows(dir)
+    val (side, flags) = answeringRows(dir)
     val SideFlags(fHasTs, fHasS, fHasSum) = flags
-    val byFileCol = srows.map(r => (r.getString(0), r.getString(1).toLowerCase) -> r).toMap
-    val byFile = srows.groupBy(_.getString(0))
+    val (byFile, byFileCol) = (side.byFile, side.byFileCol)
     // row counts must cover every live file or interior sums are unprovable
     if (!live.forall(byFile.contains)) return None
     val partSchema = graft.ops.Sinks.partitionSchemaFor(t.snapshotTableRoot, dir)
@@ -671,10 +670,8 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     val live = graft.io.Fs.walkParquet(Paths.get(dir))
       .map(_.toString.stripPrefix(dir).stripPrefix("/")).toSet
     if (live.isEmpty) return None
-    val (srows, gflags) = answeringRows(dir)
-    val byFileCol = srows.map(r =>
-      (r.getString(0), r.getString(1).toLowerCase) -> r).toMap
-    val byFile = srows.groupBy(_.getString(0))
+    val (side, gflags) = answeringRows(dir)
+    val (byFile, byFileCol) = (side.byFile, side.byFileCol)
     if (!live.forall(byFile.contains)) return None
     val sessionUtc = java.time.ZoneId
       .of(spark.sessionState.conf.sessionLocalTimeZone).normalized() ==
@@ -754,6 +751,7 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
           case None => None
           case Some(o) => Some(o.map(Double.box).orNull)
         }
+      case DistinctPart(_) => None // a grouped distinct never reaches here
     }
     if (boundaryB.isEmpty) {
       // pure metadata answer: every file is ALL or NONE
@@ -1096,57 +1094,18 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
         else Some(Some(total.toDouble / n))
     }
 
-  /** Session-scoped memo of the collected ANSWERING-domain sidecar rows
-    * per version dir (round-14; the round-13 verdict's efficiency note:
-    * every qualifying aggregate re-read the sidecar at plan time).
-    * Version dirs are immutable once committed, so the memo key only
-    * needs the dir — but the sidecar's mtime + part count join it so a
-    * deliberately-rewritten sidecar (era simulations, manual repair)
-    * misses rather than serving stale rows. Bounded: cleared wholesale
-    * past 256 entries, each an O(files × cols) row array.
-    */
-  private val sidecarMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row], SideFlags)]()
-
-  /** The `_stats` rows of `dir` projected onto the FIXED answering
-    * layout (absent era columns padded with typed nulls so row indices
-    * stay stable; the returned [[SideFlags]] still gate the DECLINE
-    * decision — an all-null padded column must never read as "all-null
-    * data", only as "this sidecar cannot answer").
+  /** The `_stats` rows of `dir` ([[graft.ops.Stats.sidecarRows]]: the
+    * fixed layout, absent era columns padded with typed nulls so row
+    * indices stay stable) and the [[SideFlags]] that still gate the
+    * DECLINE decision — an all-null padded column must never read as
+    * "all-null data", only as "this sidecar cannot answer".
     */
   private[graft] def answeringRows(dir: String)
-      : (Array[org.apache.spark.sql.Row], SideFlags) = {
-    val sidecar = Paths.get(dir, graft.ops.Stats.Sidecar)
-    val parts = graft.io.Fs.listDir(sidecar)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val stamp = parts.size + ":" +
-      (if (parts.isEmpty) "0"
-       else parts.map(p => Files.getLastModifiedTime(p).toMillis).max.toString)
-    val key = s"${org.apache.spark.sql.graft.ExprBridge.sessionUUID(SparkSession.active)}|$dir|$stamp"
-    if (sidecarMemo.size > 256) sidecarMemo.clear()
-    sidecarMemo.computeIfAbsent(key, _ => {
-      val raw = SparkSession.active.read.option("mergeSchema", "true")
-        .parquet(sidecar.toString)
-      val flags = SideFlags(
-        hasTs = raw.columns.contains("lo_t") && raw.columns.contains("t_exact"),
-        hasS = raw.columns.contains("s_exact"),
-        hasSum = raw.columns.contains("sum_l"))
-      import org.apache.spark.sql.functions.{col => c, lit}
-      def opt(name: String, dt: DataType) =
-        if (raw.columns.contains(name)) c(name) else lit(null).cast(dt).as(name)
-      (raw.select(
-        c("file"), c("col"), c("rows"), c("nulls"), c("has_stats"),
-        c("lo_l"), c("hi_l"), c("lo_d"), c("hi_d"),
-        opt("lo_t", LongType), opt("hi_t", LongType),
-        opt("t_adj", org.apache.spark.sql.types.BooleanType),
-        opt("t_exact", org.apache.spark.sql.types.BooleanType),
-        opt("lo_s", org.apache.spark.sql.types.StringType),
-        opt("hi_s", org.apache.spark.sql.types.StringType),
-        opt("s_exact", org.apache.spark.sql.types.BooleanType),
-        opt("dec_scale", IntegerType),
-        opt("sum_l", LongType))
-        .collect(), flags)
-    })
+      : (graft.ops.SidecarRows, SideFlags) = {
+    val side = graft.ops.Stats.sidecarRows(SparkSession.active, dir)
+    (side, SideFlags(
+      hasTs = side.columns("lo_t") && side.columns("t_exact"),
+      hasS = side.columns("s_exact"), hasSum = side.columns("sum_l")))
   }
 
   /** Answer each requested aggregate from the sidecar, or None when any
@@ -1177,16 +1136,12 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     val live = graft.io.Fs.walkParquet(Paths.get(dir))
       .map(_.toString.stripPrefix(dir).stripPrefix("/")).toSet
     if (live.isEmpty) return None
-    // the sidecar is metadata-scale (one row per file×column); the
-    // nested read contains no aggregate, so the rule cannot re-enter.
-    // mergeSchema: a dir can mix pre- and post-round-13 parts; the
-    // timestamp columns are selected only when present (old sidecars
-    // then decline timestamp bounds, never mis-answer them)
-    val (rows, flags) = answeringRows(dir)
+    // the nested sidecar read contains no aggregate, so the rule cannot
+    // re-enter; old sidecars decline timestamp bounds (flags), never
+    // mis-answer them
+    val (side, flags) = answeringRows(dir)
     val SideFlags(hasTs, hasS, _) = flags
-    val byFile = rows.groupBy(_.getString(0))
-    val byFileCol = rows.map(r =>
-      (r.getString(0), r.getString(1).toLowerCase) -> r).toMap
+    val (byFile, byFileCol) = (side.byFile, side.byFileCol)
     if (!live.forall(byFile.contains)) return None
     // every live file's trusted entry for column `c`, or None (decline);
     // the sidecar speaks PHYSICAL names, the aggregate LOGICAL ones

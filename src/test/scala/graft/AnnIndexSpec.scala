@@ -564,4 +564,23 @@ class AnnIndexSpec extends AnyFunSuite {
     // memoized answers stay per version dir
     assert(AnnIndex.centroidsDecoded(spark, oldLive) == oldQ)
   }
+
+  test("an index deleted and rebuilt at the same root probes with the new quantizer") {
+    val root = tmp("annreroot")
+    val emb = Tables.embeddings(spark, sf001)
+    AnnIndex.buildFixed(spark, emb, root)
+    val live = Sinks.resolve(root)
+    AnnIndex.probeLive(spark, root, queries5, 3).collect() // warms the memos
+    graft.io.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    AnnIndex.buildFixed(spark, emb.withColumn("label", col("vec_id") % 3), root)
+    assert(Sinks.resolve(root) == live, "the rebuild must reuse the version dir path")
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("query_id").cast("long"), col("label").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val stored = spark.read.parquet(s"$live/${AnnIndex.CentroidsSidecar}")
+    val want = canon(Similarity.probeBuckets(stored, queries5, 3))
+    assert(want.map(_._2).toSet == Set(0L, 1L, 2L))
+    assert(canon(AnnIndex.probeLive(spark, root, queries5, 3)) == want,
+      "probes ranked the deleted index's quantizer")
+  }
 }

@@ -664,4 +664,44 @@ class MetaCountSpec extends AnyFunSuite {
     assert(v0.collect().head.getLong(0) == nation.count())
     assert(cur.collect().head.getLong(0) == 3)
   }
+
+  test("a _stats sidecar rewritten in place with the same part count and mtime is served fresh") {
+    root
+    val tbl = s"$root/restamp"
+    Sinks.publishVersioned(graft.io.Tables.nation(spark, sf001), tbl, None,
+      statsCols = Seq("n_nationkey"))
+    val sql = "SELECT count(*) AS n, min(n_nationkey) AS lo, max(n_nationkey) AS hi " +
+      "FROM graftmeta.restamp"
+    def answer(): Seq[Long] = {
+      val q = spark.sql(sql)
+      assert(isMetaOnly(q), s"\n${q.queryExecution.optimizedPlan}")
+      q.collect().head.toSeq.map(_.asInstanceOf[Number].longValue)
+    }
+    assert(answer() == Seq(25L, 0L, 24L))
+    VersionMemoSpec.rewriteStatsInPlace(spark, Sinks.resolve(tbl)) { r =>
+      VersionMemoSpec.updated(r, "rows" -> (r.getAs[Long]("rows") + 1000L),
+        "hi_l" -> 999L)
+    }
+    val files = graft.io.Fs.walkParquet(java.nio.file.Paths.get(Sinks.resolve(tbl))).size
+    assert(answer() == Seq(25L + 1000L * files, 0L, 999L),
+      "the memo served the old sidecar rows")
+  }
+
+  test("grouped count(DISTINCT partition col) over two partition columns matches the scan") {
+    root
+    import spark.implicits._
+    val tbl = s"$root/twoparts"
+    graft.ops.TableProps.update(tbl)(_ +
+      (graft.ops.TableProps.PartitionKey -> "p1 STRING, p2 STRING"))
+    val df = (0 until 120).map(i => (i.toLong, s"a${i % 3}", s"b${i % 4}"))
+      .toDF("k", "p1", "p2")
+    Sinks.publishVersioned(df, tbl, None, statsCols = Seq("k"))
+    val got = spark.sql("SELECT p1, count(DISTINCT p2) AS n FROM graftmeta.twoparts " +
+      "GROUP BY p1").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val want = Sinks.readCurrent(spark, tbl).groupBy("p1")
+      .agg(countDistinct(col("p2"))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == want && want == Map("a0" -> 4L, "a1" -> 4L, "a2" -> 4L),
+      s"got $got want $want")
+  }
 }

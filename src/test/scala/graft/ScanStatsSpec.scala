@@ -471,4 +471,19 @@ class ScanStatsSpec extends AnyFunSuite {
       s"ANALYZE TABLE $cat.f COMPUTE STATISTICS FOR COLUMNS nope"))
     assert(e.getMessage.contains("not in"), e.getMessage)
   }
+
+  test("a _stats sidecar rewritten in place with the same part count and mtime serves fresh statistics") {
+    val cat = mkCat()
+    spark.sql(s"CREATE TABLE $cat.t TBLPROPERTIES ('graft.stats.columns' = 'k') " +
+      "AS SELECT id AS k FROM range(0, 500)")
+    def rows(): Long =
+      scanOf(spark.table(s"$cat.t")).estimateStatistics().numRows.getAsLong
+    assert(rows() == 500L)
+    val live = graft.ops.Sinks.resolve(s"${spark.conf.get(s"spark.sql.catalog.$cat.root")}/t")
+    VersionMemoSpec.rewriteStatsInPlace(spark, live) { r =>
+      VersionMemoSpec.updated(r, "rows" -> (r.getAs[Long]("rows") + 1000L))
+    }
+    val files = graft.io.Fs.walkParquet(java.nio.file.Paths.get(live)).size
+    assert(rows() == 500L + 1000L * files, "the memo served the old sidecar rows")
+  }
 }

@@ -266,4 +266,24 @@ class SchemaProbeSpec extends AnyFunSuite {
       s"the StatsSkipRule swap submitted $swapJobs beyond the sidecar read's $sidecarJobs")
     assert(q.inputFiles.length == 1 && q.count() == 21)
   }
+
+  test("a warm stats-skipping swap submits no job: the sidecar rows come from the version memo") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val wh = tmp("probe_warm")
+    spark.conf.set("spark.sql.catalog.graftwarm", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graftwarm.root", wh)
+    Sinks.publishVersioned((0L until 400L).map(i => (i, s"v$i")).toDF("k", "v")
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
+      s"$wh/t", None, statsCols = Seq("k"))
+    val sql = "SELECT k, v FROM graftwarm.t WHERE k BETWEEN 100 AND 120"
+    spark.sql(sql).queryExecution.optimizedPlan // warms the sidecar memo
+    val q = spark.sql(sql)
+    val (optimized, jobs) = jobsOf(q.queryExecution.optimizedPlan)
+    assert(optimized.collectFirst {
+      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
+    }.isDefined, s"the filter did not swap to the pruned read: $optimized")
+    assert(jobs.isEmpty, s"the warm swap submitted jobs: $jobs")
+    assert(q.inputFiles.length == 1 && q.count() == 21)
+  }
 }
