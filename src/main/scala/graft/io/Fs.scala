@@ -37,6 +37,59 @@ object Fs {
     name.startsWith("_layout") && name.length > "_layout".length &&
       name.drop("_layout".length).forall(_.isDigit)
 
+  /** Write `rows` (external [[org.apache.spark.sql.Row]]s under `schema`)
+    * as ONE parquet part file in `dir`, on the driver — no Spark job. The
+    * part goes through Spark's own task-side writer
+    * (`ParquetUtils.prepareWrite` and its `ParquetOutputWriter`) under
+    * `spark`'s session confs: the same schema conversion, timestamp and
+    * decimal encodings, codec, part-name extension and Spark row-schema
+    * footer metadata as a part a write job lands, so it reads back under
+    * any reader's inference exactly like one. Meant for metadata-scale
+    * sidecar parts (the eq-delete `_eqseq` stamps and a small batch's
+    * `_eqdel` tombstones), where a distributed job costs more scheduling
+    * than writing.
+    */
+  def writePart(spark: org.apache.spark.sql.SparkSession, dir: Path,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Iterator[org.apache.spark.sql.Row]): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    Files.createDirectories(dir)
+    val sqlConf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    // raw local FS: the checksummed LocalFileSystem would drop a
+    // `.part-*.crc` next to the part (dot-hidden to every walker, but
+    // bytes a metadata part does not need)
+    job.getConfiguration.set("fs.file.impl",
+      classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val out = dir.resolve(
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    val writer = factory.newInstance(out.toUri.toString, schema, ctx)
+    try rows.foreach(r =>
+      writer.write(toInternal(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    finally writer.close()
+  }
+
+  /** Total row count of the parquet files `files`, from their footers —
+    * driver-side, no Spark job.
+    */
+  def parquetRows(files: Seq[Path]): Long = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
   /** Every `*.parquet` DATA file under `dir`, recursively — partition
     * subdirectories (`col=val/`) included, legacy-layout legs
     * (`_layout<k>/`, see [[isLayoutLeg]]) included, the layout's own
@@ -46,49 +99,6 @@ object Fs {
     * version's data; a plain Spark read of the directory sees only the
     * top-level (current-layout) subset because legs are `_`-hidden.
     */
-  /** Write a tiny `(file STRING, seq BIGINT)` table as ONE parquet part
-    * file, driver-side — no Spark job. The eq-delete `_eqseq` sidecar
-    * is O(files-per-commit) rows of a few dozen bytes each; submitting
-    * a distributed job to write it cost more scheduling than writing
-    * (every maintained-table commit paid one extra job). Schema merges
-    * cleanly with the Spark-written parts older commits carried
-    * (optional vs required binary → nullable string), and the part name
-    * follows the `part-*.parquet` convention every sidecar walker
-    * filters on. Snappy, like Spark's default.
-    */
-  def writeFileSeqParquet(dir: Path, rows: Seq[(String, Long)]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.schema.MessageTypeParser
-    Files.createDirectories(dir)
-    val schema = MessageTypeParser.parseMessageType(
-      "message eqseq { required binary file (UTF8); required int64 seq; }")
-    val out = dir.resolve(
-      s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet")
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    // raw local FS: the default (checksummed) LocalFileSystem would
-    // drop a stray .part-*.crc next to the part file — harmless
-    // (dot-hidden to every walker) but noise in a sidecar dir whose
-    // other parts Spark wrote without one
-    conf.set("fs.file.impl",
-      classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
-    val writer = ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(out.toUri), conf))
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    val factory = new SimpleGroupFactory(schema)
-    try rows.foreach { case (f, s) =>
-      val g = factory.newGroup()
-      g.append("file", f)
-      g.append("seq", s)
-      writer.write(g)
-    } finally writer.close()
-  }
-
   def walkParquet(dir: Path): Seq[Path] = {
     // Spark's own hidden-path rule (HadoopFSUtils): `.`-prefixed always
     // hidden; `_`-prefixed hidden UNLESS the name contains `=` — a

@@ -1,10 +1,11 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Equality deletes (SURVEY B-round-14; the Iceberg-v2 eq-delete
   * design): streaming CDC upserts WITHOUT a per-batch read phase.
@@ -17,7 +18,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * READERS apply the tombstones: a row is hidden iff some eq-delete
   * with a LATER sequence number carries its key. Commit cost is
   * O(batch); the read-side reconciliation is one (usually broadcast)
-  * anti-join that compaction folds away into real deletes.
+  * anti-join that compaction folds away into real deletes. The
+  * commit's work is one action: an `observe` node on the batch hands
+  * the row count and key tuples of the data-stage write to the driver,
+  * which writes the tombstone part itself through Spark's parquet
+  * writer — so a streaming micro-batch is the `dedupeBy` shuffle plus
+  * that write. A batch whose plan estimates [[ObservedKeysMaxBytes]]
+  * or more keeps its keys on the executors: it is pinned and the part
+  * is a distributed write ([[applyCdc]]).
   *
   * Sequencing: each commit's sidecar rows carry `__gf_seq` =
   * base-version + 1 (strictly increasing along any commit lineage —
@@ -55,6 +63,10 @@ object EqDel {
   val Sidecar = "_eqdel"
   val SeqSidecar = "_eqseq"
   private val SeqCol = "__gf_seq"
+  /** `_eqseq` rows: a data file's version-dir-relative key and its seq. */
+  private[ops] val SeqSchema = StructType(Seq(
+    StructField("file", org.apache.spark.sql.types.StringType, nullable = false),
+    StructField("seq", LongType, nullable = false)))
 
   def exists(dir: String): Boolean = {
     val p = Paths.get(dir, Sidecar)
@@ -233,35 +245,41 @@ object EqDel {
     * without replacing. O(batch) + hardlinks; no table read. Keys must
     * be non-null and unique within the batch (the MERGE multi-match
     * contract — two same-key rows in one batch would both survive).
+    * Without `extraDeletes` this is [[applyCdc]]'s plain-key route.
     */
   def upsertBatch(spark: SparkSession, batch: DataFrame, root: String,
       keys: Seq[String], extraDeletes: Option[DataFrame] = None,
       batchTag: Option[String] = None): Long = {
     require(keys.nonEmpty, "upsertBatch requires at least one key column")
-    keys.foreach(k => require(batch.columns.exists(_.equalsIgnoreCase(k)),
-      s"key column $k not in the batch (${batch.columns.mkString(", ")})"))
-    val delKeys = {
-      val fromRows = batch.select(keys.map(col): _*)
-      extraDeletes.fold(fromRows) { d =>
+    extraDeletes match {
+      case None => applyCdc(batch, root, keys, batchTag = batchTag)
+      case Some(d) =>
+        keys.foreach(k => require(batch.columns.exists(_.equalsIgnoreCase(k)),
+          s"key column $k not in the batch (${batch.columns.mkString(", ")})"))
         require(d.columns.map(_.toLowerCase).sorted.toSeq ==
             keys.map(_.toLowerCase).sorted,
           s"extraDeletes must carry exactly the key columns ${keys.mkString(", ")}")
-        fromRows.unionByName(d.select(keys.map(col): _*))
-      }
+        commitUpsert(batch, root, KeyFrame(
+          batch.select(keys.map(col): _*).unionByName(d.select(keys.map(col): _*))),
+          batchTag)
     }
-    commitUpsert(batch, root, delKeys, batchTag)
   }
 
-  /** The shared commit tail: `data`'s rows land as new files, `delKeys`
-    * rows become the commit's tombstones. Callers have validated both.
+  /** The shared commit tail: `data`'s rows land as new files, `tombs`
+    * become the commit's tombstones. Callers have validated both.
     */
   private def commitUpsert(data: DataFrame, root: String,
-      delKeys: DataFrame, batchTag: Option[String]): Long =
-    Sinks.appendVersioned(data, root, Sinks.currentVersion(root),
-      eqDelete = Some(delKeys), opTag = "eq-upsert", batchTag = batchTag)
+      tombs: Tombstones, batchTag: Option[String]): Long = {
+    val exp = Sinks.currentVersion(root)
+    Sinks.stageLinkedPublish(Sinks.alignToLive(data, root, exp), root, exp,
+      Nil, emitFeed = false, batchTag = batchTag, carry = _ => true,
+      opTag = "eq-upsert",
+      rebase = Sinks.AppendRebase(e => Sinks.alignToLive(data, root, e)),
+      eqDelete = Some(tombs))
+  }
 
   /** Exactly-once streaming upsert sink: each micro-batch is ONE blind
-    * [[upsertBatch]] commit — the bronze→silver CDC loop without the
+    * [[applyCdc]] commit — the bronze→silver CDC loop without the
     * per-batch MERGE join. Rows whose `opCol` (when given) equals
     * 'delete' tombstone their key without replacing it; every other
     * row upserts. `dedupeBy` (ordering columns, when given) collapses a
@@ -271,6 +289,8 @@ object EqDel {
     * sequence the CDC, they are not payload). Batch-id dedupe, restart
     * behavior, and CME retry are [[TableStream.streamTo]]'s, verbatim
     * (the same `_BATCHID` stamp + durable high-water-mark contract).
+    * A batch under [[ObservedKeysMaxBytes]] runs as two Spark jobs:
+    * the `dedupeBy` shuffle map stage and the data-stage write.
     */
   def upsertStreamTo(stream: DataFrame, root: String, checkpoint: String,
       keys: Seq[String], opCol: Option[String] = None,
@@ -281,46 +301,135 @@ object EqDel {
         ()
     }
 
+  /** Plan-size guard of [[applyCdc]]'s one-write route: a batch whose
+    * plan statistics estimate fewer bytes hands its tombstone keys to
+    * the driver through the data-stage write (an `observe` node), and
+    * the driver writes the `_eqdel` part. At or above it the keys never
+    * reach the driver, so a backfill-sized batch cannot exhaust it: the
+    * batch is pinned and the part is a distributed write. Decided from
+    * plan metadata before anything runs; an unknown estimate counts as
+    * large.
+    */
+  private[graft] val ObservedKeysMaxBytes: Long = 32L << 20
+
   /** One CDC batch, routed: optional `dedupeBy` ordering collapse,
-    * optional `opCol` delete/upsert split, then ONE blind
-    * [[upsertBatch]] commit. Shared by the streaming sink and the
+    * optional `opCol` delete/upsert split, then ONE blind upsert commit
+    * in which every collapsed row — upsert or delete — tombstones its
+    * key. Shared by the streaming sink, [[upsertBatch]] and the
     * `CALL graft.system.eq_upsert` SQL door. Returns the committed
-    * version.
+    * version (a streaming micro-batch with no rows leaves the table at
+    * its base version and publishes nothing).
+    *
+    * Below [[ObservedKeysMaxBytes]] the commit runs ONE action: the
+    * data-stage write, whose `observe` node (placed before the op
+    * filter, so it sees deletes too) collects the row count and the
+    * key tuples for the driver-written tombstone part. Nothing is
+    * pinned — a second pass would only re-run the source scan. At or
+    * above the guard the collapsed batch is pinned for the commit's
+    * two actions (the data stage and the distributed tombstone write;
+    * separate jobs share no exchange, so without the pin each would
+    * re-run the scan and the latest-per-key aggregation) and released
+    * in the finally.
     */
   def applyCdc(batch0: DataFrame, root: String, keys: Seq[String],
       opCol: Option[String] = None, dedupeBy: Seq[String] = Nil,
       batchTag: Option[String] = None): Long = {
     require(keys.nonEmpty, "applyCdc requires at least one key column")
-    val spark = batch0.sparkSession
     val collapsed =
       if (dedupeBy.isEmpty) batch0
       else Merge.latestPerKey(batch0, keys, dedupeBy).drop(dedupeBy: _*)
-    // The commit consumes this frame as SEVERAL separate actions (the
-    // data stage, the delete-key sidecar, the op split's two branches)
-    // — without a persist each action re-runs the source scan and the
-    // latest-per-key aggregation from scratch (separate jobs share no
-    // exchange). A micro-batch is batch-sized by contract, so pinning
-    // it for the commit's duration is the standard foreachBatch
-    // multiple-writes discipline, released in the finally.
-    val batch = collapsed.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      opCol match {
-        case None =>
-          upsertBatch(spark, batch, root, keys, batchTag = batchTag)
-        case Some(oc) =>
-          require(batch.columns.exists(_.equalsIgnoreCase(oc)),
-            s"op column $oc not in the batch (${batch.columns.mkString(", ")})")
-          keys.foreach(k => require(batch.columns.exists(_.equalsIgnoreCase(k)),
-            s"key column $k not in the batch (${batch.columns.mkString(", ")})"))
-          val ups = batch.filter(not(col(oc) <=> lit("delete"))).drop(oc)
-          // every collapsed row tombstones its key — upserts AND
-          // deletes — so the sidecar is ONE scan of the pinned batch
-          // (round-18): the old ups.keys ∪ delete.keys union evaluated
-          // two filtered branches over the cache to produce the
-          // identical multiset (each row lands in exactly one branch)
-          commitUpsert(ups, root, batch.select(keys.map(col): _*), batchTag)
+    opCol.foreach(oc => require(collapsed.columns.exists(_.equalsIgnoreCase(oc)),
+      s"op column $oc not in the batch (${collapsed.columns.mkString(", ")})"))
+    keys.foreach(k => require(collapsed.columns.exists(_.equalsIgnoreCase(k)),
+      s"key column $k not in the batch (${collapsed.columns.mkString(", ")})"))
+    def upserts(b: DataFrame): DataFrame =
+      opCol.fold(b)(oc => b.filter(not(col(oc) <=> lit("delete"))).drop(oc))
+    if (collapsed.queryExecution.analyzed.stats.sizeInBytes < ObservedKeysMaxBytes) {
+      val (observed, tombs) = ObservedKeys.attach(collapsed, keys)
+      commitUpsert(upserts(observed), root, tombs, batchTag)
+    } else {
+      val batch = collapsed.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try commitUpsert(upserts(batch), root,
+        KeyFrame(batch.select(keys.map(col): _*)), batchTag)
+      finally { batch.unpersist(); () }
+    }
+  }
+
+  /** Where an upsert commit's tombstone keys come from. The staging
+    * step writes them as the commit's `_eqdel` part at `__gf_seq` =
+    * base + 1, under the base version's physical column names.
+    */
+  private[ops] sealed trait Tombstones {
+    /** Write the part into `sidecar`. */
+    def stage(sidecar: Path, seq: Long, physical: String => String): Unit
+
+    /** How many tombstones [[stage]] wrote into `sidecar`. */
+    def count(sidecar: Path): Long =
+      graft.io.Fs.parquetRows(graft.io.Fs.listDir(sidecar)
+        .filter(_.getFileName.toString.endsWith(".parquet")))
+  }
+
+  /** Key tuples of a frame, written by a distributed job of their own. */
+  private[ops] final case class KeyFrame(keys: DataFrame) extends Tombstones {
+    def stage(sidecar: Path, seq: Long, physical: String => String): Unit =
+      Sinks.labeled(keys.sparkSession, "eq-delete tombstone sidecar") {
+        keys.select(keys.columns.toSeq.map(c => col(s"`$c`").as(physical(c))) :+
+            lit(seq).as(SeqCol): _*)
+          .coalesce(1).write.mode("overwrite").parquet(sidecar.toString)
       }
-    } finally { batch.unpersist(); () }
+  }
+
+  /** Key tuples an `observe` node collects while the data-stage write
+    * runs — the count of observed rows and every row's key tuple, which
+    * the driver then writes as one part ([[graft.io.Fs.writePart]]).
+    * The first [[stage]] waits for the write's metrics and keeps them,
+    * so a re-stage after a lost commit race (an auto-rebase re-runs the
+    * write, whose observation is already spent) rewrites the same keys
+    * at its own new base + 1. Metrics that never arrive (a listener bus
+    * that dropped the event) fall back to `keyFrame`'s distributed
+    * write. Built by [[ObservedKeys.attach]]; lives only as long as the
+    * commit that holds it.
+    */
+  private[ops] final class ObservedKeys private (obs: Observation,
+      keyFrame: DataFrame) extends Tombstones {
+    private lazy val delivered: Option[(Long, Seq[Row])] =
+      try {
+        val r = scala.concurrent.Await.result(obs.future,
+          scala.concurrent.duration.Duration(ObservedKeys.WaitSeconds, "s"))
+        Some((r.getLong(0), r.getSeq[Row](1)))
+      } catch { case _: java.util.concurrent.TimeoutException =>
+        System.err.println("[graft] the data-stage write delivered no tombstone " +
+          s"keys within ${ObservedKeys.WaitSeconds} s; writing them with a job")
+        None
+      }
+
+    def stage(sidecar: Path, seq: Long, physical: String => String): Unit =
+      delivered match {
+        case Some((_, rows)) =>
+          graft.io.Fs.writePart(keyFrame.sparkSession, sidecar,
+            StructType(keyFrame.schema.fields.map(f => f.copy(name = physical(f.name))) :+
+              StructField(SeqCol, LongType, nullable = false)),
+            rows.iterator.map(r => Row.fromSeq(r.toSeq :+ seq)))
+        case None => KeyFrame(keyFrame).stage(sidecar, seq, physical)
+      }
+
+    override def count(sidecar: Path): Long =
+      delivered.fold(super.count(sidecar))(_._1)
+  }
+
+  private[ops] object ObservedKeys {
+    private val WaitSeconds = 60L
+
+    /** `df` with an `observe` node that records its row count and key
+      * tuples, and the [[ObservedKeys]] that reads them once an action
+      * on the returned frame (or a frame derived from it) has run.
+      */
+    def attach(df: DataFrame, keys: Seq[String]): (DataFrame, ObservedKeys) = {
+      val obs = Observation()
+      val keyCols = keys.map(col)
+      (df.observe(obs, count(lit(1)), collect_list(struct(keyCols: _*))),
+        new ObservedKeys(obs, df.select(keyCols: _*)))
+    }
   }
 }

@@ -950,7 +950,11 @@ object Sinks
     * committed feed disagree with the committed data.
     *
     * `batchTag`: provenance marker for streaming writers (see
-    * [[BatchIdFile]]).
+    * [[BatchIdFile]]). A tagged commit is a streaming micro-batch: when
+    * it stages no row (and no tombstone) on an existing table it
+    * publishes nothing and returns the base version — the streaming
+    * doors still advance their high-water mark. Untagged writers
+    * publish empty commits.
     *
     * `rebase` (default true): a lost commit race auto-rebases — the
     * append re-stages against the moved table and commits, O(delta),
@@ -964,16 +968,13 @@ object Sinks
       batchTag: Option[String] = None,
       commitSidecars: Seq[(String, DataFrame)] = Nil,
       opTag: String = "append",
-      rebase: Boolean = true,
-      eqDelete: Option[DataFrame] = None): Long = {
+      rebase: Boolean = true): Long =
     stageLinkedPublish(alignToLive(df, root, expected), root, expected,
       statsCols, emitFeed, batchTag,
       carry = _ => true, commitSidecars = commitSidecars, opTag = opTag,
       rebase =
         if (rebase) AppendRebase(exp => alignToLive(df, root, exp))
-        else NoRebase,
-      eqDelete = eqDelete)
-  }
+        else NoRebase)
 
   /** Align an append frame to the live schema: same column set and
     * order, or fail loudly — shared by [[appendVersioned]] and the
@@ -1113,16 +1114,17 @@ object Sinks
       opTag: String = "append",
       replaceSidecars: Seq[(String, DataFrame)] = Nil,
       rebase: RebasePolicy = NoRebase,
-      eqDelete: Option[DataFrame] = None): Long = {
-    def stageFor(frame: DataFrame, exp: Option[Long]): Path =
+      eqDelete: Option[EqDel.Tombstones] = None): Long = {
+    def stageFor(frame: DataFrame, exp: Option[Long]): Option[Path] =
       stageLinkedNoCommit(frame, root, exp, statsCols,
         emitFeed, batchTag, carry, skipDataWrite, changeFeedDf, dvDelta,
         commitSidecars, opTag, replaceSidecars, eqDelete)
     val propsAtStage = TableProps.load(root)
     var exp = expected
-    var stage = stageFor(aligned, exp)
+    var staged = stageFor(aligned, exp)
     var attempts = 0
-    while (true) {
+    while (staged.isDefined) {
+      val stage = staged.get
       try return commitStaged(root, stage, exp)
       catch {
         case cme: java.util.ConcurrentModificationException =>
@@ -1138,7 +1140,7 @@ object Sinks
           // a failed re-stage (a drift the gate could not see — the
           // realign guard refusing, a vacuumed base) reports as the CME
           // it is; the staging error rides along as suppressed detail
-          stage =
+          staged =
             try {
               val frame = rebase match {
                 case AppendRebase(realign) => realign(exp)
@@ -1151,14 +1153,20 @@ object Sinks
         case e: Throwable => Fs.deleteRecursively(stage); throw e
       }
     }
-    throw new IllegalStateException("unreachable")
+    // an empty streaming micro-batch staged nothing: the table stays at
+    // the base it staged against
+    exp.get
   }
 
   /** The staging half of [[stageLinkedPublish]], WITHOUT the commit —
     * for callers that coordinate the commit themselves ([[Txn]]'s
     * multi-table linked appends). Returns the fully-staged dir (data +
     * carried files + sidecars); the caller owns committing it through
-    * the protocol or deleting it on failure.
+    * the protocol or deleting it on failure. None (stage deleted) for a
+    * streaming micro-batch — a `batchTag` — on an existing table that
+    * staged no row and no tombstone: counted from the observed
+    * tombstone keys, else from the staged footers (an empty write still
+    * lands task 0's zero-row file).
     */
   private[graft] def stageLinkedNoCommit(aligned: DataFrame, root: String,
       expected: Option[Long], statsCols: Seq[String], emitFeed: Boolean,
@@ -1169,7 +1177,7 @@ object Sinks
       commitSidecars: Seq[(String, DataFrame)] = Nil,
       opTag: String = "append",
       replaceSidecars: Seq[(String, DataFrame)] = Nil,
-      eqDelete: Option[DataFrame] = None): Path = {
+      eqDelete: Option[EqDel.Tombstones] = None): Option[Path] = {
     require(!(emitFeed && changeFeedDf.isDefined),
       "emitFeed derives the insert feed from the staged files; a caller " +
         "supplying its own feed must not also request it")
@@ -1203,6 +1211,26 @@ object Sinks
       else labeled(spark, s"$opTag data stage") {
         if (pcols.isEmpty) toWrite.write.mode("overwrite").parquet(stage.toString)
         else toWrite.write.mode("overwrite").partitionBy(pcols: _*).parquet(stage.toString)
+      }
+      // equality deletes (round-14, B170): this commit's tombstones land
+      // as a fresh `_eqdel` part with seq = base + 1 (strictly above
+      // every committed tombstone of the lineage — OCC kills any stage
+      // whose base moved), keyed by PHYSICAL names like the data
+      // (round-16): the funnel subtracts in physical space, and upserts
+      // before and after a key RENAME must write parts with the same
+      // column names. Null-keyed tombstone rows are inert (the reader's
+      // anti-join never matches null keys) and pass through. Prior
+      // parts carry by hardlink below.
+      val eqSeq = expected.getOrElse(-1L) + 1
+      val eqDir = stage.resolve(EqDel.Sidecar)
+      eqDelete.foreach(_.stage(eqDir, eqSeq,
+        c => baseMapDir.fold(c)(d => ColMap.toPhysicalName(d, c))))
+      // every upserted row's key is a tombstone, so a commit with
+      // tombstones is empty iff it has none
+      if (batchTag.isDefined && expected.isDefined && !skipDataWrite &&
+          eqDelete.fold(Fs.parquetRows(Fs.walkParquet(stage)))(_.count(eqDir)) == 0) {
+        Fs.deleteRecursively(stage)
+        return None
       }
       baseMapDir.foreach(d => ColMap.carry(Paths.get(d), stage))
       // an append must not silently demote the table from skippable to
@@ -1256,31 +1284,11 @@ object Sinks
         Bloom.sidecarCols(spark, versionPath(root, v))) ++ declaredBloom).distinct
       if (bloomInherit.nonEmpty && hasNew)
         Bloom.annotate(spark, stage.toString, bloomInherit)
-      // equality deletes (round-14, B170): this commit's tombstones land
-      // as a fresh `_eqdel` part with seq = base + 1 (strictly above
-      // every committed tombstone of the lineage — OCC kills any stage
-      // whose base moved), and — whenever the lineage is under eq-delete
-      // maintenance — EVERY newly staged data file is seq-stamped into
-      // `_eqseq`, so pending tombstones can be scoped to strictly-older
-      // files (a plain append's rows must never be killed by an earlier
-      // upsert's tombstone). Null-keyed tombstone rows are inert (the
-      // reader's anti-join never matches null keys) and pass through.
-      // Prior parts of both sidecars carry by hardlink below.
-      val eqSeq = expected.getOrElse(-1L) + 1
-      eqDelete.foreach { kdf =>
-        // tombstone keys land under PHYSICAL names like the data
-        // (round-16): the funnel subtracts in physical space and the
-        // reader-side wrapper reads a physical delegate — and without
-        // the translation, upserts before and after a key RENAME would
-        // write sidecar parts with DIFFERENT column names (mergeSchema
-        // would then fail the drift check loudly on every later read)
-        val kdfPhys = baseMapDir.fold(kdf)(d => ColMap.toPhysical(kdf, d))
-        labeled(spark, "eq-delete tombstone sidecar") {
-          kdfPhys.withColumn("__gf_seq", org.apache.spark.sql.functions.lit(eqSeq))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$stage/${EqDel.Sidecar}")
-        }
-      }
+      // whenever the lineage is under eq-delete maintenance, EVERY newly
+      // staged data file is seq-stamped into `_eqseq`, so pending
+      // tombstones can be scoped to strictly-older files (a plain
+      // append's rows must never be killed by an earlier upsert's
+      // tombstone)
       val underEqDel = eqDelete.isDefined || expected.exists(v =>
         EqDel.maintained(versionPath(root, v)))
       if (underEqDel && hasNew) {
@@ -1289,8 +1297,9 @@ object Sinks
         // the Spark job that used to write it was pure scheduling
         // overhead on every maintained-table commit (one of the
         // per-microbatch jobs the streaming upsert pays)
-        Fs.writeFileSeqParquet(stage.resolve(EqDel.SeqSidecar),
-          Fs.walkParquet(stage).map(p => (stage.relativize(p).toString, eqSeq)))
+        Fs.writePart(spark, stage.resolve(EqDel.SeqSidecar), EqDel.SeqSchema,
+          Fs.walkParquet(stage).iterator.map(p =>
+            org.apache.spark.sql.Row(stage.relativize(p).toString, eqSeq)))
       }
       if (emitFeed) {
         import org.apache.spark.sql.functions.lit
@@ -1505,7 +1514,7 @@ object Sinks
         Stats.annotate(spark, stage.toString, effStats, effNdv,
           histCols = effHist)
       stampOp(stage, opTag)
-      stage
+      Some(stage)
     } catch {
       case e: Throwable => Fs.deleteRecursively(stage); throw e
     }

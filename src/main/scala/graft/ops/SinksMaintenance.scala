@@ -329,7 +329,7 @@ private[graft] trait SinksMaintenance { this: Sinks.type =>
     val empty = readCurrent(spark, root).limit(0)
     val stage = stageLinkedNoCommit(empty, root, Some(v), Nil,
       emitFeed = false, batchTag = None, carry = _ => true,
-      skipDataWrite = true, opTag = "eq-checkpoint")
+      skipDataWrite = true, opTag = "eq-checkpoint").get
     try {
       EqDel.compactSidecar(spark, stage.toString, EqDel.SeqSidecar)
       EqDel.compactSidecar(spark, stage.toString, EqDel.Sidecar)

@@ -78,9 +78,12 @@ object TableStream {
 
   /** The exactly-once foreachBatch shell [[streamTo]] and
     * [[EqDel.upsertStreamTo]] share: per-batch dedupe via the
-    * `_BATCHID` stamp + durable high-water mark, empty-replay skip,
-    * and CME retry around `commit`, which receives the batch frame and
-    * the batch tag to stamp into its commit.
+    * `_BATCHID` stamp + durable high-water mark, and CME retry around
+    * `commit`, which receives the batch frame and the batch tag to
+    * stamp into its commit. An empty batch costs no probe job: the
+    * tagged commit itself publishes nothing when its write staged no
+    * row on an existing table (see [[Sinks.appendVersioned]]'s
+    * `batchTag`), and the high-water mark still advances.
     */
   private[graft] def foreachBatchSink(stream: DataFrame, root: String,
       checkpoint: String)(commit: (DataFrame, String) => Unit): StreamingQuery = {
@@ -90,21 +93,15 @@ object TableStream {
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
         if (!committed(root, tag, id)) {
-          // skip truly empty replays only when the table already exists —
-          // the first batch must still create it
-          val skip = Sinks.currentVersion(root).isDefined &&
-            Sinks.labeled(batch.sparkSession, "empty-replay probe")(batch.isEmpty)
-          if (!skip) {
-            var attempts = 0
-            var done = false
-            while (!done) {
-              try {
-                commit(batch.toDF(), s"$tag:$id")
-                done = true
-              } catch {
-                case _: java.util.ConcurrentModificationException if attempts < 5 =>
-                  attempts += 1 // a concurrent writer moved the table; re-base
-              }
+          var attempts = 0
+          var done = false
+          while (!done) {
+            try {
+              commit(batch.toDF(), s"$tag:$id")
+              done = true
+            } catch {
+              case _: java.util.ConcurrentModificationException if attempts < 5 =>
+                attempts += 1 // a concurrent writer moved the table; re-base
             }
           }
           // durable high-water mark that survives vacuum; written AFTER
@@ -118,8 +115,8 @@ object TableStream {
 
   /** One micro-batch landing for the V1 streaming-sink door
     * (`df.writeStream.format("graft")` —
-    * [[graft.catalog.GraftDataSource]]): the same dedupe +
-    * empty-replay-skip + CME-retry + high-water-mark contract as
+    * [[graft.catalog.GraftDataSource]]): the same dedupe + empty-batch
+    * + CME-retry + high-water-mark contract as
     * [[foreachBatchSink]], with the batch handed in directly by
     * Spark's Sink API instead of a foreachBatch closure. A FRESH root
     * creates the table on the first batch (the batch write door's
@@ -132,49 +129,46 @@ object TableStream {
     val tag = writerTag(checkpoint)
     if (committed(root, tag, id)) return
     val spark = batch.sparkSession
-    val skip = Sinks.currentVersion(root).isDefined && batch.isEmpty
-    if (!skip) {
-      if (Sinks.currentVersion(root).isEmpty) {
-        require(!graft.catalog.GraftViews.isView(root),
-          s"$root holds a graft VIEW definition — DROP the view or pick " +
-            "a different path")
-        partitionBy.foreach(c => require(
-          batch.columns.exists(_.equalsIgnoreCase(c)),
-          s"partitionBy column $c is not in the stream"))
-        val empty = spark.createDataFrame(
-          new java.util.ArrayList[Row](), batch.schema)
-        // a lost CREATE race is fine — the winner's table absorbs the
-        // append below under its own OCC
-        try Sinks.publishVersioned(empty, root, None)
-        catch { case _: java.util.ConcurrentModificationException => () }
-        if (partitionBy.nonEmpty &&
-            !TableProps.load(root).contains(TableProps.PartitionKey))
-          TableProps.update(root)(_ + (TableProps.PartitionKey ->
-            StructType(partitionBy.map(c =>
-              batch.schema(batch.columns.find(_.equalsIgnoreCase(c)).get)))
-              .toDDL))
-      } else {
-        val declared = TableProps.partitionCols(root)
-        require(partitionBy.isEmpty ||
-          partitionBy.map(_.toLowerCase) == declared.map(_.toLowerCase),
-          s"partitionBy(${partitionBy.mkString(", ")}) does not match the " +
-            s"table's declared partitioning (${declared.mkString(", ")}) — " +
-            "omit partitionBy: the declared layout applies to every write")
-      }
-      var attempts = 0
-      var done = false
-      while (!done) {
-        try {
-          Sinks.appendVersioned(
-            graft.catalog.GraftCheck.enforce(
-              Generated.enforce(Identity.assign(batch, root), root), root),
-            root, Sinks.currentVersion(root), emitFeed = true,
-            batchTag = Some(s"$tag:$id"))
-          done = true
-        } catch {
-          case _: java.util.ConcurrentModificationException if attempts < 5 =>
-            attempts += 1 // a concurrent writer moved the table; re-base
-        }
+    if (Sinks.currentVersion(root).isEmpty) {
+      require(!graft.catalog.GraftViews.isView(root),
+        s"$root holds a graft VIEW definition — DROP the view or pick " +
+          "a different path")
+      partitionBy.foreach(c => require(
+        batch.columns.exists(_.equalsIgnoreCase(c)),
+        s"partitionBy column $c is not in the stream"))
+      val empty = spark.createDataFrame(
+        new java.util.ArrayList[Row](), batch.schema)
+      // a lost CREATE race is fine — the winner's table absorbs the
+      // append below under its own OCC
+      try Sinks.publishVersioned(empty, root, None)
+      catch { case _: java.util.ConcurrentModificationException => () }
+      if (partitionBy.nonEmpty &&
+          !TableProps.load(root).contains(TableProps.PartitionKey))
+        TableProps.update(root)(_ + (TableProps.PartitionKey ->
+          StructType(partitionBy.map(c =>
+            batch.schema(batch.columns.find(_.equalsIgnoreCase(c)).get)))
+            .toDDL))
+    } else {
+      val declared = TableProps.partitionCols(root)
+      require(partitionBy.isEmpty ||
+        partitionBy.map(_.toLowerCase) == declared.map(_.toLowerCase),
+        s"partitionBy(${partitionBy.mkString(", ")}) does not match the " +
+          s"table's declared partitioning (${declared.mkString(", ")}) — " +
+          "omit partitionBy: the declared layout applies to every write")
+    }
+    var attempts = 0
+    var done = false
+    while (!done) {
+      try {
+        Sinks.appendVersioned(
+          graft.catalog.GraftCheck.enforce(
+            Generated.enforce(Identity.assign(batch, root), root), root),
+          root, Sinks.currentVersion(root), emitFeed = true,
+          batchTag = Some(s"$tag:$id"))
+        done = true
+      } catch {
+        case _: java.util.ConcurrentModificationException if attempts < 5 =>
+          attempts += 1 // a concurrent writer moved the table; re-base
       }
     }
     TableProps.update(root)(_ + (lastBatchKey(tag) -> id.toString))

@@ -87,9 +87,10 @@ object Txn {
         // TxnWrite whose column set/order drifts from the live schema
         // must fail loudly here, not commit a mixed-schema version
         // readers mis-infer from one arbitrary footer
+        // untagged: the stage is never dropped
         Sinks.stageLinkedNoCommit(
           Sinks.alignToLive(w.df, w.root, w.expected), w.root, w.expected,
-          w.statsCols, emitFeed = w.emitFeed, batchTag = None, carry = _ => true)
+          w.statsCols, emitFeed = w.emitFeed, batchTag = None, carry = _ => true).get
       } else {
         val stage = Paths.get(
           s"${w.root}/.stage-${ProcessHandle.current().pid()}-${System.nanoTime()}")

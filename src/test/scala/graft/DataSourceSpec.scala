@@ -138,7 +138,6 @@ class DataSourceSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(tbl).count() == 40)
     // append is a LINKED commit: prior files carried by inode, and the
     // insert feed makes the commit table_changes-readable
-    val before = graft.io.Fs.walkParquet(java.nio.file.Paths.get(dir1)).size
     spark.range(40, 50).select($"id".as("k"), ($"id" % 4).cast("string").as("p"))
       .write.format("graft").mode("append").save(tbl)
     assert(spark.read.format("graft").load(tbl).count() == 50)
@@ -229,6 +228,27 @@ class DataSourceSpec extends AnyFunSuite {
         .outputMode("complete").start(s"${tmp()}/t2"))
     assert(msgs(e).exists(_.contains("Append output mode only")),
       msgs(e).mkString(" | "))
+  }
+
+  test("one streaming sink door micro-batch runs only graft-labelled jobs") {
+    val tbl = s"${tmp()}/t"
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val q = mem.toDF().toDF("k", "p").writeStream
+      .format("graft").option("checkpointLocation", s"${tmp()}/cp").start(tbl)
+    try {
+      mem.addData((1L, "a"), (2L, "b"))
+      q.processAllAvailable()
+      mem.addData((3L, "a"))
+      val before = Sinks.currentVersion(tbl)
+      val (_, jobs) = JobLog.jobsOf(spark)(q.processAllAvailable())
+      assert(Sinks.currentVersion(tbl) == before.map(_ + 1), "the batch must commit")
+      assert(jobs.nonEmpty && jobs.forall(_.startsWith("graft: ")),
+        s"unlabelled jobs in one batch: $jobs")
+    } finally q.stop()
+    assert(spark.read.format("graft").load(tbl).count() == 3)
   }
 
   test("the streaming sink refuses a missing checkpointLocation (exactly-once tag must not default to the root)") {

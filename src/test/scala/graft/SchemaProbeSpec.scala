@@ -1,12 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
 
 import graft.ops.{Dv, EqDel, Sinks, Stats}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Schema probes on the commit path: driver-side footer inference must
@@ -20,41 +16,7 @@ class SchemaProbeSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** Descriptions of the jobs submitted (from any thread) while `body`
-    * runs. Fence jobs before and after bound the window on the listener
-    * bus, so no event of `body` is still in flight when this returns
-    * and none from before it is counted.
-    */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]()
-    val tag = s"fence-${System.nanoTime()}"
-    val opened = new CountDownLatch(1)
-    val closed = new CountDownLatch(1)
-    @volatile var recording = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        if (d == s"$tag-open") { recording = true; opened.countDown() }
-        else if (d == s"$tag-close") { recording = false; closed.countDown() }
-        else if (recording) seen.add(d)
-      }
-    }
-    def fence(name: String, latch: CountDownLatch): Unit = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
-      assert(latch.await(60, TimeUnit.SECONDS), s"listener never saw $name")
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence(s"$tag-open", opened)
-      val out = body
-      fence(s"$tag-close", closed)
-      (out, seen.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf[T](body: => T): (T, Seq[String]) = JobLog.jobsOf(spark)(body)
 
   private def assertParity(p: String): Unit = {
     val (got, jobs) = jobsOf(Sinks.inferSchema(spark, p))
@@ -131,7 +93,10 @@ class SchemaProbeSpec extends AnyFunSuite {
     assertParity(dir.toString)
     assert(Sinks.inferSchema(spark, dir.toString).fieldNames.toSeq == Seq("early", "x"))
     val seq = Paths.get(tmp("probe_seq"), EqDel.SeqSidecar)
-    graft.io.Fs.writeFileSeqParquet(seq, Seq(("part-0.parquet", 3L), ("part-1.parquet", 4L)))
+    graft.io.Fs.writePart(spark, seq,
+      org.apache.spark.sql.types.StructType.fromDDL("file STRING NOT NULL, seq BIGINT NOT NULL"),
+      Iterator(org.apache.spark.sql.Row("part-0.parquet", 3L),
+        org.apache.spark.sql.Row("part-1.parquet", 4L)))
     assertParity(seq.toString)
   }
 
@@ -171,6 +136,102 @@ class SchemaProbeSpec extends AnyFunSuite {
     val got = Sinks.readCurrent(spark, root).as[(Long, String)].collect().toMap
     assert(got(2L) == "s2_2" && got(4L) == "s2_4" && got(1L) == "u1")
     assert(!got.contains(3L) && !got.contains(5L))
+  }
+
+  /** The serial-merge state of `base` after `batches` of (k, v, op,
+    * seq) CDC rows, each collapsed to its last row per key by seq.
+    */
+  private def serialMerge(base: Map[Long, String],
+      batches: Seq[Seq[(Long, String, String, Long)]]): Map[Long, String] =
+    batches.foldLeft(base) { (acc, b) =>
+      b.groupBy(_._1).values.map(_.maxBy(_._4)).foldLeft(acc) { (m, r) =>
+        if (r._3 == "delete") m - r._1 else m + (r._1 -> r._2)
+      }
+    }
+
+  test("an upsertStreamTo micro-batch runs at most 3 graft jobs on every route; state = serial merge") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val base = (0L until 100L).map(i => i -> s"base$i").toMap
+    // (route, opCol, dedupeBy, the batch columns the stream carries)
+    val routes = Seq(
+      ("opCol + dedupeBy", Some("op"), Seq("seq"), Seq("k", "v", "op", "seq")),
+      ("opCol only", Some("op"), Nil, Seq("k", "v", "op")),
+      ("plain keys", None, Nil, Seq("k", "v")),
+      ("all-delete batch", Some("op"), Nil, Seq("k", "v", "op")))
+    routes.foreach { case (route, opCol, dedupeBy, cols) =>
+      val root = tmp("probe_budget") + "/t"
+      val cp = tmp("probe_budgetcp")
+      val src = tmp("probe_budgetsrc")
+      Sinks.publishVersioned(base.toSeq.sortBy(_._1).toDF("k", "v"), root, None)
+      EqDel.upsertBatch(spark, Seq((1L, "u1")).toDF("k", "v"), root, Seq("k"))
+      val first = Seq((2L, "a2", "upsert", 1L), (3L, "a3", "upsert", 1L))
+      val second = route match {
+        case "opCol + dedupeBy" => Seq((4L, "b4", "upsert", 1L), (2L, "b2x", "upsert", 1L),
+          (2L, "b2", "upsert", 2L), (5L, null, "delete", 1L), (3L, "b3", "upsert", 1L),
+          (3L, null, "delete", 2L))
+        case "opCol only" => Seq((4L, "b4", "upsert", 1L), (2L, "b2", "upsert", 1L),
+          (5L, null, "delete", 1L))
+        case "plain keys" => Seq((4L, "b4", "upsert", 1L), (2L, "b2", "upsert", 1L))
+        case _ => Seq((2L, null, "delete", 1L), (5L, null, "delete", 1L),
+          (77L, null, "delete", 1L))
+      }
+      def land(rows: Seq[(Long, String, String, Long)]): Unit =
+        rows.toDF("k", "v", "op", "seq").coalesce(1).write.mode("append").parquet(src)
+      land(first)
+      val q = EqDel.upsertStreamTo(
+        spark.readStream.schema("k LONG, v STRING, op STRING, seq LONG").parquet(src)
+          .select(cols.map(col): _*),
+        root, cp, keys = Seq("k"), opCol = opCol, dedupeBy = dedupeBy)
+      try {
+        q.processAllAvailable()
+        land(second)
+        val before = Sinks.currentVersion(root)
+        val (_, jobs) = jobsOf(q.processAllAvailable())
+        assert(Sinks.currentVersion(root) == before.map(_ + 1), s"$route: the batch must commit")
+        assert(jobs.nonEmpty && jobs.size <= 3, s"$route: ${jobs.size} jobs: $jobs")
+        assert(jobs.forall(_.startsWith("graft: ")), s"$route: unlabelled jobs: $jobs")
+        assert(!jobs.exists(_.contains("tombstone sidecar")),
+          s"$route: a small batch's tombstones ride the data-stage write: $jobs")
+      } finally q.stop()
+      val want = serialMerge(base + (1L -> "u1"), Seq(first, second))
+      val got = Sinks.readCurrent(spark, root).as[(Long, String)].collect()
+      assert(got.length == got.map(_._1).distinct.length, s"$route: duplicate keys")
+      assert(got.toMap == want, route)
+    }
+  }
+
+  test("at or above the plan-size guard applyCdc pins the batch and writes the tombstone part with a job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val root = tmp("probe_guard") + "/t"
+    Sinks.publishVersioned((0L until 100L).map(i => (i, s"base$i")).toDF("k", "v"), root, None)
+    // a plan whose size estimate is far above the guard (the range's
+    // 8 bytes a row times its length; a filter keeps the estimate) and
+    // whose rows are few
+    val batch = spark.range(0L, 10000000L).filter(col("id") < 40L)
+      .select(col("id").as("k"), concat(lit("u"), col("id").cast("string")).as("v"),
+        when(col("id") % 4 === 0, "delete").otherwise("upsert").as("op"))
+    assert(batch.queryExecution.analyzed.stats.sizeInBytes >= EqDel.ObservedKeysMaxBytes)
+    val (v, jobs) = jobsOf(EqDel.applyCdc(batch, root, Seq("k"), opCol = Some("op")))
+    assert(Sinks.currentVersion(root).contains(v))
+    assert(jobs.contains("graft: eq-delete tombstone sidecar"), jobs.toString)
+    val want = (0L until 100L).map(i => i -> (if (i < 40L) s"u$i" else s"base$i"))
+      .filterNot { case (i, _) => i < 40L && i % 4 == 0 }.toMap
+    assert(Sinks.readCurrent(spark, root).as[(Long, String)].collect().toMap == want)
+    assert(EqDel.pending(spark, Sinks.resolve(root)).count() == 40)
+  }
+
+  test("upsertBatch with extraDeletes writes the tombstone part with a job; state = serial merge") {
+    import spark.implicits._
+    val root = tmp("probe_extra") + "/t"
+    Sinks.publishVersioned((0L until 20L).map(i => (i, s"base$i")).toDF("k", "v"), root, None)
+    val (_, jobs) = jobsOf(EqDel.upsertBatch(spark, Seq((1L, "u1"), (30L, "u30")).toDF("k", "v"),
+      root, Seq("k"), extraDeletes = Some(Seq(2L, 3L, 99L).toDF("k"))))
+    assert(jobs.contains("graft: eq-delete tombstone sidecar"), jobs.toString)
+    val want = (0L until 20L).map(i => i -> s"base$i").toMap - 2L - 3L +
+      (1L -> "u1") + (30L -> "u30")
+    assert(Sinks.readCurrent(spark, root).as[(Long, String)].collect().toMap == want)
   }
 
   test("alignToLive's live schema equals the read funnel's: partitioned + added column, rename, drop, hidden partitions") {
