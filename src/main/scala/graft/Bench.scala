@@ -1,27 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 (Spark's legacy default) carries NO footer statistics or
-      // logical annotation — timestamp columns would be unprunable and
-      // unskippable; MICROS is the modern annotated int64 (Delta pins the
-      // same). See ops/Stats.scala timestamp-domain notes.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // in-process chmod for the local-FS commit path (no libhadoop in
-      // this environment, so the stock FS forks a subprocess per
-      // staged-write _temporary dir — see graft.io.FastLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.io.FastLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.harnessSession()
     // Headline subset (mirrors BASELINE.md's measured queries), one warmup
     // action first so JVM/codegen startup isn't billed to the first query;
     // each query runs three times and reports the min (steady-state

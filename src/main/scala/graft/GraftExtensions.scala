@@ -32,10 +32,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - `cosine_sim(a, b)` ([[graft.functions.CosineSim]]) — the fused
   *    codegen'd cosine similarity.
   *
-  * The imperative registrars ([[TopKAgg.register]],
-  * [[CosineSim.register]], [[AnnRewrite.install]]) remain for sessions
-  * created without the config (the library call sites use them
-  * defensively); both paths are idempotent and coexist.
+  * The imperative registrars ([[CosineSim.register]],
+  * [[AnnRewrite.install]]) remain for sessions created without the
+  * config; both paths are idempotent and coexist.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -17,6 +17,32 @@ object SparkEntry {
     Analytics, ScanOps, Curation, SqlEntry, TpchMore, TableStreamOps, TrainPrepOps,
   )
 
+  /** The session [[Bench]] and [[Verify]] run in: `local[SPARK_GRAFT_CPUS]`
+    * (default 4) with the Graft extensions, one shuffle partition per
+    * core and a UTC session clock. */
+  private[graft] def harnessSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      // INT96 (Spark's legacy default) carries NO footer statistics or
+      // logical annotation — timestamp columns would be unprunable and
+      // unskippable; MICROS is the modern annotated int64 (Delta pins the
+      // same). See ops/Stats.scala timestamp-domain notes.
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      // in-process chmod for the local-FS commit path (no libhadoop in
+      // this environment, so the stock FS forks a subprocess per
+      // staged-write _temporary dir — see graft.io.FastLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", "graft.io.FastLocalFileSystem")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query; driver smoke-checks rows>0 on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_join_agg")(spark, "/root/testdata/sf0.001")

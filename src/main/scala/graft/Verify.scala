@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,25 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only the named queries (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 (Spark's legacy default) carries NO footer statistics or
-      // logical annotation — timestamp columns would be unprunable and
-      // unskippable; MICROS is the modern annotated int64 (Delta pins the
-      // same). See ops/Stats.scala timestamp-domain notes.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // in-process chmod for the local-FS commit path (no libhadoop in
-      // this environment, so the stock FS forks a subprocess per
-      // staged-write _temporary dir — see graft.io.FastLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.io.FastLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.harnessSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -85,10 +85,6 @@ final case class Stream(df: DataFrame) {
   def joinBolt(other: Stream, cond: Column, how: String = "inner"): Stream =
     Stream(df.join(other.df, cond, how))
 
-  /** Batch sink (A4 emit-to-storage). */
-  def toParquet(path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   /** Streaming sink with a processing-time trigger — the tick-tuple (A12)
     * analog: the topology activates every `every` interval.
     */

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructField, StructType}
 
 import graft.ops.TableProps
 

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -51,76 +49,7 @@ case class Bigrams(child: Expression) extends UnaryExpression {
   override def prettyName: String = "bigrams"
 }
 
-/** Adjacent pairs of an ALREADY-TOKENIZED array — [[Bigrams]] with the
-  * tokenization factored out: `bigrams_arr(toks)` over
-  * `toks = array_remove(split(lower(text), "[^a-z0-9]+"), "")` is
-  * value-identical to `bigrams(text)` (CorpusSpec pins the parity).
-  * Exists for the tokenize-once corpus shape ([[graft.ops.Corpus.lmScore]]
-  * over a pinned token table): when the token array is materialized once
-  * and read by several passes, re-running the lower + regex-split per
-  * pass is pure waste — this assembles the pairs straight from the
-  * stored array in one compiled loop. Fewer than two tokens → empty
-  * array (explode drops the row); null array → null.
-  */
-case class ArrayBigrams(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("w1", StringType, nullable = false),
-      StructField("w2", StringType, nullable = false))),
-    containsNull = false)
-
-  override protected def nullSafeEval(toks: Any): Any =
-    ArrayBigrams.compute(toks.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.ArrayBigrams.compute($t)")
-
-  override protected def withNewChildInternal(newChild: Expression): ArrayBigrams =
-    copy(child = newChild)
-
-  override def prettyName: String = "bigrams_arr"
-}
-
-object ArrayBigrams {
-  /** Register as a SQL-callable function: `bigrams_arr(toks)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigrams_arr",
-      exprs => ArrayBigrams(exprs.head),
-      "scala_udf")
-
-  private val empty = new GenericArrayData(new Array[AnyRef](0))
-
-  /** The whole per-row computation, callable from generated code. */
-  def compute(toks: ArrayData): ArrayData = {
-    val n = toks.numElements()
-    if (n < 2) return empty
-    val out = new Array[AnyRef](n - 1)
-    // clone each token once: getUTF8String over unsafe/columnar input
-    // returns a VIEW into a buffer the scanner reuses — the returned
-    // array must own its bytes (NgramMd5/Bigrams allocate fresh strings
-    // for the same reason)
-    var prev = toks.getUTF8String(0).clone()
-    var i = 1
-    while (i < n) {
-      val cur = toks.getUTF8String(i).clone()
-      out(i - 1) = new GenericInternalRow(Array[Any](prev, cur))
-      prev = cur
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
 object Bigrams {
-  /** Register as a SQL-callable function: `bigrams(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigrams",
-      exprs => Bigrams(exprs.head),
-      "scala_udf")
-
   // The tokenizer's separator class, compiled once. Spark's split()
   // routes through the same java.util.regex engine on the string form,
   // so token boundaries are bit-identical to the HOF pipeline.

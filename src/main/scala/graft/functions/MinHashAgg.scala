@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -26,8 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * h_i = xxh64(int i, seed = xxh64(long base, 42)) — the string is hashed
   * once, permutations derive from the fixed-width base.
   *
-  * Usage (after [[MinHashAgg.register]]):
-  * {{{ explodedShingles.groupBy("doc_id").agg(expr("minhash_agg(shingle, 32)")) }}}
+  * Usage (as [[graft.ops.Dedup.minhashSignaturesAgg]] builds it):
+  * {{{ explodedShingles.groupBy("doc_id")
+  *       .agg(ExprBridge.aggColumn(MinHashAgg(expr(shingle), Literal(32)))) }}}
   */
 case class MinHashAgg(
     left: Expression,
@@ -88,13 +88,4 @@ case class MinHashAgg(
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "minhash_agg"
-}
-
-object MinHashAgg {
-  /** Register as a SQL-callable aggregate: `minhash_agg(shingle, numPerm)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_agg",
-      exprs => MinHashAgg(exprs.head, exprs(1)),
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -65,13 +64,6 @@ case class MinHashSigMd5(first: Expression, second: Expression, third: Expressio
 }
 
 object MinHashSigMd5 {
-  /** Register as a SQL-callable function: `minhash_sig_md5(text, n, numPerm)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig_md5",
-      exprs => MinHashSigMd5(exprs.head, exprs(1), exprs(2)),
-      "scala_udf")
-
   private val hexChars = "0123456789abcdef".toCharArray
 
   /** Unsigned lexicographic compare of two 16-byte digests — the byte

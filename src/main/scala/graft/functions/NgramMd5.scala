@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -49,13 +48,6 @@ case class NgramMd5(first: Expression, second: Expression, third: Expression)
 }
 
 object NgramMd5 {
-  /** Register as a SQL-callable function: `ngram_md5(text, n, hexLen)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_md5",
-      exprs => NgramMd5(exprs.head, exprs(1), exprs(2)),
-      "scala_udf")
-
   private val hexChars = "0123456789abcdef".toCharArray
 
   /** The whole per-row computation, callable from generated code. */

@@ -22,16 +22,12 @@ final class QuantileAgg(qs: Seq[Double], k: Int)
   override def merge(a: QuantileSketch, b: QuantileSketch): QuantileSketch = a.merge(b)
   override def finish(s: QuantileSketch): Seq[Double] = s.quantiles(qs)
   override def bufferEncoder: Encoder[QuantileSketch] = Encoders.product[QuantileSketch]
-  override def outputEncoder: Encoder[Seq[Double]] = {
-    implicit val e: Encoder[Double] = Encoders.scalaDouble
+  override def outputEncoder: Encoder[Seq[Double]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-  }
 }
 
 object QuantileAgg {
   /** quantile_sketch_agg(x, qs...) as a Column. */
-  def apply(x: Column, qs: Seq[Double], k: Int = 200): Column = {
-    implicit val enc: Encoder[java.lang.Double] = Encoders.DOUBLE
+  def apply(x: Column, qs: Seq[Double], k: Int = 200): Column =
     udaf(new QuantileAgg(qs, k)).apply(x)
-  }
 }

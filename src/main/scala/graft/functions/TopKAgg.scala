@@ -4,7 +4,6 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -110,16 +109,4 @@ case class TopKAgg(
     copy(first = newFirst, second = newSecond, third = newThird)
 
   override def prettyName: String = "topk_agg"
-}
-
-object TopKAgg {
-  /** Register the SQL spelling `topk_agg(score, id, k)`, replacing any
-    * prior binding of the name. Library operators build the aggregate
-    * via ExprBridge, not this name — registration is for user SQL.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_agg",
-      exprs => TopKAgg(exprs.head, exprs(1), exprs(2)),
-      "scala_udf")
 }

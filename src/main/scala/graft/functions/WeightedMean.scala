@@ -22,9 +22,6 @@ object WeightedMean extends Aggregator[(Double, Double), (Double, Double), Doubl
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
 
   /** Column-level entry point: weighted_mean(x, w). */
-  def apply(x: Column, w: Column): Column = {
-    implicit val enc: Encoder[(Double, Double)] =
-      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
+  def apply(x: Column, w: Column): Column =
     udaf(this).apply(x, w)
-  }
 }

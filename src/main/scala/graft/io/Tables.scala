@@ -136,8 +136,6 @@ object Tables {
         }
       } catch { case _: Exception => None })
   }
-  def eventsHasNativeTs(spark: SparkSession, sfDir: String): Boolean =
-    eventsNativeSchema(spark, sfDir).isDefined
 
   /** `events` with `ts` normalized to a microsecond session-tz TIMESTAMP,
     * whichever physical layout the fixture carries. The DuckDB oracle

@@ -277,10 +277,6 @@ object AnnIndex {
     pqBooksMemo(spark, Seq(p))(Pq.fromFrame(spark.read.parquet(p)))
   }
 
-  /** The persisted PQ codebooks of the LIVE index version. */
-  def pqBooks(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(pqBooksDir(Sinks.resolve(root)))
-
   private def pqBooksDir(live: String): String = {
     val p = s"$live/${Pq.Sidecar}"
     require(Files.isDirectory(Paths.get(p)),

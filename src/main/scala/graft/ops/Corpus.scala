@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -337,46 +337,22 @@ object Corpus {
     * Default 1 = unsalted, the right plan when counts broadcast.
     */
   def lmScore(docs: DataFrame, idCol: String, textCol: String,
-      alpha: Double = 0.5, saltBuckets: Int = 1,
-      pinTokens: Boolean = false): DataFrame = {
+      alpha: Double = 0.5, saltBuckets: Int = 1): DataFrame = {
     import org.apache.spark.sql.graft.ExprBridge
-    // Three corpus passes are fundamental to the declared model (c12
-    // build, vocabulary, probe). `pinTokens` trades how they read the
-    // corpus (§8: move decisions over a lightweight proxy): the
-    // tokenized corpus `(id, t)` is materialized ONCE via Pin.stable
-    // and all three passes scan the token table — each pass then skips
-    // the lower() copy + regex split + (for docs behind a filter/join,
-    // e.g. the decontaminated corpus in q_trainprep_pipeline) the whole
-    // upstream subtree, at the price of one columnar token write.
-    // Value-identical either way: bigrams_arr over the stored tokens is
-    // the same pairs bigrams(text) assembles (CorpusSpec pins both
-    // parities and lmScore-with-pin ≡ lmScore-without).
     // array_remove, not filter(length>0): value-identical and codegen'd
     // (the HOF filter interprets its lambda per token on the hot path)
     val tokCol = array_remove(split(lower(col(textCol)), "[^a-z0-9]+"), "")
-    val pinned =
-      if (pinTokens) Some(Pin.stable(docs.select(col(idCol), tokCol.as("t"))))
-      else None
-    val toks = pinned.getOrElse(docs.select(col(idCol), tokCol.as("t")))
+    val toks = docs.select(col(idCol), tokCol.as("t"))
     // Bigram assembly is the native single-loop expression
-    // ([[graft.functions.Bigrams]] / [[graft.functions.ArrayBigrams]]
-    // over the pinned tokens): value-identical to the zip_with/
+    // ([[graft.functions.Bigrams]]): value-identical to the zip_with/
     // slice HOF form (parity pinned in CorpusSpec) but compiled —
     // this subtree is evaluated on every corpus pass (c12 build AND
     // the probe side), so the per-row win applies twice. <2 tokens →
     // empty array, so explode keeps the old filter(size>=2) contract.
-    val bi = pinned match {
-      case Some(tp) =>
-        tp.select(col(idCol),
-            explode(ExprBridge.column(graft.functions.ArrayBigrams(
-              ExprBridge.expr(col("t"))))).as("bg"))
-          .select(col(idCol), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      case None =>
-        docs.select(col(idCol),
-            explode(ExprBridge.column(graft.functions.Bigrams(
-              ExprBridge.expr(col(textCol))))).as("bg"))
-          .select(col(idCol), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    }
+    val bi = docs.select(col(idCol),
+        explode(ExprBridge.column(graft.functions.Bigrams(
+          ExprBridge.expr(col(textCol))))).as("bg"))
+      .select(col(idCol), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     val c12 = bi.groupBy("w1", "w2")
       .agg(count(lit(1)).cast("double").as("n12"))
     // head counts ride the (small) bigram-count table as a WINDOW sum —

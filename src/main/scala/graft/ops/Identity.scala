@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, IntegerType, MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, MetadataBuilder, StructField, StructType}
 
 /** Identity columns (round-15; the r14 verdict's item 5):
   * `GENERATED ALWAYS | BY DEFAULT AS IDENTITY (START WITH s INCREMENT

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Data-quality operators for pipeline governance: schema drift between
@@ -45,12 +44,6 @@ object Quality {
         (b(n).dataType != a(n).dataType || b(n).nullable != a(n).nullable))
       .map(n => Drift("renullabled", n, b(n).nullable.toString, a(n).nullable.toString))
     added ++ removed ++ retyped ++ renull
-  }
-
-  /** DataFrame form for pipeline wiring (empty = schemas compatible). */
-  def schemaDriftDF(spark: SparkSession, before: StructType, after: StructType): DataFrame = {
-    import spark.implicits._
-    schemaDrift(before, after).toDF()
   }
 
   /** Gate: throw unless `actual` is drift-free against `expected`

@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import graft.io.Fs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 
 /** Layout and schema evolution commits: metadata-only column mapping
   * and type widening, partition-spec evolution (rewrite and

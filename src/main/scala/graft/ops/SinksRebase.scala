@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.io.Fs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Concurrent-writer auto-rebase: the recovery policies of a linked
   * commit whose OCC base advanced, and the provably-safe gate that
@@ -79,8 +79,7 @@ private[graft] trait SinksRebase { this: Sinks.type =>
   /** Process-lifetime count of commit-race rebase retries (every
     * re-stage after a lost OCC race, across all tables) — observability
     * for multi-writer deployments: a climbing rate on one table says
-    * its writers contend enough to consider coarser batching. The
-    * stress harness reports it per run.
+    * its writers contend enough to consider coarser batching.
     */
   val rebaseRetries = new java.util.concurrent.atomic.AtomicLong(0)
 

@@ -1,9 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.io.Fs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-table/cross-site data movement: snapshot diffs and the
   * change-data feed, replica sync, WAP branches, zero-copy CLONE,
@@ -488,20 +488,6 @@ private[graft] trait SinksReplication { this: Sinks.type =>
     ()
   }
 
-  /** Link every live commit's `_changes` files into `feed/`. Runs under
-    * the commit lock. Walks the base chain back from the CURRENT
-    * version — never a bare directory listing — so an orphan version
-    * (crash between rename and pointer flip; its data was never live)
-    * can never leak rows into the feed. The walk follows the
-    * version-level `_VBASE` marker (every commit writes one), so
-    * commits WITHOUT a feed — compaction, plain publishes, restores —
-    * are traversed, not treated as the end of history: a feed-carrying
-    * version stranded behind one still gets (re-)linked before
-    * compaction's vacuum could delete its only copy. Idempotent by
-    * target name, which also makes it the crash repair: a commit that
-    * died after the pointer flip but before its feed links is healed by
-    * the next commit's pass.
-    */
   /** Watermark file inside `feed/`: the highest version whose chain has
     * been fully reconciled. Bounds [[reconcileFeedLocked]] to the
     * commits since the last pass (O(new commits), not O(retained
@@ -523,6 +509,20 @@ private[graft] trait SinksReplication { this: Sinks.type =>
     reconcileFeedLocked(root)
   }
 
+  /** Link every live commit's `_changes` files into `feed/`. Runs under
+    * the commit lock. Walks the base chain back from the CURRENT
+    * version — never a bare directory listing — so an orphan version
+    * (crash between rename and pointer flip; its data was never live)
+    * can never leak rows into the feed. The walk follows the
+    * version-level `_VBASE` marker (every commit writes one), so
+    * commits WITHOUT a feed — compaction, plain publishes, restores —
+    * are traversed, not treated as the end of history: a feed-carrying
+    * version stranded behind one still gets (re-)linked before
+    * compaction's vacuum could delete its only copy. Idempotent by
+    * target name, which also makes it the crash repair: a commit that
+    * died after the pointer flip but before its feed links is healed by
+    * the next commit's pass.
+    */
   private[graft] def reconcileFeedLocked(root: String): Unit = {
     val feed = Paths.get(root, FeedDir)
     if (!Files.isDirectory(feed)) return

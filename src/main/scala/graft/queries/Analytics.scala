@@ -219,9 +219,9 @@ object Analytics extends QueryModule {
       Sinks.publishVersioned(base, root)
       // stream a PRIVATE dir holding only a symlink to the orders
       // fixture — the file stream source lists its path recursively for
-      // partition discovery, and a reused harness dir (the Stress
-      // output root) accumulates table layouts whose mixed directory
-      // structures fail that inference
+      // partition discovery, and a reused harness dir accumulates
+      // table layouts whose mixed directory structures fail that
+      // inference
       val srcDir = java.nio.file.Files.createTempDirectory("graft_qsu_src")
       graft.streaming.StreamOps.cleanOnExit(srcDir)
       java.nio.file.Files.createSymbolicLink(srcDir.resolve("orders.parquet"),
@@ -267,7 +267,7 @@ object Analytics extends QueryModule {
     // pay the reconciliation. Within-batch multi-op keys collapse via
     // latestPerKey first — the same O(batch) window, no table access.
     "q_streaming_upsert" -> ((s, dir) => {
-      import graft.ops.{EqDel, Merge, Sinks}
+      import graft.ops.{EqDel, Sinks}
       val rootDir = java.nio.file.Files.createTempDirectory("graft_qsu")
       graft.streaming.StreamOps.cleanOnExit(rootDir)
       val root = rootDir.toString + "/t"
@@ -277,9 +277,9 @@ object Analytics extends QueryModule {
       Sinks.publishVersioned(base, root)
       // stream a PRIVATE dir holding only a symlink to the orders
       // fixture — the file stream source lists its path recursively for
-      // partition discovery, and a reused harness dir (the Stress
-      // output root) accumulates table layouts whose mixed directory
-      // structures fail that inference
+      // partition discovery, and a reused harness dir accumulates
+      // table layouts whose mixed directory structures fail that
+      // inference
       val srcDir = java.nio.file.Files.createTempDirectory("graft_qsu_src")
       graft.streaming.StreamOps.cleanOnExit(srcDir)
       java.nio.file.Files.createSymbolicLink(srcDir.resolve("orders.parquet"),

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Q
 import graft.io.Tables
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

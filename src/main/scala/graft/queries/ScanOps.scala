@@ -2691,7 +2691,7 @@ object ScanOps extends QueryModule {
     */
   def bloomTable(s: SparkSession, dir: String): (String, Long) = this.synchronized {
     import java.nio.file.{Files, Paths}
-    import graft.ops.{Bloom, Sinks, Stats}
+    import graft.ops.{Bloom, Sinks}
     val tbl = "/tmp/graft_bloomz_" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "/orders_h"
     val keyFile = Paths.get(tbl, "_PROBEKEY")
     val stampFile = Paths.get(tbl, "_SRCSTAMP")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import graft.io.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}

@@ -143,35 +143,6 @@ class CorpusSpec extends AnyFunSuite {
     assert(got(2L)._2 < got(3L)._2)
   }
 
-  test("B124 bigrams_arr over the stored tokens ≡ bigrams(text), and pinned-token lmScore ≡ unpinned") {
-    import spark.implicits._
-    import org.apache.spark.sql.graft.ExprBridge
-    // fixture docs + tokenize edges: empty, one-token, unicode/digit
-    // boundaries, punctuation-only (tokenizes to nothing)
-    val edges = Seq((300001L, ""), (300002L, "one"), (300003L, "A-b C9 ü x"),
-      (300004L, "?!,"), (300005L, "a b")).toDF("doc_id", "text")
-    val docs = Tables.documents(spark, sf001).select("doc_id", "text")
-      .unionByName(edges)
-    val tokCol = array_remove(split(lower(col("text")), "[^a-z0-9]+"), "")
-    val direct = docs.select(col("doc_id"),
-        ExprBridge.column(graft.functions.Bigrams(
-          ExprBridge.expr(col("text")))).as("bg"))
-      .as[(Long, Seq[(String, String)])].collect().toMap
-    val fromArr = docs.select(col("doc_id"),
-        ExprBridge.column(graft.functions.ArrayBigrams(
-          ExprBridge.expr(tokCol))).as("bg"))
-      .as[(Long, Seq[(String, String)])].collect().toMap
-    assert(fromArr == direct, "bigrams_arr(tokens) drifted from bigrams(text): " +
-      direct.keys.filter(k => direct(k) != fromArr(k)).take(3).toSeq)
-    // and the pinned-token lmScore computes the identical scores
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val unpinned = Corpus.lmScore(docs, "doc_id", "text")
-    val pinned = Corpus.lmScore(docs, "doc_id", "text", pinTokens = true)
-    assert(canon(pinned) == canon(unpinned))
-  }
-
   test("B124 Zipf-head skew: salted scoring spreads the hot bigram and stays value-identical") {
     import spark.implicits._
     // natural-language bigram keys are Zipfian: at 100 TB the "of the"
@@ -362,10 +333,12 @@ class CorpusSpec extends AnyFunSuite {
     import org.apache.spark.sql.graft.ExprBridge
     // fixture docs plus edge cases: empty, one token, exactly two,
     // punctuation-only, unicode uppercase (lower() parity), digits,
-    // leading/trailing separators (split's boundary empties)
+    // leading/trailing separators (split's boundary empties), mixed
+    // unicode/digit token boundaries, single-character tokens
     val edges = Seq((910101L, ""), (910102L, "solo"), (910103L, "Two words"),
       (910104L, "?!,;"), (910105L, "ÀÉÎ öü ss"), (910106L, "a1 2b c3 4d"),
-      (910107L, "  lead and trail  "), (910108L, "x—y–z")).toDF("doc_id", "text")
+      (910107L, "  lead and trail  "), (910108L, "x—y–z"),
+      (910109L, "A-b C9 ü x"), (910110L, "a b")).toDF("doc_id", "text")
     val docs = Tables.documents(spark, sf001).select("doc_id", "text")
       .unionByName(edges)
     val t = array_remove(split(lower(col("text")), "[^a-z0-9]+"), "")

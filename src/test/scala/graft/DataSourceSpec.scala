@@ -138,9 +138,15 @@ class DataSourceSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(tbl).count() == 40)
     // append is a LINKED commit: prior files carried by inode, and the
     // insert feed makes the commit table_changes-readable
+    def liveKeys = graft.io.Fs.walkParquet(java.nio.file.Paths.get(Sinks.resolve(tbl)))
+      .map(f => Files.readAttributes(f,
+        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()).toSet
+    val before = liveKeys
     spark.range(40, 50).select($"id".as("k"), ($"id" % 4).cast("string").as("p"))
       .write.format("graft").mode("append").save(tbl)
     assert(spark.read.format("graft").load(tbl).count() == 50)
+    assert(before.nonEmpty && before.subsetOf(liveKeys),
+      "the append must carry every prior file by inode, not rewrite it")
     val changed = spark.sql(s"SELECT * FROM table_changes('$tbl', 1, 2)")
     assert(changed.filter(col("_change_type") === "insert").count() == 10)
     // save-mode matrix on an existing table

@@ -327,6 +327,33 @@ class TableStreamSpec extends AnyFunSuite {
       "v1's feed rows must be re-linked by the compaction commit before its vacuum")
   }
 
+  test("repairFeed relinks a feed link lost below the watermark, which ordinary commits skip") {
+    import spark.implicits._
+    val root = tmp("feedrepair") + "/t"
+    Sinks.enableStreamFeed(root)
+    Sinks.publishVersioned((0L until 10L).toDF("k"), root, None)                       // v0, no feed
+    Sinks.appendVersioned((10L until 20L).toDF("k"), root, Some(0L), emitFeed = true) // v1
+    Sinks.appendVersioned((20L until 25L).toDF("k"), root, Some(1L), emitFeed = true) // v2
+    Sinks.appendVersioned((25L until 28L).toDF("k"), root, Some(2L), emitFeed = true) // v3
+    val feedDir = Paths.get(root, Sinks.FeedDir)
+    def v1Links = graft.io.Fs.listDir(feedDir).filter(_.getFileName.toString.startsWith("v1-"))
+    def feedKeys =
+      spark.read.parquet(feedDir.toString).select("k").as[Long].collect().sorted.toSeq
+    // an operator removes v1's link; the watermark already covers v1
+    assert(v1Links.nonEmpty)
+    v1Links.foreach(p => Files.delete(p))
+    // an ordinary commit reconciles only the versions above the watermark
+    Sinks.appendVersioned((28L until 30L).toDF("k"), root, Some(3L), emitFeed = true) // v4
+    assert(v1Links.isEmpty, "an ordinary commit must not re-walk below the watermark")
+    assert(feedKeys == (20L until 30L))
+    // the operator repair re-walks the whole live chain
+    Sinks.repairFeed(root)
+    assert(v1Links.nonEmpty)
+    assert(feedKeys == (10L until 30L))
+    val changes = spark.sql(s"SELECT * FROM table_changes('$root', 0, 4)")
+    assert(changes.select("k").as[Long].collect().sorted.toSeq == feedKeys)
+  }
+
   test("vacuum folds evicted _BATCHID stamps into the durable high-water mark") {
     import spark.implicits._
     val root = tmp("vacstamp") + "/t"
