@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
 import org.apache.spark.sql.types.StructType
@@ -103,7 +104,7 @@ private[catalog] object GraftMetaTables {
         val values = specCols.map { c =>
           segs.collectFirst {
             case s if s.startsWith(c + "=") =>
-              val v = graft.plans.MetaCountRewrite.unescapePath(s.drop(c.length + 1))
+              val v = ExternalCatalogUtils.unescapePathName(s.drop(c.length + 1))
               if (v == "__HIVE_DEFAULT_PARTITION__") null else v
           }.getOrElse(throw new IllegalStateException(
             s"$root: file ${r.getString(0)} carries no directory for " +

@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, Parqu
 import org.apache.spark.sql.internal.connector.{SupportsMetadata, SupportsPushDownCatalystFilters}
 import org.apache.spark.sql.types._
 
-import graft.ops.{ColMap, Dv, EqDel, Sinks, Stats}
+import graft.ops.{ColMap, Dv, EqDel, FileColStat, Sinks, Stats}
 
 /** The engine's scan tier over the v2 parquet delegate (B185/B186): one
   * thin wrapper around [[ParquetScanBuilder]]/[[ParquetScan]] that adds
@@ -568,29 +568,6 @@ private[graft] final class KeyedFilePartition(index0: Int,
   */
 private[graft] object CboStats {
 
-  private final case class ColRow(rows: Long, nulls: Long, hasStats: Boolean,
-      loL: Option[Long], hiL: Option[Long],
-      loD: Option[Double], hiD: Option[Double],
-      loT: Option[Long], hiT: Option[Long],
-      decScale: Option[Int], hll: Option[Array[Byte]],
-      hist: Option[Seq[Double]])
-  private final case class FileStats(rows: Long, cols: Map[String, ColRow])
-
-  private def load(spark: SparkSession, dir: String): Map[String, FileStats] = {
-    def optAt[T](r: org.apache.spark.sql.Row, i: Int): Option[T] =
-      if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[T])
-    Stats.sidecarRows(spark, dir).byFile.map { case (file, rs) =>
-      file -> FileStats(rs.head.getLong(2), rs.map { r =>
-        r.getString(1).toLowerCase -> ColRow(r.getLong(2), r.getLong(3),
-          r.getBoolean(4), optAt[Long](r, 5), optAt[Long](r, 6),
-          optAt[Double](r, 7), optAt[Double](r, 8),
-          optAt[Long](r, 9), optAt[Long](r, 10),
-          optAt[Int](r, 16), optAt[Array[Byte]](r, 18),
-          optAt[scala.collection.Seq[Double]](r, 19).map(_.toSeq))
-      }.toMap)
-    }
-  }
-
   def statsFor(scan: ParquetScan, tRoot: String,
       dir: String): Option[Statistics] = try {
     // hidden-partitioned versions (bucket AND range grids, round-15)
@@ -599,24 +576,22 @@ private[graft] object CboStats {
     if (Dv.exists(dir) || EqDel.exists(dir) || ColMap.exists(dir) ||
         Sinks.hasLayoutLegs(dir)) return None
     if (!Files.isDirectory(Paths.get(dir, Stats.Sidecar))) return None
-    val byFile = load(scan.sparkSession, dir)
+    val side = Stats.sidecarRows(scan.sparkSession, dir)
     // the delegate's own pushed partition filters select the files a
     // pruned scan actually reads — the reported rows follow the pruning
     val normDir = Paths.get(dir).toAbsolutePath.normalize.toString
     val selected = scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters)
       .flatMap(_.files.map(f =>
         f.getPath.toUri.getPath.stripPrefix(normDir).stripPrefix("/")))
-    val covered = selected.map(f => byFile.get(f).map(f -> _))
-    if (covered.exists(_.isEmpty)) return None // uncovered live file
-    val files = covered.flatten
-    val totalRows = files.map(_._2.rows).sum
+    if (!selected.forall(side.byFile.contains)) return None // uncovered live file
+    val totalRows = selected.map(f => side.byFile(f).head.rows).sum
     val rowWidth = 8L + scan.readSchema().map(_.dataType.defaultSize.toLong).sum
     val totalBytes = math.max(totalRows * rowWidth, 1L)
     val colStats = new java.util.HashMap[NamedReference, ColumnStatistics]()
     val partCols = scan.readPartitionSchema.fieldNames.map(_.toLowerCase).toSet
     scan.readSchema().fields.foreach { f =>
       if (!partCols.contains(f.name.toLowerCase)) {
-        val rs = files.map(_._2.cols.get(f.name.toLowerCase))
+        val rs = selected.map(fl => side.byFileCol.get((fl, f.name.toLowerCase)))
         if (rs.forall(_.isDefined)) {
           val cols = rs.flatten
           columnStat(f, cols).foreach(s =>
@@ -639,7 +614,7 @@ private[graft] object CboStats {
     * exotic types) serve null/distinct counts only.
     */
   private def columnStat(f: StructField,
-      cols: Seq[ColRow]): Option[ColumnStatistics] = {
+      cols: Seq[FileColStat]): Option[ColumnStatistics] = {
     val nullTotal = cols.map(_.nulls).sum
     val bearing = cols.filter(c => c.rows > c.nulls)
     def box[T](lo: Seq[T], hi: Seq[T], toInternal: T => Any)(
@@ -648,28 +623,28 @@ private[graft] object CboStats {
         (Optional.empty(), Optional.empty())
       else (Optional.of(toInternal(lo.min).asInstanceOf[Object]),
         Optional.of(toInternal(hi.max).asInstanceOf[Object]))
-    val usable = bearing.forall(_.hasStats)
+    val usable = bearing.forall(_.has_stats)
     val (minV, maxV): (Optional[Object], Optional[Object]) =
       if (bearing.isEmpty || !usable) (Optional.empty(), Optional.empty())
       else f.dataType match {
         // dec_scale marks int-backed DECIMAL bounds riding lo_l UNSCALED
         // — not this column's domain unless the type converts exactly
-        case ByteType if cols.forall(_.decScale.isEmpty) =>
-          box[Long](bearing.flatMap(_.loL), bearing.flatMap(_.hiL), v => v.toByte)
-        case ShortType if cols.forall(_.decScale.isEmpty) =>
-          box[Long](bearing.flatMap(_.loL), bearing.flatMap(_.hiL), v => v.toShort)
-        case IntegerType if cols.forall(_.decScale.isEmpty) =>
-          box[Long](bearing.flatMap(_.loL), bearing.flatMap(_.hiL), v => v.toInt)
-        case LongType if cols.forall(_.decScale.isEmpty) =>
-          box[Long](bearing.flatMap(_.loL), bearing.flatMap(_.hiL), identity[Long])
-        case DateType if cols.forall(_.decScale.isEmpty) =>
-          box[Long](bearing.flatMap(_.loL), bearing.flatMap(_.hiL), v => v.toInt)
+        case ByteType if cols.forall(_.dec_scale.isEmpty) =>
+          box[Long](bearing.flatMap(_.lo_l), bearing.flatMap(_.hi_l), v => v.toByte)
+        case ShortType if cols.forall(_.dec_scale.isEmpty) =>
+          box[Long](bearing.flatMap(_.lo_l), bearing.flatMap(_.hi_l), v => v.toShort)
+        case IntegerType if cols.forall(_.dec_scale.isEmpty) =>
+          box[Long](bearing.flatMap(_.lo_l), bearing.flatMap(_.hi_l), v => v.toInt)
+        case LongType if cols.forall(_.dec_scale.isEmpty) =>
+          box[Long](bearing.flatMap(_.lo_l), bearing.flatMap(_.hi_l), identity[Long])
+        case DateType if cols.forall(_.dec_scale.isEmpty) =>
+          box[Long](bearing.flatMap(_.lo_l), bearing.flatMap(_.hi_l), v => v.toInt)
         case FloatType =>
-          box[Double](bearing.flatMap(_.loD), bearing.flatMap(_.hiD), v => v.toFloat)
+          box[Double](bearing.flatMap(_.lo_d), bearing.flatMap(_.hi_d), v => v.toFloat)
         case DoubleType =>
-          box[Double](bearing.flatMap(_.loD), bearing.flatMap(_.hiD), identity[Double])
+          box[Double](bearing.flatMap(_.lo_d), bearing.flatMap(_.hi_d), identity[Double])
         case TimestampType | TimestampNTZType =>
-          box[Long](bearing.flatMap(_.loT), bearing.flatMap(_.hiT), identity[Long])
+          box[Long](bearing.flatMap(_.lo_t), bearing.flatMap(_.hi_t), identity[Long])
         case _ => (Optional.empty(), Optional.empty())
       }
     val distinct: OptionalLong =
@@ -704,7 +679,7 @@ private[graft] object CboStats {
     * only (the annotator records nothing for other types); declines
     * (empty) unless EVERY value-bearing file carries boundaries.
     */
-  private def mergedHistogram(f: StructField, bearing: Seq[ColRow],
+  private def mergedHistogram(f: StructField, bearing: Seq[FileColStat],
       distinct: OptionalLong): Optional[Histogram] = {
     val numeric = f.dataType match {
       case ByteType | ShortType | IntegerType | LongType |

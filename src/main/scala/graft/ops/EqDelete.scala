@@ -274,7 +274,7 @@ object EqDel {
     Sinks.stageLinkedPublish(Sinks.alignToLive(data, root, exp), root, exp,
       Nil, emitFeed = false, batchTag = batchTag, carry = _ => true,
       opTag = "eq-upsert",
-      rebase = Sinks.AppendRebase(e => Sinks.alignToLive(data, root, e)),
+      rebase = AppendRebase(e => Sinks.alignToLive(data, root, e)),
       eqDelete = Some(tombs))
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.io.Fs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
 /** Operator hygiene and layout maintenance: orphan vacuum,
   * compaction with retention, and target-size file planning.
@@ -265,10 +266,8 @@ private[graft] trait SinksMaintenance { this: Sinks.type =>
     val pcolNames = partSchema.fieldNames.toSeq
     val rows = rels.map { rel =>
       org.apache.spark.sql.Row.fromSeq(rel +: pcolNames.map { c =>
-        rawOf(rel, c).map { raw =>
-          try graft.plans.MetaCountRewrite.unescapePath(raw)
-          catch { case _: Exception => null }
-        }.filterNot(_ == "__HIVE_DEFAULT_PARTITION__").orNull
+        rawOf(rel, c).map(ExternalCatalogUtils.unescapePathName)
+          .filterNot(_ == "__HIVE_DEFAULT_PARTITION__").orNull
       })
     }
     val rawSchema = StructType(

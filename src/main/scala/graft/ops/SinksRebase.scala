@@ -5,6 +5,45 @@ import java.nio.file.{Files, Path, Paths}
 import graft.io.Fs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** Recovery contract of a linked commit whose base advanced ([[SinksRebase]]).
+  * Declared at package level, not inside the self-typed trait, so its
+  * case classes carry no outer reference to [[Sinks]].
+  */
+private[graft] sealed trait RebasePolicy
+/** Never rebase — the commit read state a concurrent writer may have
+  * changed; the caller must recompute (today's CME contract).
+  */
+private[graft] case object NoRebase extends RebasePolicy
+/** A blind linked APPEND: serial-equivalent to running either side of
+  * any commuting concurrent commit. `realign` re-checks the append
+  * frame against the new base (the [[Sinks.alignToLive]] guard) so a
+  * schema drift the gate missed still fails loudly.
+  */
+private[graft] final case class AppendRebase(realign: Option[Long] => DataFrame)
+    extends RebasePolicy
+/** A merge-on-read DV commit (DELETE/UPDATE/MERGE): rebase-safe iff
+  * `touched()` — the version-relative file keys its vector references
+  * — are all still live in the new current AND disjoint from every DV
+  * part added since (file-granular disjointness, the Delta rule).
+  */
+private[graft] final case class MorRebase(touched: () => Set[String])
+    extends RebasePolicy
+/** A copy-on-write DML commit (round-13): rebase-safe under the SAME
+  * file-granular disjointness gate as [[MorRebase]] — every touched
+  * file still live in the new current and untouched by any DV added
+  * since. Sound because every COW rewrite is snapshot-pinned (the
+  * touched-file scan reads explicit immutable paths of the base
+  * version; MERGE checkpoints its source), so the rebased commit's
+  * state equals the serial schedule [this COW at its base, then the
+  * interleaved commits]: the carry set (new current minus touched)
+  * IS old-files-minus-touched plus everything the interleaved
+  * commits added. An interleaved commit that rewrote, vacuumed, or
+  * DV'd a touched file fails the subset/disjointness check and keeps
+  * the honest CME.
+  */
+private[graft] final case class CowRebase(touched: Set[String])
+    extends RebasePolicy
+
 /** Concurrent-writer auto-rebase: the recovery policies of a linked
   * commit whose OCC base advanced, and the provably-safe gate that
   * decides whether a lost race re-stages or surfaces the honest CME.
@@ -30,42 +69,6 @@ private[graft] trait SinksRebase { this: Sinks.type =>
   // a snapshot-pinned COW rewrite commutes under the same file-granular
   // disjointness. Anything else (schema/constraint/layout changes,
   // quantizer swaps, overlapping file sets) keeps today's honest CME.
-
-  /** Recovery contract of a linked commit whose base advanced. */
-  private[graft] sealed trait RebasePolicy
-  /** Never rebase — the commit read state a concurrent writer may have
-    * changed; the caller must recompute (today's CME contract).
-    */
-  private[graft] case object NoRebase extends RebasePolicy
-  /** A blind linked APPEND: serial-equivalent to running either side of
-    * any commuting concurrent commit. `realign` re-checks the append
-    * frame against the new base (the [[Sinks.alignToLive]] guard) so a
-    * schema drift the gate missed still fails loudly.
-    */
-  private[graft] final case class AppendRebase(realign: Option[Long] => DataFrame)
-      extends RebasePolicy
-  /** A merge-on-read DV commit (DELETE/UPDATE/MERGE): rebase-safe iff
-    * `touched()` — the version-relative file keys its vector references
-    * — are all still live in the new current AND disjoint from every DV
-    * part added since (file-granular disjointness, the Delta rule).
-    */
-  private[graft] final case class MorRebase(touched: () => Set[String])
-      extends RebasePolicy
-  /** A copy-on-write DML commit (round-13): rebase-safe under the SAME
-    * file-granular disjointness gate as [[MorRebase]] — every touched
-    * file still live in the new current and untouched by any DV added
-    * since. Sound because every COW rewrite is snapshot-pinned (the
-    * touched-file scan reads explicit immutable paths of the base
-    * version; MERGE checkpoints its source), so the rebased commit's
-    * state equals the serial schedule [this COW at its base, then the
-    * interleaved commits]: the carry set (new current minus touched)
-    * IS old-files-minus-touched plus everything the interleaved
-    * commits added. An interleaved commit that rewrote, vacuumed, or
-    * DV'd a touched file fails the subset/disjointness check and keeps
-    * the honest CME.
-    */
-  private[graft] final case class CowRebase(touched: Set[String])
-      extends RebasePolicy
 
   /** Bound on CME→re-stage rounds. Each retry costs O(delta) bytes +
     * O(live files) hardlinks — metadata-scale — so the bound is

@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DateType, Decimal, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
 
 /** One column's min/max/null summary for one parquet file, normalized to
   * four comparison domains (integer-family → `lo_l/hi_l`, float-family →
@@ -63,17 +65,16 @@ case class FileColStat(file: String, col: String, rows: Long, nulls: Long,
     hll: Option[Array[Byte]] = None,
     hist: Option[Seq[Double]] = None)
 
-/** The collected `_stats` rows of one version dir
-  * ([[Stats.sidecarRows]]), padded to [[Stats.SidecarLayout]];
-  * `columns` is the set the sidecar really carries.
+/** The `_stats` rows of one version dir ([[Stats.sidecarRows]]), typed
+  * as the annotator writes them; a column an older sidecar lacks reads
+  * as `None`. `columns` is the set the sidecar really carries.
   */
-private[graft] final case class SidecarRows(rows: Array[org.apache.spark.sql.Row],
+private[graft] final case class SidecarRows(rows: Array[FileColStat],
     columns: Set[String]) {
-  lazy val byFile: Map[String, Array[org.apache.spark.sql.Row]] =
-    rows.groupBy(_.getString(0))
+  lazy val byFile: Map[String, Array[FileColStat]] = rows.groupBy(_.file)
   /** Rows by (file, lower-cased column). */
-  lazy val byFileCol: Map[(String, String), org.apache.spark.sql.Row] =
-    rows.map(r => (r.getString(0), r.getString(1).toLowerCase) -> r).toMap
+  lazy val byFileCol: Map[(String, String), FileColStat] =
+    rows.map(r => (r.file, r.col.toLowerCase) -> r).toMap
 }
 
 /** File-level data skipping over parquet tables (the Delta/Iceberg
@@ -173,6 +174,189 @@ object Stats {
       if (roundUp) java.math.RoundingMode.CEILING
       else java.math.RoundingMode.FLOOR).unscaledValue().longValueExact())
     catch { case _: ArithmeticException => None }
+
+  /** How a [[Conj]] compares its column against its value(s). */
+  private[graft] sealed trait Cmp
+  /** Equal to one of the values (`=` has one, `IN` several). */
+  private[graft] case object CEq extends Cmp
+  private[graft] case object CLt extends Cmp
+  private[graft] case object CLe extends Cmp
+  private[graft] case object CGt extends Cmp
+  private[graft] case object CGe extends Cmp
+
+  /** One top-level conjunct `col <cmp> literal` (or `col IN (…)`), its
+    * values in the sidecar's comparison domains. Strictness is kept:
+    * `c > 5` is not `c >= 5` — a keep-set could relax it, but an ALL
+    * verdict would over-count a file whose minimum is the open endpoint.
+    */
+  private[graft] final case class Conj(colName: String, cmp: Cmp, vs: Seq[Any])
+
+  /** What one file's recorded range proves about a conjunct. */
+  private[graft] sealed trait Verdict
+  /** Every row provably fails: the file need not be opened. */
+  private[graft] case object NoRows extends Verdict
+  /** Unprovable either way: the file must be scanned. */
+  private[graft] case object SomeRows extends Verdict
+  /** Every row provably passes: its row count answers for it. */
+  private[graft] case object AllRows extends Verdict
+
+  /** A literal's value in the sidecar's comparison domains (internal
+    * Catalyst values), or None for types the sidecar cannot compare.
+    * Dates are epoch days — parquet DATE is always days, so they compare
+    * in the integer domain. Timestamps carry their instant/wall-clock
+    * flavour ([[TsVal]]) against the unit-normalized `lo_t/hi_t` micros.
+    * Decimals travel as exact BigDecimal and are rescaled to each FILE's
+    * recorded scale ([[verdict]]).
+    */
+  private def literalValue(l: Literal): Option[Any] =
+    if (l.value == null) None
+    else l.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | DateType |
+          FloatType | DoubleType => Some(l.value)
+      case StringType => Some(l.value.toString)
+      case TimestampType => Some(TsVal(l.value.asInstanceOf[Long], instant = true))
+      case TimestampNTZType => Some(TsVal(l.value.asInstanceOf[Long], instant = false))
+      case _: DecimalType => Some(l.value.asInstanceOf[Decimal].toJavaBigDecimal)
+      case _ => None
+    }
+
+  /** The SQL doors' one conjunct parser: a comparison of an attribute
+    * with literal(s) of its own type, or None when the shape or type is
+    * outside what the sidecar can classify.
+    */
+  private[graft] def conjOf(e: Expression): Option[Conj] = {
+    def mk(a: Attribute, cmp: Cmp, ls: Seq[Expression]): Option[Conj] = {
+      val vs = ls.flatMap {
+        case l: Literal if l.dataType == a.dataType => literalValue(l)
+        case _ => None
+      }
+      if (ls.nonEmpty && vs.size == ls.size) Some(Conj(a.name, cmp, vs)) else None
+    }
+    e match {
+      case EqualTo(a: Attribute, l: Literal) => mk(a, CEq, Seq(l))
+      case EqualTo(l: Literal, a: Attribute) => mk(a, CEq, Seq(l))
+      case GreaterThan(a: Attribute, l: Literal) => mk(a, CGt, Seq(l))
+      case GreaterThan(l: Literal, a: Attribute) => mk(a, CLt, Seq(l))
+      case GreaterThanOrEqual(a: Attribute, l: Literal) => mk(a, CGe, Seq(l))
+      case GreaterThanOrEqual(l: Literal, a: Attribute) => mk(a, CLe, Seq(l))
+      case LessThan(a: Attribute, l: Literal) => mk(a, CLt, Seq(l))
+      case LessThan(l: Literal, a: Attribute) => mk(a, CGt, Seq(l))
+      case LessThanOrEqual(a: Attribute, l: Literal) => mk(a, CLe, Seq(l))
+      case LessThanOrEqual(l: Literal, a: Attribute) => mk(a, CGe, Seq(l))
+      case In(a: Attribute, list) => mk(a, CEq, list)
+      case _ => None
+    }
+  }
+
+  /** NTZ stats against an instant bound (or vice versa) only coincide
+    * when the session renders instants in UTC.
+    */
+  private[graft] def sessionUtc(spark: SparkSession): Boolean =
+    java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+      .normalized() == java.time.ZoneOffset.UTC
+
+  /** A recorded bound (or a partition directory's value) against bound
+    * `v` in their shared domain; None when the domains differ. Doubles
+    * compare with `Double.compare`, which orders -0.0 below 0.0 as the
+    * scan does: a primitive compare would call a file of 0.0 values ALL
+    * for `x <= -0.0D`, where the scan matches none of its rows. A
+    * non-integral bound against integer-domain stats is a caller bug
+    * and fails loudly.
+    */
+  private def compareIn(stat: Any, v: Any): Option[Int] = (stat, v) match {
+    case (_, _: TsVal | _: java.math.BigDecimal) => None
+    case (s: String, _) => Some(utf8Compare(s, v.toString))
+    case (x: Double, n: Number) => Some(java.lang.Double.compare(x, n.doubleValue))
+    case (_: Double, _) =>
+      throw new IllegalArgumentException(s"numeric bound expected, got $v")
+    case (x: Long, _) => Some(java.lang.Long.compare(x, integral(v)))
+    case (x: Int, _) => Some(java.lang.Long.compare(x.toLong, integral(v)))
+    case _ => None
+  }
+
+  private def integral(v: Any): Long = v match {
+    case n: Byte => n.toLong
+    case n: Short => n.toLong
+    case n: Int => n.toLong
+    case n: Long => n
+    case other => throw new IllegalArgumentException(
+      s"integer-domain stats need an integral bound, got $other " +
+        "(floor/ceil fractional bounds at the call site)")
+  }
+
+  /** The verdict of a value range against `c`, given comparisons of its
+    * low and high edge with a bound (possibly widened edges — widening
+    * only shrinks the NONE and ALL verdicts, both conservative) and its
+    * null count. `exactPoint` = every row holds the one value `lo == hi`
+    * (a partition directory), which lets `=` decide ALL.
+    */
+  private def rangeVerdict(c: Conj, lo: Any => Option[Int],
+      hi: Any => Option[Int], nulls: Long, exactPoint: Boolean): Verdict = {
+    val v = c.vs.head
+    def all(edge: Option[Int], ok: Int => Boolean) = nulls == 0 && edge.exists(ok)
+    c.cmp match {
+      case CEq =>
+        if (c.vs.forall(x => lo(x).exists(_ > 0) || hi(x).exists(_ < 0))) NoRows
+        else if (exactPoint && nulls == 0 && c.vs.exists(lo(_).contains(0))) AllRows
+        else SomeRows
+      case CGe =>
+        if (all(lo(v), _ >= 0)) AllRows else if (hi(v).exists(_ < 0)) NoRows else SomeRows
+      case CGt =>
+        if (all(lo(v), _ > 0)) AllRows else if (hi(v).exists(_ <= 0)) NoRows else SomeRows
+      case CLe =>
+        if (all(hi(v), _ <= 0)) AllRows else if (lo(v).exists(_ > 0)) NoRows else SomeRows
+      case CLt =>
+        if (all(hi(v), _ < 0)) AllRows else if (lo(v).exists(_ >= 0)) NoRows else SomeRows
+    }
+  }
+
+  /** The verdict of a partition directory whose value `v` is every
+    * row's value (non-null).
+    */
+  private[graft] def pointVerdict(c: Conj, v: Any): Verdict =
+    rangeVerdict(c, compareIn(v, _), compareIn(v, _), nulls = 0, exactPoint = true)
+
+  /** The one per-file verdict: what file row `r`'s recorded range proves
+    * about conjunct `c`. Stats-skipping keeps every file that is not
+    * NONE; the metadata answers count ALL files from their row counts.
+    *  - no usable stats (`has_stats = false`): SOME; an all-null file:
+    *    NONE (a comparison never matches null).
+    *  - timestamps compare only bounds whose flavour matches the footer's
+    *    `t_adj`, or any flavour under a UTC session.
+    *  - int-backed DECIMAL rows hold UNSCALED values at `dec_scale`: a
+    *    decimal bound rescales to it, floored where it meets the file's
+    *    maximum and ceiled where it meets the minimum, so the rescaled
+    *    bound only widens what is kept; such a row is never ALL.
+    *  - a bound of another domain gives SOME.
+    */
+  private[graft] def verdict(r: FileColStat, c: Conj, sessionUtc: Boolean): Verdict = {
+    def range(lo: Any, hi: Any, cj: Conj = c) =
+      rangeVerdict(cj, compareIn(lo, _), compareIn(hi, _), r.nulls, exactPoint = false)
+    if (!r.has_stats) SomeRows
+    else if (r.nulls == r.rows) NoRows
+    else (r.lo_t, r.dec_scale, r.lo_l, r.lo_d, r.lo_s) match {
+      case (Some(lo), _, _, _, _) =>
+        val us = c.vs.collect {
+          case TsVal(u, instant) if r.t_adj.contains(instant) || sessionUtc => u
+        }
+        if (us.size < c.vs.size) SomeRows else range(lo, r.hi_t.get, c.copy(vs = us))
+      case (_, Some(scale), Some(lo), _, _) =>
+        def unscaled(v: Any, up: Boolean) = v match {
+          case d: java.math.BigDecimal => decUnscaled(d, scale, up)
+          case _ => None
+        }
+        rangeVerdict(c, v => unscaled(v, up = true).map(lo.compare(_)),
+          v => unscaled(v, up = false).map(r.hi_l.get.compare(_)),
+          r.nulls, exactPoint = false) match {
+          case AllRows => SomeRows
+          case other => other
+        }
+      case (_, None, Some(lo), _, _) => range(lo, r.hi_l.get)
+      case (_, None, _, Some(lo), _) => range(lo, r.hi_d.get)
+      case (_, None, _, _, Some(lo)) => range(lo, r.hi_s.get)
+      case _ => SomeRows
+    }
+  }
 
   /** Collect footer stats for `cols` over every `*.parquet` file in `dir`
     * and write the `_stats` sidecar. Footer reads are distributed across
@@ -469,7 +653,7 @@ object Stats {
     if (!java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(dir, Sidecar))) return Long.MaxValue
     val byFile = sidecarRows(spark, dir).byFile
-    abs.map(a => byFile.get(relKey(dir, a)).fold(Long.MaxValue)(_.head.getLong(2)))
+    abs.map(a => byFile.get(relKey(dir, a)).fold(Long.MaxValue)(_.head.rows))
       .foldLeft(0L)(math.max)
   }
 
@@ -672,25 +856,16 @@ object Stats {
   def sidecar(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(s"$dir/$Sidecar")
 
-  /** Every `_stats` column in one fixed order, typed as
-    * [[FileColStat]] writes it: [[sidecarRows]] pads the columns an
-    * older sidecar lacks with typed nulls, so row indices stay stable
-    * across eras.
-    */
-  private[graft] val SidecarLayout: Seq[String] = Seq("file", "col", "rows",
-    "nulls", "has_stats", "lo_l", "hi_l", "lo_d", "hi_d", "lo_t", "hi_t",
-    "t_adj", "t_exact", "lo_s", "hi_s", "s_exact", "dec_scale", "sum_l",
-    "hll", "hist")
-
   private val rowsMemo = new VersionMemo[SidecarRows](256)
 
-  /** The `_stats` rows of version dir `dir` in [[SidecarLayout]] order,
+  /** The `_stats` rows of version dir `dir` as [[FileColStat]]s,
     * collected once per stamped version: every plan-time consumer
     * (pruning, row-count gates, metadata answers, CBO statistics)
-    * derives from this one read. `columns` names the columns the sidecar
-    * really carries — an all-null padded column must never read as
-    * "all-null data", only as "this sidecar cannot answer". No rows
-    * when the version has no sidecar.
+    * derives from this one read. A column an older sidecar lacks is
+    * padded with a typed null and reads as `None`; `columns` names the
+    * columns the sidecar really carries — a padded column must never
+    * read as "all-null data", only as "this sidecar cannot answer". No
+    * rows when the version has no sidecar.
     */
   private[graft] def sidecarRows(spark: SparkSession, dir: String): SidecarRows = {
     val path = s"$dir/$Sidecar"
@@ -699,10 +874,10 @@ object Stats {
         SidecarRows(Array.empty, Set.empty)
       else {
         val raw = sidecar(spark, dir)
-        val types = org.apache.spark.sql.Encoders.product[FileColStat].schema
-        SidecarRows(raw.select(SidecarLayout.map(n =>
-          if (raw.columns.contains(n)) col(n)
-          else lit(null).cast(types(n).dataType).as(n)): _*).collect(),
+        val enc = org.apache.spark.sql.Encoders.product[FileColStat]
+        SidecarRows(raw.select(enc.schema.fields.toSeq.map(f =>
+          if (raw.columns.contains(f.name)) col(f.name)
+          else lit(null).cast(f.dataType).as(f.name)): _*).as(enc).collect(),
           raw.columns.toSet)
       }
     }
@@ -720,7 +895,7 @@ object Stats {
     // re-annotation set of appends/rewrites — the new files don't
     // carry the column at all
     val gone = ColMap.dropped(dir).map(_.toLowerCase)
-    sidecarRows(spark, dir).rows.map(_.getString(1)).distinct.toSeq
+    sidecarRows(spark, dir).rows.map(_.col).distinct.toSeq
       .filterNot(c => gone.contains(c.toLowerCase)).sorted
   }
 
@@ -745,92 +920,32 @@ object Stats {
   def prunedFilesBounds(spark: SparkSession, dir: String,
       colName: String, lo: Option[Any], hi: Option[Any]): Seq[String] = {
     require(lo.isDefined || hi.isDefined, "at least one bound is required")
-    val loN = lo.map(normalizeBound)
-    val hiN = hi.map(normalizeBound)
+    keptFiles(spark, dir,
+      lo.map(v => Conj(colName, CGe, Seq(normalizeBound(v)))).toSeq ++
+        hi.map(v => Conj(colName, CLe, Seq(normalizeBound(v)))))
+  }
+
+  /** The files of `dir` (absolute, sorted) that no conjunct in `conjs`
+    * proves empty ([[verdict]] NONE) — the keep-set of both stats
+    * skipping doors. A file without a sidecar row for a conjunct's
+    * column is kept, and a version without a sidecar (published without
+    * `statsCols`) keeps every file: missing stats degrade to a scan,
+    * never to an error. Conjuncts may name logical columns under a
+    * column mapping; the sidecar speaks physical names.
+    */
+  private[graft] def keptFiles(spark: SparkSession, dir: String,
+      conjs: Seq[Conj]): Seq[String] = {
     val all = graft.io.Fs.walkParquet(java.nio.file.Paths.get(dir))
       .map(_.toString).sorted
-    // no sidecar at all (a version published without statsCols, e.g. a
-    // plain merge) degrades to the full file list — same conservative
-    // contract as a missing per-file stats row, never an error
-    if (!java.nio.file.Files.isDirectory(
+    if (conjs.isEmpty || !java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(dir, Sidecar))) return all
-    // the sidecar speaks PHYSICAL names; accept a logical name under a
-    // column mapping (idempotent — a physical name maps to itself)
-    val physName = ColMap.toPhysicalName(dir, colName)
-    val side = sidecarRows(spark, dir).rows
-      .filter(_.getString(1) == physName).map(r => r.getString(0) -> r).toMap
-    // NTZ stats vs instant bounds (or vice versa) only coincide when
-    // the session renders instants in UTC; elsewhere keep the file
-    val sessionUtc = java.time.ZoneId
-      .of(spark.sessionState.conf.sessionLocalTimeZone).normalized() ==
-      java.time.ZoneOffset.UTC
-    def notNull(r: org.apache.spark.sql.Row, f: String): Boolean =
-      !r.isNullAt(r.fieldIndex(f))
+    val side = sidecarRows(spark, dir).byFileCol
+    val utc = sessionUtc(spark)
+    val phys = conjs.map(c => c -> ColMap.toPhysicalName(dir, c.colName).toLowerCase)
     all.filter { f =>
-      side.get(f.stripPrefix(dir).stripPrefix("/")) match {
-        case None => true // no stats row → cannot prune
-        case Some(r) =>
-          if (!r.getAs[Boolean]("has_stats")) true
-          else if (r.getAs[Long]("nulls") == r.getAs[Long]("rows")) false // all null
-          else if (notNull(r, "lo_t")) {
-            val adj = r.getAs[Boolean]("t_adj")
-            def usable(q: Any) = q match {
-              case TsVal(_, instant) => instant == adj || sessionUtc
-              case _ => false // non-timestamp bound vs timestamp stats: keep
-            }
-            if (!(loN.forall(usable) && hiN.forall(usable))) true
-            else loN.forall(q => r.getAs[Long]("hi_t") >= q.asInstanceOf[TsVal].us) &&
-              hiN.forall(q => r.getAs[Long]("lo_t") <= q.asInstanceOf[TsVal].us)
-          } else if (notNull(r, "dec_scale")) {
-            // int-backed DECIMAL: lo_l/hi_l hold UNSCALED values at the
-            // recorded scale — only a decimal bound rescaled to the SAME
-            // scale compares; any other bound flavor keeps the file
-            val scale = r.getAs[Int]("dec_scale")
-            def cmp(q: Any, up: Boolean): Option[Long] = q match {
-              case d: java.math.BigDecimal => decUnscaled(d, scale, up)
-              case _ => None
-            }
-            loN.forall(q => cmp(q, up = false)
-              .forall(u => r.getAs[Long]("hi_l") >= u)) &&
-              hiN.forall(q => cmp(q, up = true)
-                .forall(u => r.getAs[Long]("lo_l") <= u))
-          } else if (notNull(r, "lo_l")) {
-            // a timestamp/decimal bound against a plain-int64 sidecar
-            // row has no common domain — keep, never guess
-            if ((loN ++ hiN).exists(q => q.isInstanceOf[TsVal] ||
-                q.isInstanceOf[java.math.BigDecimal])) true
-            else loN.forall(q => r.getAs[Long]("hi_l") >= toLong(q)) &&
-              hiN.forall(q => r.getAs[Long]("lo_l") <= toLong(q))
-          } else if (notNull(r, "lo_d")) {
-            // a BigDecimal bound down-converted to double could round
-            // across a file edge — keep rather than guess
-            if ((loN ++ hiN).exists(q => q.isInstanceOf[TsVal] ||
-                q.isInstanceOf[java.math.BigDecimal])) true
-            else loN.forall(q => r.getAs[Double]("hi_d") >= toDouble(q)) &&
-              hiN.forall(q => r.getAs[Double]("lo_d") <= toDouble(q))
-          } else if (notNull(r, "lo_s")) {
-            if ((loN ++ hiN).exists(q => q.isInstanceOf[TsVal] ||
-                q.isInstanceOf[java.math.BigDecimal])) true
-            else loN.forall(q => utf8Compare(r.getAs[String]("hi_s"), q.toString) >= 0) &&
-              hiN.forall(q => utf8Compare(r.getAs[String]("lo_s"), q.toString) <= 0)
-          } else true // has_stats with no domain should be unreachable; keep
-      }
+      val key = relKey(dir, f)
+      phys.forall { case (c, p) => side.get((key, p)).forall(verdict(_, c, utc) != NoRows) }
     }
-  }
-
-  private def toLong(v: Any): Long = v match {
-    case n: Byte => n.toLong
-    case n: Short => n.toLong
-    case n: Int => n.toLong
-    case n: Long => n
-    case other => throw new IllegalArgumentException(
-      s"integer-domain stats need an integral bound, got $other " +
-        "(floor/ceil fractional bounds at the call site)")
-  }
-
-  private def toDouble(v: Any): Double = v match {
-    case n: Number => n.doubleValue()
-    case other => throw new IllegalArgumentException(s"numeric bound expected, got $other")
   }
 
   /** Stats-pruned range scan: open only the files whose footer range can
@@ -923,24 +1038,24 @@ object Stats {
           .select(col("file"), col("rows"), col("nulls"),
             col("hll").isNull.as("no_sketch"))
           .collect()
-      val byFile = rows.map(r => r.getString(0) -> r).toMap
+      val byFile = rows.map(r => r.getAs[String]("file") -> r).toMap
       liveRels.foreach { rel =>
         val r = byFile.getOrElse(rel, throw new IllegalStateException(
           s"ndv($c): live file $rel has no sidecar row — " +
             "CALL system.annotate_stats to retrofit"))
-        if (r.getLong(1) > r.getLong(2) && r.getBoolean(3))
+        if (r.getAs[Long]("rows") > r.getAs[Long]("nulls") && r.getAs[Boolean]("no_sketch"))
           throw new IllegalStateException(
             s"ndv($c): live file $rel carries no sketch (annotated before " +
               "'graft.ndv.columns' was declared?) — CALL " +
               "system.annotate_stats to retrofit")
       }
       val withSketch = liveRels.toSeq.sorted
-        .filter(rel => byFile.get(rel).exists(!_.getBoolean(3)))
+        .filter(rel => byFile.get(rel).exists(!_.getAs[Boolean]("no_sketch")))
       val est =
         if (withSketch.isEmpty) 0L // every live file empty or all-null
         else {
           val tail: Seq[Array[Byte]] =
-            if (small) withSketch.map(rel => byFile(rel).getAs[Array[Byte]](4))
+            if (small) withSketch.map(rel => byFile(rel).getAs[Array[Byte]]("hll"))
             else {
               val rankDf = spark.createDataFrame(
                 withSketch.zipWithIndex.map { case (f, i) => (f, i.toLong) })

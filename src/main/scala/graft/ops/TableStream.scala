@@ -92,26 +92,36 @@ object TableStream {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!committed(root, tag, id)) {
-          var attempts = 0
-          var done = false
-          while (!done) {
-            try {
-              commit(batch.toDF(), s"$tag:$id")
-              done = true
-            } catch {
-              case _: java.util.ConcurrentModificationException if attempts < 5 =>
-                attempts += 1 // a concurrent writer moved the table; re-base
-            }
-          }
-          // durable high-water mark that survives vacuum; written AFTER
-          // the commit, so a crash between the two is covered by the
-          // version-dir scan in `committed`
-          TableProps.update(root)(_ + (lastBatchKey(tag) -> id.toString))
-        }
+        landOnce(root, tag, id)()(commit(batch.toDF(), _))
       }
       .start()
   }
+
+  /** Land batch `id` of writer `tag` exactly once: skip an id already
+    * committed, run `setup` once, retry `commit` (handed the batch tag
+    * to stamp) across up to five CMEs — a concurrent writer moved the
+    * table and the commit re-bases — then advance the durable
+    * high-water mark. The mark survives vacuum and is written AFTER
+    * the commit, so a crash between the two is covered by the
+    * version-dir scan in `committed`.
+    */
+  private def landOnce(root: String, tag: String, id: Long)(
+      setup: => Unit = ())(commit: String => Unit): Unit =
+    if (!committed(root, tag, id)) {
+      setup
+      var attempts = 0
+      var done = false
+      while (!done) {
+        try {
+          commit(s"$tag:$id")
+          done = true
+        } catch {
+          case _: java.util.ConcurrentModificationException if attempts < 5 =>
+            attempts += 1
+        }
+      }
+      TableProps.update(root)(_ + (lastBatchKey(tag) -> id.toString))
+    }
 
   /** One micro-batch landing for the V1 streaming-sink door
     * (`df.writeStream.format("graft")` —
@@ -125,54 +135,43 @@ object TableStream {
     * run in the catalog door's order.
     */
   private[graft] def sinkBatch(root: String, checkpoint: String, id: Long,
-      batch: DataFrame, partitionBy: Seq[String]): Unit = {
-    val tag = writerTag(checkpoint)
-    if (committed(root, tag, id)) return
-    val spark = batch.sparkSession
-    if (Sinks.currentVersion(root).isEmpty) {
-      require(!graft.catalog.GraftViews.isView(root),
-        s"$root holds a graft VIEW definition — DROP the view or pick " +
-          "a different path")
-      partitionBy.foreach(c => require(
-        batch.columns.exists(_.equalsIgnoreCase(c)),
-        s"partitionBy column $c is not in the stream"))
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[Row](), batch.schema)
-      // a lost CREATE race is fine — the winner's table absorbs the
-      // append below under its own OCC
-      try Sinks.publishVersioned(empty, root, None)
-      catch { case _: java.util.ConcurrentModificationException => () }
-      if (partitionBy.nonEmpty &&
-          !TableProps.load(root).contains(TableProps.PartitionKey))
-        TableProps.update(root)(_ + (TableProps.PartitionKey ->
-          StructType(partitionBy.map(c =>
-            batch.schema(batch.columns.find(_.equalsIgnoreCase(c)).get)))
-            .toDDL))
-    } else {
-      val declared = TableProps.partitionCols(root)
-      require(partitionBy.isEmpty ||
-        partitionBy.map(_.toLowerCase) == declared.map(_.toLowerCase),
-        s"partitionBy(${partitionBy.mkString(", ")}) does not match the " +
-          s"table's declared partitioning (${declared.mkString(", ")}) — " +
-          "omit partitionBy: the declared layout applies to every write")
-    }
-    var attempts = 0
-    var done = false
-    while (!done) {
-      try {
-        Sinks.appendVersioned(
-          graft.catalog.GraftCheck.enforce(
-            Generated.enforce(Identity.assign(batch, root), root), root),
-          root, Sinks.currentVersion(root), emitFeed = true,
-          batchTag = Some(s"$tag:$id"))
-        done = true
-      } catch {
-        case _: java.util.ConcurrentModificationException if attempts < 5 =>
-          attempts += 1 // a concurrent writer moved the table; re-base
+      batch: DataFrame, partitionBy: Seq[String]): Unit =
+    landOnce(root, writerTag(checkpoint), id) {
+      if (Sinks.currentVersion(root).isEmpty) {
+        require(!graft.catalog.GraftViews.isView(root),
+          s"$root holds a graft VIEW definition — DROP the view or pick " +
+            "a different path")
+        partitionBy.foreach(c => require(
+          batch.columns.exists(_.equalsIgnoreCase(c)),
+          s"partitionBy column $c is not in the stream"))
+        val empty = batch.sparkSession.createDataFrame(
+          new java.util.ArrayList[Row](), batch.schema)
+        // a lost CREATE race is fine — the winner's table absorbs the
+        // append below under its own OCC
+        try Sinks.publishVersioned(empty, root, None)
+        catch { case _: java.util.ConcurrentModificationException => () }
+        if (partitionBy.nonEmpty &&
+            !TableProps.load(root).contains(TableProps.PartitionKey))
+          TableProps.update(root)(_ + (TableProps.PartitionKey ->
+            StructType(partitionBy.map(c =>
+              batch.schema(batch.columns.find(_.equalsIgnoreCase(c)).get)))
+              .toDDL))
+      } else {
+        val declared = TableProps.partitionCols(root)
+        require(partitionBy.isEmpty ||
+          partitionBy.map(_.toLowerCase) == declared.map(_.toLowerCase),
+          s"partitionBy(${partitionBy.mkString(", ")}) does not match the " +
+            s"table's declared partitioning (${declared.mkString(", ")}) — " +
+            "omit partitionBy: the declared layout applies to every write")
       }
+    } { stamp =>
+      Sinks.appendVersioned(
+        graft.catalog.GraftCheck.enforce(
+          Generated.enforce(Identity.assign(batch, root), root), root),
+        root, Sinks.currentVersion(root), emitFeed = true,
+        batchTag = Some(stamp))
+      ()
     }
-    TableProps.update(root)(_ + (lastBatchKey(tag) -> id.toString))
-  }
 
   /** The table's change feed as a streaming DataFrame: every committed
     * `_changes` row (keys ++ payload ++ `_change_type`) plus
@@ -187,10 +186,7 @@ object TableStream {
     * same contract as every fixed-schema file stream.
     */
   def streamFeed(spark: SparkSession, root: String): DataFrame = {
-    val feedPath = Paths.get(root, Sinks.FeedDir)
-    require(Files.isDirectory(feedPath),
-      s"no feed directory under $root — call Sinks.enableStreamFeed(root) " +
-        "before the first commit you want streamed")
+    val feedPath = feedDir(root)
     stampCommitVersion(
       spark.readStream.schema(feedSchema(spark, root)).parquet(feedPath.toString))
   }
@@ -206,10 +202,7 @@ object TableStream {
       metadataPath: String,
       options: Map[String, String] = Map.empty)
       : org.apache.spark.sql.execution.streaming.Source = {
-    val feedPath = Paths.get(root, Sinks.FeedDir)
-    require(Files.isDirectory(feedPath),
-      s"no feed directory under $root — call Sinks.enableStreamFeed(root) " +
-        "before the first commit you want streamed")
+    val feedPath = feedDir(root)
     val raw = feedSchema(spark, root)
     // reader options pass through to the delegate (maxFilesPerTrigger,
     // maxFileAge, latestFirst — the file-stream source's own surface);
@@ -256,10 +249,19 @@ object TableStream {
     */
   private[graft] def feedSourceSchema(spark: SparkSession,
       root: String): StructType = {
-    require(Files.isDirectory(Paths.get(root, Sinks.FeedDir)),
+    feedDir(root)
+    feedStreamSchema(feedSchema(spark, root))
+  }
+
+  /** `root`'s feed directory, which must exist: a table streams its
+    * change feed only from commits made after [[Sinks.enableStreamFeed]].
+    */
+  private def feedDir(root: String): java.nio.file.Path = {
+    val feedPath = Paths.get(root, Sinks.FeedDir)
+    require(Files.isDirectory(feedPath),
       s"no feed directory under $root — call Sinks.enableStreamFeed(root) " +
         "before the first commit you want streamed")
-    feedStreamSchema(feedSchema(spark, root))
+    feedPath
   }
 
   private def feedStreamSchema(raw: StructType): StructType =

@@ -31,7 +31,7 @@ import graft.ops.Transforms
   * planning. Idempotent: a filter already referencing a derived column
   * is left alone.
   */
-object HiddenPartitionRule extends Rule[LogicalPlan] {
+object HiddenPartitionRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond, child) =>
@@ -39,7 +39,7 @@ object HiddenPartitionRule extends Rule[LogicalPlan] {
       if (hidden.isEmpty ||
           cond.references.exists(a => Transforms.parse(a.name).isDefined)) f
       else {
-        val conjuncts = splitAnd(cond)
+        val conjuncts = splitConjunctivePredicates(cond)
         val extra = hidden.flatMap { case (hAttr, t) =>
           child.output.find(_.name.equalsIgnoreCase(t.src)).toSeq.flatMap { src =>
             conjuncts.flatMap(c => rewrite(c, src, hAttr, t))
@@ -48,11 +48,6 @@ object HiddenPartitionRule extends Rule[LogicalPlan] {
         if (extra.isEmpty) f
         else Filter(extra.foldLeft(cond)(And(_, _)), child)
       }
-  }
-
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
   }
 
   /** UTC epoch-day of a temporal literal — the EXACT JVM mirror of

@@ -4,12 +4,16 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType, TimestampNTZType, TimestampType}
+
+import graft.ops.{ColMap, FileColStat, SidecarRows, Stats}
+import graft.ops.Stats.{AllRows, Conj, NoRows, SomeRows, Verdict}
 
 /** Metadata-only `count(*)` / `count(col)` over Graft catalog tables —
   * the Delta "answer counts from the transaction log" optimization,
@@ -40,7 +44,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, In
   *
   * Declining is always safe: the plan is left for the ordinary scan.
   */
-object MetaCountRewrite extends Rule[LogicalPlan] {
+object MetaCountRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private sealed trait Kind
   private case object Star extends Kind
@@ -52,7 +56,7 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
   // and combine with overflow-checked addition — an overflowing total
   // declines to the scan, which then wraps or errors per its own eval
   // mode), and `avg(col)` when double accumulation is provably lossless
-  // (see [[avgOver]]'s gates)
+  // (see [[Answering.avgOver]]'s gates)
   private final case class SumOf(name: String) extends Kind
   private final case class AvgOf(name: String) extends Kind
   // count(DISTINCT <identity partition column>) — the "how many
@@ -79,14 +83,18 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
   private def rewrite(agg: Aggregate): Option[LogicalPlan] =
     for {
       relT <- relationOf(agg.child)
-      kinds <- agg.aggregateExpressions.foldRight(
-          Option(List.empty[Kind]))((ne, acc) =>
-        acc.flatMap(t => kindOf(ne).map(_ :: t)))
+      kinds <- every(agg.aggregateExpressions)(kindOf)
       if kinds.nonEmpty
       values <- metaValues(relT._2.snapshotVersionDir, kinds,
-        Some(relT._2.snapshotTableRoot))
+        relT._2.snapshotTableRoot)
     } yield LocalRelation(agg.aggregateExpressions.map(_.toAttribute),
       Seq(InternalRow.fromSeq(values)))
+
+  /** `f` of every element, or None when `f` declines any. */
+  private def every[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] = {
+    val ys = xs.map(f)
+    if (ys.forall(_.isDefined)) Some(ys.flatten) else None
+  }
 
   /** The snapshot RELATION under attribute-only projections (the
     * filtered path needs its output attributes and table handle, not
@@ -102,6 +110,19 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
       relationOf(pr.child)
     case _ => None
   }
+
+  /** Live data files of `dir`, as version-dir-relative sidecar keys. */
+  private def liveFiles(dir: String): Set[String] =
+    graft.io.Fs.walkParquet(Paths.get(dir))
+      .map(_.toString.stripPrefix(dir).stripPrefix("/")).toSet
+
+  /** Files carrying deletion-vector entries: their sidecar row counts
+    * are pre-delete, so they must be SCANNED (a NONE verdict stays NONE —
+    * a delete only removes rows).
+    */
+  private def dvFilesOf(spark: SparkSession, dir: String): Set[String] =
+    if (!graft.ops.Dv.exists(dir)) Set.empty
+    else graft.ops.Dv.bitmapEntries(spark, dir).map(_._1).toSet
 
   // ------------- filtered counts (round-14, verdict item 3) -------------
   //
@@ -121,164 +142,32 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
   //   - identity PARTITION columns: the directory value is every row's
   //     value, so a file is ALL or NONE outright (pure directory
   //     arithmetic — a partition-only predicate never opens a file);
-  //   - sidecar-covered columns: [min,max]⊆bound with zero nulls → ALL
-  //     (widened bounds only shrink the ALL set — conservative), no
-  //     overlap or all-null → NONE.
-  // Strictness is honored exactly (c > 5 is NOT c >= 5 here — the
-  // relaxation that is safe for keep-set pruning would over-count an
-  // interior file whose min is the open endpoint). Files with deletion-
-  // vector entries are forced BOUNDARY so the scan-side subtraction
-  // applies. Declines (unanalyzable conjunct, no metadata win) leave the
-  // plan for StatsSkipRule's keep-set swap.
+  //   - sidecar-covered columns: [[Stats.verdict]], the classifier
+  //     StatsSkipRule's keep-set uses too ([min,max]⊆bound with zero
+  //     nulls → ALL, no overlap or all-null → NONE).
+  // Strictness is honored exactly (c > 5 is NOT c >= 5 — an interior
+  // file whose min is the open endpoint must not count). Files with
+  // deletion-vector entries are forced BOUNDARY so the scan-side
+  // subtraction applies. Declines (unanalyzable conjunct, no metadata
+  // win) leave the plan for StatsSkipRule's keep-set swap.
 
-  private sealed trait Tri
-  private case object AllRows extends Tri
-  private case object NoRows extends Tri
-  private case object SomeRows extends Tri
-
-  private sealed trait Cmp
-  private case object CGe extends Cmp
-  private case object CGt extends Cmp
-  private case object CLe extends Cmp
-  private case object CLt extends Cmp
-  private case object CEq extends Cmp
-  private final case class Conj(colName: String, cmp: Cmp, vs: Seq[Any])
-
-  /** Literal → comparison-domain value (internal Catalyst values; same
-    * domains as [[graft.ops.Stats.prunedFilesBounds]]). None = the
-    * filtered path cannot reason about this type.
+  /** Every top-level conjunct of `cond` ([[Stats.conjOf]]), or None when
+    * any is outside the classifiable fragment.
     */
-  private def litValue(l: Literal): Option[Any] = l.dataType match {
-    case ByteType | ShortType | IntegerType | LongType
-        if l.value != null => Some(l.value)
-    case org.apache.spark.sql.types.DateType if l.value != null => Some(l.value)
-    case FloatType | DoubleType if l.value != null => Some(l.value)
-    case org.apache.spark.sql.types.StringType if l.value != null =>
-      Some(l.value.toString)
-    case TimestampType if l.value != null =>
-      Some(graft.ops.Stats.TsVal(l.value.asInstanceOf[Long], instant = true))
-    case TimestampNTZType if l.value != null =>
-      Some(graft.ops.Stats.TsVal(l.value.asInstanceOf[Long], instant = false))
-    case _ => None
-  }
-
-  private def splitAnd(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
-  }
-
-  /** One conjunct as (column, strict-aware comparison, values), or None
-    * when the shape/type is outside the analyzable fragment.
-    */
-  private def conjOf(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[Conj] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def mk(a: Attribute, c: Cmp, l: Literal): Option[Conj] =
-      if (l.dataType != a.dataType) None
-      else litValue(l).map(v => Conj(a.name, c, Seq(v)))
-    e match {
-      case EqualTo(a: Attribute, l: Literal) => mk(a, CEq, l)
-      case EqualTo(l: Literal, a: Attribute) => mk(a, CEq, l)
-      case GreaterThan(a: Attribute, l: Literal) => mk(a, CGt, l)
-      case GreaterThan(l: Literal, a: Attribute) => mk(a, CLt, l)
-      case GreaterThanOrEqual(a: Attribute, l: Literal) => mk(a, CGe, l)
-      case GreaterThanOrEqual(l: Literal, a: Attribute) => mk(a, CLe, l)
-      case LessThan(a: Attribute, l: Literal) => mk(a, CLt, l)
-      case LessThan(l: Literal, a: Attribute) => mk(a, CGt, l)
-      case LessThanOrEqual(a: Attribute, l: Literal) => mk(a, CLe, l)
-      case LessThanOrEqual(l: Literal, a: Attribute) => mk(a, CGe, l)
-      case In(a: Attribute, list) if list.nonEmpty &&
-          list.forall(x => x.isInstanceOf[Literal] && x.dataType == a.dataType) =>
-        val vs = list.flatMap(x => litValue(x.asInstanceOf[Literal]))
-        if (vs.size == list.size) Some(Conj(a.name, CEq, vs)) else None
-      case _ => None
-    }
-  }
-
-  /** Exact scalar comparison in the shared domains; None = domains
-    * incomparable (caller degrades to BOUNDARY).
-    */
-  private def cmpValues(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Number, y: Number)
-        if !x.isInstanceOf[java.math.BigDecimal] &&
-          !y.isInstanceOf[java.math.BigDecimal] =>
-      val xd = x.doubleValue(); val yd = y.doubleValue()
-      // longs above 2^53 lose precision as doubles — compare exactly
-      (a, b) match {
-        case (xl: Byte, _) => cmpLong(xl.toLong, b)
-        case (xl: Short, _) => cmpLong(xl.toLong, b)
-        case (xl: Int, _) => cmpLong(xl.toLong, b)
-        case (xl: Long, _) => cmpLong(xl, b)
-        case _ => Some(java.lang.Double.compare(xd, yd))
-      }
-    case (x: String, y: String) => Some(graft.ops.Stats.utf8Compare(x, y))
-    case _ => None
-  }
-  private def cmpLong(x: Long, b: Any): Option[Int] = b match {
-    case y: Byte => Some(java.lang.Long.compare(x, y.toLong))
-    case y: Short => Some(java.lang.Long.compare(x, y.toLong))
-    case y: Int => Some(java.lang.Long.compare(x, y.toLong))
-    case y: Long => Some(java.lang.Long.compare(x, y))
-    case y: Number => Some(java.lang.Double.compare(x.toDouble, y.doubleValue()))
-    case _ => None
-  }
-
-  /** Classify one file against one conjunct given the file's value
-    * RANGE `[lo, hi]` (possibly widened — widening only shrinks the
-    * ALL verdict and the NoRows verdict, both conservative) and its
-    * null count. `exactPoint` = lo==hi is the exact value of every row
-    * (a partition directory), letting CEq decide ALL.
-    */
-  private def classifyRange(c: Conj, lo: Any, hi: Any, nulls: Long,
-      exactPoint: Boolean): Tri = {
-    def cmp(a: Any, b: Any): Option[Int] = cmpValues(a, b)
-    val v = c.vs.head
-    c.cmp match {
-      case CEq =>
-        // NONE: every candidate value misses the range entirely
-        val allMiss = c.vs.forall(x =>
-          (cmp(x, lo), cmp(x, hi)) match {
-            case (Some(cl), Some(ch)) => cl < 0 || ch > 0
-            case _ => false
-          })
-        if (allMiss) NoRows
-        else if (exactPoint && nulls == 0 &&
-            c.vs.exists(x => cmp(x, lo).contains(0))) AllRows
-        else SomeRows
-      case CGe => (cmp(lo, v), cmp(hi, v)) match {
-        case (Some(cl), _) if cl >= 0 && nulls == 0 => AllRows
-        case (_, Some(ch)) if ch < 0 => NoRows
-        case _ => SomeRows
-      }
-      case CGt => (cmp(lo, v), cmp(hi, v)) match {
-        case (Some(cl), _) if cl > 0 && nulls == 0 => AllRows
-        case (_, Some(ch)) if ch <= 0 => NoRows
-        case _ => SomeRows
-      }
-      case CLe => (cmp(hi, v), cmp(lo, v)) match {
-        case (Some(ch), _) if ch <= 0 && nulls == 0 => AllRows
-        case (_, Some(cl)) if cl > 0 => NoRows
-        case _ => SomeRows
-      }
-      case CLt => (cmp(hi, v), cmp(lo, v)) match {
-        case (Some(ch), _) if ch < 0 && nulls == 0 => AllRows
-        case (_, Some(cl)) if cl >= 0 => NoRows
-        case _ => SomeRows
-      }
-    }
-  }
+  private def conjsOf(cond: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[Seq[Conj]] =
+    every(splitConjunctivePredicates(cond))(Stats.conjOf)
 
   /** Identity-partition value of `file` (a version-dir-relative key)
-    * for partition column `colName`, decoded and typed per the
-    * version's declared partition spec. Returns None when the value is
-    * not derivable (unpartitioned layout, mixed-layout leg, transform
-    * column, undecodable segment); Some(None) is a NULL partition
+    * for partition column `colName`, decoded as Spark's partition
+    * discovery decodes it and typed per the version's declared
+    * partition spec. Returns None when the value is not derivable
+    * (unpartitioned layout, mixed-layout leg, transform column,
+    * unparseable value); Some(None) is a NULL partition
     * (`__HIVE_DEFAULT_PARTITION__`).
     */
   private def partitionValue(file: String, colName: String,
-      partSchema: org.apache.spark.sql.types.StructType): Option[Option[Any]] = {
+      partSchema: StructType): Option[Option[Any]] = {
     val field = partSchema.fields.find(_.name.equalsIgnoreCase(colName))
       .getOrElse(return None)
     val seg = file.split('/').dropRight(1).collectFirst {
@@ -286,100 +175,22 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
           s.substring(0, s.indexOf('=')).equalsIgnoreCase(colName) =>
         s.substring(s.indexOf('=') + 1)
     }.getOrElse(return None)
-    val raw =
-      try unescapePath(seg)
-      catch { case _: Exception => return None }
+    val raw = ExternalCatalogUtils.unescapePathName(seg)
     if (raw == "__HIVE_DEFAULT_PARTITION__") return Some(None)
     field.dataType match {
-      case org.apache.spark.sql.types.StringType => Some(Some(raw))
+      case StringType => Some(Some(raw))
       case ByteType | ShortType | IntegerType | LongType =>
         raw.toLongOption.map(v => Some(v))
-      case org.apache.spark.sql.types.DateType =>
+      case DateType =>
         try Some(Some(java.time.LocalDate.parse(raw).toEpochDay.toInt))
         catch { case _: Exception => None }
       case _ => None // other partition types: boundary-scan the file
     }
   }
 
-  /** Hive path unescaping (%xx sequences, the escapePathName inverse).
-    * Shared with [[graft.ops.Sinks.compactVersionedWhere]]'s directory
-    * arithmetic (round-14).
-    */
-  private[graft] def unescapePath(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '%' && i + 3 <= s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(ch); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Per-file classification of one file against every conjunct —
-    * shared by the filtered ([[rewriteFiltered]]) and grouped
-    * ([[rewriteGrouped]]) paths.
-    */
-  private def classifyAgainst(file: String, conjs: Seq[Conj], dir: String,
-      byFileCol: Map[(String, String), org.apache.spark.sql.Row],
-      partSchema: Option[org.apache.spark.sql.types.StructType],
-      sessionUtc: Boolean): Tri = {
-    val per = conjs.map { cj =>
-      val phys = graft.ops.ColMap.toPhysicalName(dir, cj.colName)
-      // identity partition column: the directory value IS every row's
-      // value — exact, null-aware, never widened
-      val fromPart = partSchema.flatMap(ps =>
-        partitionValue(file, phys, ps)) match {
-        case Some(None) => Some(NoRows) // NULL partition never matches
-        case Some(Some(v)) =>
-          Some(classifyRange(cj, v, v, nulls = 0, exactPoint = true))
-        case None => None
-      }
-      fromPart.getOrElse {
-        byFileCol.get((file, phys.toLowerCase)) match {
-          case None => SomeRows
-          case Some(r) =>
-            if (!r.getBoolean(4)) SomeRows // has_stats=false: keep-always
-            else if (r.getLong(3) == r.getLong(2)) NoRows // all-null file
-            else if (!r.isNullAt(16)) SomeRows // decimal domain: scan
-            else if (!r.isNullAt(9)) {
-              // timestamp domain with flavor guard (widened-safe)
-              val adj = r.getBoolean(11)
-              val usable = cj.vs.forall {
-                case graft.ops.Stats.TsVal(_, instant) =>
-                  instant == adj || sessionUtc
-                case _ => false
-              }
-              if (!usable) SomeRows
-              else {
-                val us = cj.vs.map(_.asInstanceOf[graft.ops.Stats.TsVal].us)
-                classifyRange(cj.copy(vs = us.map(_.asInstanceOf[Any])),
-                  r.getLong(9), r.getLong(10), r.getLong(3), exactPoint = false)
-              }
-            }
-            else if (!r.isNullAt(5))
-              classifyRange(cj, r.getLong(5), r.getLong(6), r.getLong(3),
-                exactPoint = false)
-            else if (!r.isNullAt(7))
-              classifyRange(cj, r.getDouble(7), r.getDouble(8), r.getLong(3),
-                exactPoint = false)
-            else if (!r.isNullAt(13))
-              classifyRange(cj, r.getString(13), r.getString(14), r.getLong(3),
-                exactPoint = false)
-            else SomeRows
-        }
-      }
-    }
-    if (per.contains(NoRows)) NoRows
-    else if (per.forall(_ == AllRows)) AllRows
-    else SomeRows
-  }
-
   /** The filtered metadata count: see the block comment above. */
   private def rewriteFiltered(agg: Aggregate): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.Add
+    import org.apache.spark.sql.catalyst.expressions.{Add, Coalesce, Expression, Greatest, Least}
     import org.apache.spark.sql.catalyst.plans.logical.Filter
     val f = stripProjects(agg.child) match {
       case flt: Filter => flt
@@ -387,177 +198,78 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     }
     val (rel, t) = relationOf(f.child).getOrElse(return None)
     val dir = t.snapshotVersionDir
-    // every aggregate expression must be count(*), count(col), or
-    // min/max(col) of an answerable type — the filtered forms metadata
-    // can serve: in an ALL-classified file EVERY row satisfies the
+    // every aggregate expression must be one the filtered forms can
+    // serve: in an ALL-classified file EVERY row satisfies the
     // predicate, so count(col) over its matching rows is exactly
-    // rows − nulls(col), and min/max over them are the file's own
-    // (value-exact) bounds. Files without the needed trusted/exact
-    // entry demote to the boundary scan below.
-    val fkinds: Seq[Kind] = agg.aggregateExpressions.map {
-      case Alias(ae: AggregateExpression, _)
-          if !ae.isDistinct && ae.filter.isEmpty =>
-        ae.aggregateFunction match {
-          case Count(Seq(l: Literal)) if l.value != null => Star
-          case Count(Seq(a: org.apache.spark.sql.catalyst.expressions
-              .AttributeReference)) => OfColumn(a.name)
-          case Min(a: org.apache.spark.sql.catalyst.expressions
-              .AttributeReference) if boundable(a.dataType) =>
-            BoundOf(a.name, a.dataType, isMin = true)
-          case Max(a: org.apache.spark.sql.catalyst.expressions
-              .AttributeReference) if boundable(a.dataType) =>
-            BoundOf(a.name, a.dataType, isMin = false)
-          // round-14: filtered sums — an ALL file's matching rows are
-          // ALL its rows, so it contributes its data-exact per-file sum;
-          // filtered avg serves only when the whole answer is metadata
-          // (no boundary — an Average cannot be combined externally)
-          case Sum(a: org.apache.spark.sql.catalyst.expressions
-              .AttributeReference, _) if intFamily(a.dataType) =>
-            SumOf(a.name)
-          case Average(a: org.apache.spark.sql.catalyst.expressions
-              .AttributeReference, _) if intFamily(a.dataType) =>
-            AvgOf(a.name)
-          case _ => return None
-        }
-      case _ => return None
-    }
-    if (fkinds.isEmpty) return None
-    val conjs = {
-      val cs = splitAnd(f.condition).map(conjOf)
-      if (cs.exists(_.isEmpty)) return None
-      cs.flatten
-    }
+    // rows − nulls(col), min/max over them are the file's own
+    // (value-exact) bounds and sum is its data-exact per-file sum;
+    // avg serves only when the whole answer is metadata (no boundary —
+    // an Average cannot be combined externally). Files without the
+    // needed trusted/exact entry demote to the boundary scan below.
+    val kinds = every(agg.aggregateExpressions)(kindOf)
+      .filterNot(_.exists(_.isInstanceOf[DistinctPart])).getOrElse(return None)
+    if (kinds.isEmpty) return None
+    val conjs = conjsOf(f.condition).getOrElse(return None)
     if (conjs.isEmpty) return None
-    val sidecar = Paths.get(dir, graft.ops.Stats.Sidecar)
-    if (!Files.isDirectory(sidecar)) return None
+    if (!Files.isDirectory(Paths.get(dir, Stats.Sidecar))) return None
     // equality deletes hide rows by KEY across files — no per-file
     // arithmetic recovers the hidden count; decline (round-14)
     if (graft.ops.EqDel.exists(dir)) return None
     val spark = SparkSession.active
-    val live = graft.io.Fs.walkParquet(Paths.get(dir))
-      .map(_.toString.stripPrefix(dir).stripPrefix("/")).toSet
+    val live = liveFiles(dir)
     if (live.isEmpty) return None
-    val (side, flags) = answeringRows(dir)
-    val SideFlags(fHasTs, fHasS, fHasSum) = flags
-    val (byFile, byFileCol) = (side.byFile, side.byFileCol)
+    val a = new Answering(dir)
     // row counts must cover every live file or interior sums are unprovable
-    if (!live.forall(byFile.contains)) return None
+    if (!a.covers(live)) return None
     val partSchema = graft.ops.Sinks.partitionSchemaFor(t.snapshotTableRoot, dir)
-    val sessionUtc = java.time.ZoneId
-      .of(spark.sessionState.conf.sessionLocalTimeZone).normalized() ==
-      java.time.ZoneOffset.UTC
-    // deletion-vector files must be SCANNED (the metadata row count is
-    // pre-delete); hidden rows are per-file, so only those files demote
-    val dvFiles: Set[String] =
-      if (!graft.ops.Dv.exists(dir)) Set.empty
-      else graft.ops.Dv.bitmapEntries(spark, dir).map(_._1).toSet
-    def classifyFile(file: String): Tri =
-      classifyAgainst(file, conjs, dir, byFileCol, partSchema, sessionUtc)
-    val classes = live.toSeq.map(fl => fl -> classifyFile(fl))
-    // count(col) needs a trusted per-file entry for that column, and
-    // min/max(col) a VALUE-EXACT one (the same per-domain trust rules
-    // as the unfiltered path) — an ALL file lacking them cannot
+    val utc = Stats.sessionUtc(spark)
+    val dvFiles = dvFilesOf(spark, dir)
+    val classes = live.toSeq.map(fl => fl -> a.classify(fl, conjs, partSchema, utc))
+    // an ALL file that is not answering-grade for every kind cannot
     // contribute from metadata and demotes to the boundary scan instead
     // of declining the whole rewrite
-    val countedCols = fkinds.collect { case OfColumn(n) =>
-      graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase }.distinct
-    def exactFor(fl: String, k: Kind): Boolean =
-      exactKindFor(fl, k, dir, byFileCol, flags)
-    def metadataServed(fl: String): Boolean =
-      countedCols.forall(c => byFileCol.get((fl, c)).exists(_.getBoolean(4))) &&
-        fkinds.forall(exactFor(fl, _))
-    val interiorFiles = classes.collect {
-      case (fl, AllRows) if !dvFiles(fl) && metadataServed(fl) => fl }
-    val boundary = (classes.collect { case (fl, SomeRows) => fl } ++
-      classes.collect {
-        case (fl, AllRows) if dvFiles(fl) || !metadataServed(fl) => fl }).sorted
+    def served(fl: String): Boolean = !dvFiles(fl) && kinds.forall(a.exact(fl, _))
+    val interiorFiles = classes.collect { case (fl, AllRows) if served(fl) => fl }
+    val boundary = classes.collect {
+      case (fl, SomeRows) => fl
+      case (fl, AllRows) if !served(fl) => fl
+    }.sorted
     // no metadata win: nothing provably ALL and nothing provably NONE →
     // leave the plan for StatsSkipRule's keep-set swap
     if (interiorFiles.isEmpty && boundary.size == live.size) return None
-    def interiorOf(k: Kind): Long = k match {
-      case Star => interiorFiles.map(fl => byFile(fl).head.getLong(2)).sum
-      case OfColumn(n) =>
-        val c = graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase
-        interiorFiles.map { fl =>
-          val r = byFileCol((fl, c)); r.getLong(2) - r.getLong(3)
-        }.sum
-      case _ => 0L // unreachable (bounds go through interiorBound)
-    }
-    // the interior min/max as an INTERNAL Catalyst value, or None when
-    // every interior file is all-null for the column (the bound then
-    // comes from the boundary scan alone — or is NULL outright)
-    def interiorBound(k: Kind): Option[Any] = k match {
-      case b: BoundOf => boundOver(interiorFiles, b, dir, byFileCol)
-      case _ => None
-    }
     if (boundary.isEmpty) {
       // pure metadata answer (partition-only predicates land here: every
       // file is ALL or NONE by directory arithmetic alone)
-      val values: Seq[Any] = fkinds.map {
-        case b: BoundOf => interiorBound(b).orNull
-        case SumOf(n) =>
-          sumOver(interiorFiles,
-            graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase,
-            byFileCol, flags) match {
-            case None => return None // overflowing total: the scan decides
-            case Some(o) => o.map(Long.box).orNull
-          }
-        case AvgOf(n) =>
-          avgOver(interiorFiles,
-            graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase,
-            byFileCol, flags) match {
-            case None => return None // sign/magnitude gate failed
-            case Some(o) => o.map(Double.box).orNull
-          }
-        case k => interiorOf(k)
-      }
+      val values = every(kinds)(a.partial(_, interiorFiles)).getOrElse(return None)
       return Some(LocalRelation(agg.aggregateExpressions.map(_.toAttribute),
         Seq(InternalRow.fromSeq(values))))
     }
     // an Average cannot be combined with a boundary scan's partial (its
     // sum/count internals are not exposed to the rewrite) — decline the
     // hybrid; StatsSkipRule still prunes the fallback scan
-    if (fkinds.exists(_.isInstanceOf[AvgOf])) return None
+    if (kinds.exists(_.isInstanceOf[AvgOf])) return None
     // hybrid: scan ONLY the boundary files under the exact predicate and
     // add the interior constant inside the aggregate
     val analyzed = graft.ops.Sinks.snapshotRead(spark, t.snapshotTableRoot, dir,
       Some(boundary.map(k => s"$dir/$k"))).queryExecution.analyzed
     val out = DvReadRule.realias(rel.output, analyzed).getOrElse(return None)
-    val newAggs: Seq[NamedExpression] = agg.aggregateExpressions.zip(fkinds).map {
-      case (al @ Alias(ae: AggregateExpression, name), b @ BoundOf(_, dt, isMin)) =>
-        // union-min/max semantics: Least/Greatest skip nulls (an empty
-        // boundary result must not erase the interior bound, and an
-        // all-null interior contributes nothing)
-        val combined = interiorBound(b) match {
-          case None => ae: org.apache.spark.sql.catalyst.expressions.Expression
-          case Some(v) =>
-            if (isMin)
-              org.apache.spark.sql.catalyst.expressions.Least(
-                Seq(ae, Literal(v, dt)))
-            else
-              org.apache.spark.sql.catalyst.expressions.Greatest(
-                Seq(ae, Literal(v, dt)))
-        }
-        Alias(combined, name)(exprId = al.exprId, qualifier = al.qualifier)
-      case (al @ Alias(ae: AggregateExpression, name), SumOf(n)) =>
-        // the boundary sum is NULL on an empty/all-null boundary — it
-        // must not erase a real interior sum (coalesce to 0 before the
-        // Add); an interior with no non-null input adds nothing and the
-        // boundary's own NULL-ness passes through untouched
-        val combined = sumOver(interiorFiles,
-          graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase,
-          byFileCol, flags) match {
-          case None => return None // overflowing interior: scan decides
-          case Some(None) => ae: org.apache.spark.sql.catalyst.expressions.Expression
-          case Some(Some(v)) =>
-            Add(org.apache.spark.sql.catalyst.expressions.Coalesce(
-              Seq(ae, Literal(0L, LongType))), Literal(v, LongType))
-        }
-        Alias(combined, name)(exprId = al.exprId, qualifier = al.qualifier)
+    val newAggs: Seq[NamedExpression] = agg.aggregateExpressions.zip(kinds).map {
       case (al @ Alias(ae: AggregateExpression, name), k) =>
-        Alias(Add(ae, Literal(interiorOf(k), LongType)), name)(
-          exprId = al.exprId, qualifier = al.qualifier)
-      case _ => return None // unreachable (fkinds gate)
+        // a NULL interior (all-null bound or sum) adds nothing; a real
+        // one must survive an empty/all-null boundary — Least/Greatest
+        // skip nulls, and the boundary sum coalesces to 0 before the Add
+        val part = a.partial(k, interiorFiles).getOrElse(return None)
+        val combined: Expression = k match {
+          case _ if part == null => ae
+          case BoundOf(_, dt, isMin) =>
+            if (isMin) Least(Seq(ae, Literal(part, dt)))
+            else Greatest(Seq(ae, Literal(part, dt)))
+          case _: SumOf =>
+            Add(Coalesce(Seq(ae, Literal(0L, LongType))), Literal(part, LongType))
+          case _ => Add(ae, Literal(part, LongType))
+        }
+        Alias(combined, name)(exprId = al.exprId, qualifier = al.qualifier)
+      case _ => return None // unreachable (kinds gate)
     }
     Some(Aggregate(Nil, newAggs,
       Filter(f.condition, Project(out, analyzed))))
@@ -573,14 +285,13 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     * [[partitionValue]] yields as String / Long / Int-days).
     */
   private def internalOf(dt: DataType, v: Any): Any = dt match {
-    case org.apache.spark.sql.types.StringType =>
+    case StringType =>
       org.apache.spark.unsafe.types.UTF8String.fromString(v.asInstanceOf[String])
     case ByteType => v.asInstanceOf[Long].toByte
     case ShortType => v.asInstanceOf[Long].toShort
     case IntegerType => v.asInstanceOf[Long].toInt
     case LongType => v.asInstanceOf[Long]
-    case org.apache.spark.sql.types.DateType => v // already Int days
-    case _ => v
+    case _ => v // DateType: already Int days
   }
 
   /** Grouped metadata aggregates (round-14): `GROUP BY <identity
@@ -590,16 +301,13 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     * GROUP BY dt`) answered from directory arithmetic + sidecar rows,
     * ZERO files opened.
     * An optional WHERE classifies per file exactly like the global
-    * filtered path; any BOUNDARY file declines the whole rewrite (a
-    * grouped hybrid would need per-group scan unions — StatsSkipRule
-    * still prunes the declined scan). Groups whose files all classify
-    * NONE vanish, exactly like the scan's GROUP BY; zero-row schema
-    * anchors contribute nothing and never fabricate a group. DV and
-    * eq-delete versions decline (hidden rows are per-position/per-key,
-    * not per-directory).
+    * filtered path; BOUNDARY files scan per group (the hybrid below).
+    * Groups whose files all classify NONE vanish, exactly like the
+    * scan's GROUP BY; zero-row schema anchors contribute nothing and
+    * never fabricate a group. Eq-delete versions decline (hidden rows
+    * are per-key, not per-directory).
     */
   private def rewriteGrouped(agg: Aggregate): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.plans.logical.Filter
     val groupAttrs: Seq[AttributeReference] = agg.groupingExpressions.map {
       case a: AttributeReference => a
@@ -611,39 +319,23 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     }
     val (rel, t) = relationOf(relPlan).getOrElse(return None)
     val dir = t.snapshotVersionDir
-    // outputs: grouping attributes (bare or re-aliased) or plain counts
+    def groupIndex(a: AttributeReference): Option[Int] =
+      Some(groupAttrs.indexWhere(_.exprId == a.exprId)).filter(_ >= 0)
+    // outputs: grouping attributes (bare or re-aliased) or aggregates;
+    // per-group min/max/sum/avg ride the same per-file trust rules as
+    // the global paths
     val outKinds: Seq[Either[Int, Kind]] = agg.aggregateExpressions.map {
-      case a: AttributeReference =>
-        val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-        if (i < 0) return None else Left(i)
-      case Alias(a: AttributeReference, _) =>
-        val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-        if (i < 0) return None else Left(i)
-      case Alias(ae: AggregateExpression, _)
-          if !ae.isDistinct && ae.filter.isEmpty =>
-        ae.aggregateFunction match {
-          case Count(Seq(l: Literal)) if l.value != null => Right(Star)
-          case Count(Seq(a: AttributeReference)) => Right(OfColumn(a.name))
-          // round-14: per-group min/max/sum/avg ride the same per-file
-          // trust rules as the global paths — any non-exact kept file
-          // declines the whole rewrite (grouped hybrids don't exist)
-          case Min(a: AttributeReference) if boundable(a.dataType) =>
-            Right(BoundOf(a.name, a.dataType, isMin = true))
-          case Max(a: AttributeReference) if boundable(a.dataType) =>
-            Right(BoundOf(a.name, a.dataType, isMin = false))
-          case Sum(a: AttributeReference, _) if intFamily(a.dataType) =>
-            Right(SumOf(a.name))
-          case Average(a: AttributeReference, _) if intFamily(a.dataType) =>
-            Right(AvgOf(a.name))
-          case _ => return None
-        }
-      case _ => return None
+      case a: AttributeReference => Left(groupIndex(a).getOrElse(return None))
+      case Alias(a: AttributeReference, _) => Left(groupIndex(a).getOrElse(return None))
+      case ne => kindOf(ne) match {
+        case Some(_: DistinctPart) | None => return None
+        case Some(k) => Right(k)
+      }
     }
     // a bare SELECT DISTINCT <partition cols> answers too — it is SHOW
     // PARTITIONS: the distinct directory values among files holding at
     // least one (classified-in) row, zero files opened
-    val sidecar = Paths.get(dir, graft.ops.Stats.Sidecar)
-    if (!Files.isDirectory(sidecar)) return None
+    if (!Files.isDirectory(Paths.get(dir, Stats.Sidecar))) return None
     // eq-deletes hide rows by KEY across files — no per-file
     // arithmetic recovers them; decline. Deletion-vector files, by
     // contrast, hide known positions per FILE: they demote to the
@@ -654,67 +346,44 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     // every grouping column must be an IDENTITY partition column (a
     // transform's source values are not recoverable from directories)
     groupAttrs.foreach { a =>
-      val phys = graft.ops.ColMap.toPhysicalName(dir, a.name)
+      val phys = ColMap.toPhysicalName(dir, a.name)
       val ok = partSchema.fields.exists(f => f.name.equalsIgnoreCase(phys) &&
         graft.ops.Transforms.parse(f.name).isEmpty)
       if (!ok) return None
     }
-    val conjs = cond match {
-      case None => Nil
-      case Some(c) =>
-        val cs = splitAnd(c).map(conjOf)
-        if (cs.exists(_.isEmpty)) return None
-        cs.flatten
-    }
+    val conjs = cond.fold(Option(Seq.empty[Conj]))(conjsOf).getOrElse(return None)
     val spark = SparkSession.active
-    val live = graft.io.Fs.walkParquet(Paths.get(dir))
-      .map(_.toString.stripPrefix(dir).stripPrefix("/")).toSet
+    val live = liveFiles(dir)
     if (live.isEmpty) return None
-    val (side, gflags) = answeringRows(dir)
-    val (byFile, byFileCol) = (side.byFile, side.byFileCol)
-    if (!live.forall(byFile.contains)) return None
-    val sessionUtc = java.time.ZoneId
-      .of(spark.sessionState.conf.sessionLocalTimeZone).normalized() ==
-      java.time.ZoneOffset.UTC
+    val a = new Answering(dir)
+    if (!a.covers(live)) return None
+    val utc = Stats.sessionUtc(spark)
     // duplicate group outputs (SELECT cat, cat AS c2 …) would duplicate
     // exprIds through the hybrid's inner aggregate — decline, rare shape
     val leftIdx = outKinds.collect { case Left(i) => i }
     if (leftIdx.distinct.size != leftIdx.size) return None
-    val counted = outKinds.collect { case Right(OfColumn(n)) =>
-      graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase }.distinct
     // classify every live data file. An AllRows file that is not
     // answering-grade for every kind — or whose partition tuple cannot
     // be decoded (a mixed-layout leg) — DEMOTES to the boundary scan
     // (round-14 hybrid) instead of declining the whole rewrite.
-    def fileServed(fl: String): Boolean =
-      counted.forall(c => byFileCol.get((fl, c)).exists(_.getBoolean(4))) &&
-        outKinds.forall {
-          case Right(k) => exactKindFor(fl, k, dir, byFileCol, gflags)
-          case Left(_) => true
-        }
-    def tupleOf(fl: String): Option[Seq[Any]] = {
-      val vals = groupAttrs.map { a =>
-        val phys = graft.ops.ColMap.toPhysicalName(dir, a.name)
-        partitionValue(fl, phys, partSchema)
-          .map(opt => opt.map(internalOf(a.dataType, _)).orNull)
-      }
-      if (vals.exists(_.isEmpty)) None else Some(vals.map(_.get))
+    def fileServed(fl: String): Boolean = outKinds.forall {
+      case Right(k) => a.exact(fl, k)
+      case Left(_) => true
     }
-    // deletion-vector files force into the boundary scan (their
-    // metadata row counts are pre-delete, and a NoRows verdict stays
-    // NoRows — a delete only removes rows)
-    val dvFiles: Set[String] =
-      if (!graft.ops.Dv.exists(dir)) Set.empty
-      else graft.ops.Dv.bitmapEntries(spark, dir).map(_._1).toSet
+    def tupleOf(fl: String): Option[Seq[Any]] =
+      every(groupAttrs) { ga =>
+        partitionValue(fl, ColMap.toPhysicalName(dir, ga.name), partSchema)
+          .map(opt => opt.map(internalOf(ga.dataType, _)).orNull)
+      }
+    val dvFiles = dvFilesOf(spark, dir)
     val interior = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], String)]
     val boundaryB = scala.collection.mutable.ArrayBuffer.empty[String]
     live.toSeq.sorted
-      .filter(fl => byFile(fl).head.getLong(2) > 0) // schema anchors: no rows
+      .filter(fl => a.rowsOf(fl) > 0) // schema anchors: no rows
       .foreach { fl =>
         val cls =
           if (conjs.isEmpty) AllRows
-          else classifyAgainst(fl, conjs, dir, byFileCol, Some(partSchema),
-            sessionUtc)
+          else a.classify(fl, conjs, Some(partSchema), utc)
         cls match {
           case NoRows => ()
           case SomeRows => boundaryB += fl
@@ -728,43 +397,18 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
       }
     val grouped: Map[Seq[Any], Seq[String]] =
       interior.toSeq.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    // a group's interior PARTIAL — the same shape the boundary scan's
-    // partial aggregate emits, so the two merge in one outer aggregate:
-    // counts/sums merge by Sum, bounds by Min/Max. None = decline.
-    def partialOf(kind: Kind, files: Seq[String]): Option[Any] = kind match {
-      case Star => Some(files.map(fl => byFile(fl).head.getLong(2)).sum)
-      case OfColumn(n) =>
-        val c = graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase
-        Some(files.map { fl =>
-          val r = byFileCol((fl, c)); r.getLong(2) - r.getLong(3)
-        }.sum)
-      case b: BoundOf => Some(boundOver(files, b, dir, byFileCol).orNull)
-      case SumOf(n) =>
-        sumOver(files, graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase,
-          byFileCol, gflags) match {
-          case None => None // overflowing group total: the scan decides
-          case Some(o) => Some(o.map(Long.box).orNull)
-        }
-      case AvgOf(n) => // pure path only (the hybrid declines avg first)
-        avgOver(files, graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase,
-          byFileCol, gflags) match {
-          case None => None
-          case Some(o) => Some(o.map(Double.box).orNull)
-        }
-      case DistinctPart(_) => None // a grouped distinct never reaches here
-    }
+    // one row per interior group: its values and each aggregate's
+    // interior PARTIAL — the same shape the boundary scan's partial
+    // aggregate emits, so the two merge in one outer aggregate
+    val groupRows: Seq[InternalRow] = every(grouped.toSeq) { case (gvals, files) =>
+      every(outKinds) {
+        case Left(i) => Some(gvals(i))
+        case Right(k) => a.partial(k, files)
+      }.map(InternalRow.fromSeq)
+    }.getOrElse(return None)
     if (boundaryB.isEmpty) {
       // pure metadata answer: every file is ALL or NONE
-      val rows: Seq[InternalRow] = grouped.toSeq.map { case (gvals, files) =>
-        InternalRow.fromSeq(outKinds.map {
-          case Left(i) => gvals(i)
-          case Right(k) => partialOf(k, files) match {
-            case None => return None
-            case Some(v) => v
-          }
-        })
-      }
-      return Some(LocalRelation(agg.aggregateExpressions.map(_.toAttribute), rows))
+      return Some(LocalRelation(agg.aggregateExpressions.map(_.toAttribute), groupRows))
     }
     // ---- grouped HYBRID (round-14): boundary files scan and partially
     // aggregate under the exact predicate; interior groups inject their
@@ -808,16 +452,7 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     val innerAgg = Aggregate(groupAttrs, innerOut, scanChild)
     val localAttrs: Seq[Attribute] = innerOut.map(ne =>
       AttributeReference(ne.name, ne.dataType, nullable = true)())
-    val localRows: Seq[InternalRow] = grouped.toSeq.map { case (gvals, files) =>
-      InternalRow.fromSeq(outKinds.map {
-        case Left(i) => gvals(i)
-        case Right(k) => partialOf(k, files) match {
-          case None => return None
-          case Some(v) => v
-        }
-      })
-    }
-    val union = Union(Seq(innerAgg, LocalRelation(localAttrs, localRows)))
+    val union = Union(Seq(innerAgg, LocalRelation(localAttrs, groupRows)))
     val unionOut = union.output
     val finalGrouping: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
       outKinds.zipWithIndex.collect { case (Left(_), pos) => unionOut(pos) }
@@ -871,21 +506,20 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
   private def boundable(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
     case FloatType | DoubleType => true
-    case org.apache.spark.sql.types.DateType => true
+    case DateType => true
     case TimestampType | TimestampNTZType => true
-    // round-14: strings answer when every value-bearing row carries
-    // `s_exact` — bounds computed from the data at commit time, not the
-    // truncatable footer binaries (which remain pruning-grade only)
-    case org.apache.spark.sql.types.StringType => true
+    case StringType => true
     case _ => false
   }
 
+  /** The one aggregate-kind parser of every path. */
   private def kindOf(ne: NamedExpression): Option[Kind] = ne match {
     // count(DISTINCT col): only ever answerable for identity PARTITION
     // columns (the directory value is every row's value, so the
     // distinct set is the set of value-bearing directories) — the
     // partition-column check happens in metaValues where the dir is
-    // known; any other distinct declines there
+    // known; any other distinct declines there, and the filtered and
+    // grouped paths decline it outright
     case Alias(ae: AggregateExpression, _)
         if ae.isDistinct && ae.filter.isEmpty =>
       ae.aggregateFunction match {
@@ -913,208 +547,197 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** Exact `sum(col)` over `files` from the `sum_l` sidecar domain.
-    * None = decline (an era sidecar, a value-bearing file without a
-    * recorded sum, or a Long-overflowing total — the scan then wraps or
-    * errors per its own eval mode); Some(None) = the SQL NULL of a sum
-    * with no non-null input; Some(Some(v)) = the answer. `physLower` is
-    * the lowercased physical column name.
+  /** One version dir's `_stats` rows as the metadata answers read them
+    * ([[graft.ops.Stats.sidecarRows]]), with the [[SideFlags]] that
+    * gate the DECLINE decision — an era-padded column must never read
+    * as "all-null data", only as "this sidecar cannot answer" — and the
+    * per-kind trust rules and answers the unfiltered, filtered and
+    * grouped paths share. A file must pass [[exact]] for a kind before
+    * [[partial]] reads its entry.
     */
-  private def sumOver(files: Seq[String], physLower: String,
-      byFileCol: Map[(String, String), org.apache.spark.sql.Row],
-      flags: SideFlags): Option[Option[Long]] = {
-    if (!flags.hasSum) return None
-    var acc = 0L
-    var any = false
-    files.foreach { fl =>
-      byFileCol.get((fl, physLower)) match {
-        case None => return None // uncovered file: unknowable
-        case Some(r) =>
-          if (r.getLong(2) == 0L) () // zero-row file contributes nothing
-          else if (!r.isNullAt(17)) {
-            try acc = Math.addExact(acc, r.getLong(17))
+  private final class Answering(dir: String) {
+    private val side: SidecarRows = Stats.sidecarRows(SparkSession.active, dir)
+    private val flags = SideFlags(
+      hasTs = side.columns("lo_t") && side.columns("t_exact"),
+      hasS = side.columns("s_exact"), hasSum = side.columns("sum_l"))
+
+    /** Every file in `live` has a sidecar row count. */
+    def covers(live: Set[String]): Boolean = live.forall(side.byFile.contains)
+
+    def rowsOf(fl: String): Long = side.byFile(fl).head.rows
+
+    private def phys(n: String): String = ColMap.toPhysicalName(dir, n).toLowerCase
+    private def entry(fl: String, n: String): Option[FileColStat] =
+      side.byFileCol.get((fl, phys(n)))
+    private def at(fl: String, n: String): FileColStat = side.byFileCol((fl, phys(n)))
+    private def allNull(r: FileColStat): Boolean = r.has_stats && r.nulls == r.rows
+
+    /** File `fl` against every conjunct: NONE if any is NONE, ALL if
+      * all are ALL. An identity partition column's directory value IS
+      * every row's value — exact, null-aware, never widened; any other
+      * column goes through [[Stats.verdict]].
+      */
+    def classify(fl: String, conjs: Seq[Conj], partSchema: Option[StructType],
+        utc: Boolean): Verdict = {
+      val per = conjs.map { cj =>
+        val p = ColMap.toPhysicalName(dir, cj.colName)
+        partSchema.flatMap(partitionValue(fl, p, _)) match {
+          case Some(None) => NoRows // NULL partition never matches
+          case Some(Some(v)) => Stats.pointVerdict(cj, v)
+          case None => side.byFileCol.get((fl, p.toLowerCase))
+            .fold[Verdict](SomeRows)(Stats.verdict(_, cj, utc))
+        }
+      }
+      if (per.contains(NoRows)) NoRows
+      else if (per.forall(_ == AllRows)) AllRows
+      else SomeRows
+    }
+
+    /** Whether file `fl`'s entry is answering-grade for `k` — the
+      * per-domain trust rules: trusted null counts, value-exact bounds,
+      * recorded sums, verified all-null.
+      */
+    def exact(fl: String, k: Kind): Boolean = k match {
+      case OfColumn(n) => entry(fl, n).exists(_.has_stats)
+      case BoundOf(n, dt, _) => entry(fl, n).exists { r =>
+        r.has_stats && (dt match {
+          case ByteType | ShortType | IntegerType | LongType | DateType =>
+            r.dec_scale.isEmpty // decimal-backed ints are unscaled: demote
+          case FloatType | DoubleType => true // NaN files are has_stats=false
+          // every value-bearing row must be VALUE-exact micros of the
+          // right flavor (adjusted for TIMESTAMP, wall-clock for NTZ); a
+          // ns-floored row is pruning-grade, not answering-grade
+          case TimestampType | TimestampNTZType =>
+            flags.hasTs && (r.lo_t.isEmpty || // all-null: contributes nothing
+              (r.t_exact.contains(true) && r.t_adj.contains(dt == TimestampType)))
+          // footer binary bounds may be truncated: only `s_exact` rows
+          case StringType => flags.hasS && (r.lo_s.isEmpty || r.s_exact.contains(true))
+          case _ => false
+        })
+      }
+      // an ALL file contributes its data-exact sum — qualify when the
+      // sum is recorded, the file is verified all-null, or it is empty
+      case SumOf(n) =>
+        flags.hasSum && entry(fl, n).exists(r =>
+          r.rows == 0L || r.sum_l.isDefined || allNull(r))
+      // avg additionally needs the sign-gate bounds on value-bearing
+      // files ([[avgOver]]); pure-sign/magnitude failures surface there
+      case AvgOf(n) =>
+        flags.hasSum && entry(fl, n).exists(r => r.rows == 0L ||
+          (r.sum_l.isDefined && r.has_stats && r.lo_l.isDefined && r.dec_scale.isEmpty) ||
+          allNull(r))
+      case _ => true
+    }
+
+    /** The answer of `k` over `files` as an internal Catalyst value — a
+      * count, or a bound/sum/avg that is SQL NULL when no file holds a
+      * value — or None to decline. Also a group's interior PARTIAL in
+      * the grouped hybrid: counts and sums merge by Sum, bounds by
+      * Min/Max.
+      */
+    def partial(k: Kind, files: Seq[String]): Option[Any] = k match {
+      case Star => Some(files.map(rowsOf).sum)
+      case OfColumn(n) => Some(files.map { fl => val r = at(fl, n); r.rows - r.nulls }.sum)
+      case b: BoundOf => Some(boundOver(files, b).orNull)
+      case SumOf(n) => sumOver(files, n).map(_.map(Long.box).orNull)
+      case AvgOf(n) => avgOver(files, n).map(_.map(Double.box).orNull)
+      case DistinctPart(_) => None // answered from directories in metaValues
+    }
+
+    /** The min/max over `files` of one value-exact column, or None when
+      * every file is all-null for it (bounds ignore nulls).
+      */
+    private def boundOver(files: Seq[String], k: BoundOf): Option[Any] = {
+      val BoundOf(n, dt, isMin) = k
+      val rs = files.map(at(_, n))
+      def pick[T](lo: FileColStat => Option[T], hi: FileColStat => Option[T])(
+          implicit ord: Ordering[T]): Option[T] = {
+        val vs = rs.flatMap(if (isMin) lo else hi)
+        if (vs.isEmpty) None else Some(if (isMin) vs.min else vs.max)
+      }
+      dt match {
+        case FloatType => pick(_.lo_d, _.hi_d).map(_.toFloat)
+        case DoubleType => pick(_.lo_d, _.hi_d)
+        case TimestampType | TimestampNTZType => pick(_.lo_t, _.hi_t) // micros
+        case StringType => pick(_.lo_s, _.hi_s)(Stats.utf8Ordering)
+          .map(org.apache.spark.unsafe.types.UTF8String.fromString)
+        case LongType => pick(_.lo_l, _.hi_l)
+        case ByteType => pick(_.lo_l, _.hi_l).map(_.toByte)
+        case ShortType => pick(_.lo_l, _.hi_l).map(_.toShort)
+        case _ => pick(_.lo_l, _.hi_l).map(_.toInt) // IntegerType, DateType
+      }
+    }
+
+    /** Exact `sum(col)` over `files` from the `sum_l` sidecar domain.
+      * None = decline (an era sidecar, a value-bearing file without a
+      * recorded sum, or a Long-overflowing total — the scan then wraps
+      * or errors per its own eval mode); Some(None) = the SQL NULL of a
+      * sum with no non-null input; Some(Some(v)) = the answer.
+      */
+    private def sumOver(files: Seq[String], n: String): Option[Option[Long]] = {
+      if (!flags.hasSum) return None
+      var acc = 0L
+      var any = false
+      files.foreach { fl =>
+        val r = entry(fl, n).getOrElse(return None) // uncovered: unknowable
+        r.sum_l match {
+          case _ if r.rows == 0L => () // zero-row file contributes nothing
+          case Some(s) =>
+            try acc = Math.addExact(acc, s)
             catch { case _: ArithmeticException => return None }
             any = true
+          case None if allNull(r) => () // verified all-null: nothing
+          case None => return None // value-bearing without a recorded sum
+        }
+      }
+      Some(if (any) Some(acc) else None)
+    }
+
+    /** `avg(col)` over `files` from metadata, served ONLY when the
+      * scan's own double accumulation is provably lossless in any
+      * partial-merge order (Spark averages the integer family through a
+      * DoubleType sum):
+      *  - every value shares one sign (footer bounds: global lo >= 0 or
+      *    global hi <= 0) — so every intermediate partial sum is a
+      *    monotone prefix bounded by the total;
+      *  - |total| <= 2^53 — so every bounded intermediate (and every
+      *    individual value) is an exactly-representable integer double.
+      * Under those two gates the scan's result is total/count to the
+      * last bit, independent of partitioning. Everything else declines —
+      * a metadata answer must never differ from the scan's, even in the
+      * last ulp. Null counts of sum-bearing files are data-exact (the
+      * same pass that recorded the sums), so the divisor is trustworthy.
+      */
+    private def avgOver(files: Seq[String], n: String): Option[Option[Double]] =
+      sumOver(files, n).flatMap {
+        case None => Some(None) // no non-null input: avg IS NULL
+        case Some(total) =>
+          // value-bearing files need exact footer bounds for the sign
+          // gate (and must not be decimal-backed unscaled rows)
+          val bearing = files.map(at(_, n)).filter(_.sum_l.isDefined)
+          if (bearing.exists(r => !r.has_stats || r.lo_l.isEmpty || r.dec_scale.isDefined))
+            None
+          else {
+            val sameSign = bearing.forall(_.lo_l.get >= 0L) ||
+              bearing.forall(_.hi_l.get <= 0L)
+            // spelled as two comparisons: math.abs(Long.MinValue) overflows
+            val smallEnough = total <= (1L << 53) && total >= -(1L << 53)
+            val count = bearing.map(r => r.rows - r.nulls).sum
+            if (!sameSign || !smallEnough || count == 0L) None
+            else Some(Some(total.toDouble / count))
           }
-          else if (r.getBoolean(4) && r.getLong(3) == r.getLong(2)) ()
-          // ^ verified all-null: contributes nothing
-          else return None // value-bearing without a recorded sum
       }
-    }
-    Some(if (any) Some(acc) else None)
   }
 
-  /** Whether ONE file's sidecar entry is answering-grade for `k` — the
-    * per-domain trust rules (value-exact bounds, recorded sums, verified
-    * all-null). A non-qualifying file demotes to the boundary scan in
-    * the filtered path and declines the grouped rewrite wholesale.
-    * Shared by [[rewriteFiltered]] and [[rewriteGrouped]] (round-14).
-    */
-  private def exactKindFor(fl: String, k: Kind, dir: String,
-      byFileCol: Map[(String, String), org.apache.spark.sql.Row],
-      flags: SideFlags): Boolean = k match {
-    case BoundOf(n, dt, _) =>
-      val c = graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase
-      byFileCol.get((fl, c)).exists { r =>
-        if (!r.getBoolean(4)) false
-        else dt match {
-          case ByteType | ShortType | IntegerType | LongType |
-              org.apache.spark.sql.types.DateType =>
-            r.isNullAt(16) // decimal-backed ints are unscaled: demote
-          case FloatType | DoubleType => true // NaN files are has_stats=false
-          case TimestampType | TimestampNTZType =>
-            flags.hasTs && (r.isNullAt(9) || // all-null: contributes nothing
-              (!r.isNullAt(12) && r.getBoolean(12) &&
-                !r.isNullAt(11) &&
-                r.getBoolean(11) == (dt == TimestampType)))
-          case org.apache.spark.sql.types.StringType =>
-            flags.hasS && (r.isNullAt(13) ||
-              (!r.isNullAt(15) && r.getBoolean(15)))
-          case _ => false
-        }
-      }
-    // an ALL file contributes its data-exact sum — qualify when the
-    // sum is recorded, the file is verified all-null, or it is empty
-    case SumOf(n) =>
-      flags.hasSum && {
-        val c = graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase
-        byFileCol.get((fl, c)).exists { r =>
-          r.getLong(2) == 0L || !r.isNullAt(17) ||
-            (r.getBoolean(4) && r.getLong(3) == r.getLong(2))
-        }
-      }
-    // avg additionally needs the sign-gate bounds on value-bearing
-    // files ([[avgOver]]); pure-sign/magnitude failures surface there
-    case AvgOf(n) =>
-      flags.hasSum && {
-        val c = graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase
-        byFileCol.get((fl, c)).exists { r =>
-          r.getLong(2) == 0L ||
-            (!r.isNullAt(17) && r.getBoolean(4) && !r.isNullAt(5) &&
-              r.isNullAt(16)) ||
-            (r.getBoolean(4) && r.getLong(3) == r.getLong(2))
-        }
-      }
-    case _ => true
-  }
-
-  /** The min/max over `files` of one value-exact column as an INTERNAL
-    * Catalyst value, or None when every file is all-null for it (the
-    * caller then answers NULL, or lets a boundary scan decide). Callers
-    * must have gated every file's exactness first ([[exactKindFor]]) —
-    * this helper only combines. Shared by the filtered path's interior
-    * bound and the grouped path's per-group bounds (round-14).
-    */
-  private def boundOver(files: Seq[String], k: BoundOf, dir: String,
-      byFileCol: Map[(String, String), org.apache.spark.sql.Row])
-      : Option[Any] = {
-    val BoundOf(n, dt, isMin) = k
-    val c = graft.ops.ColMap.toPhysicalName(dir, n).toLowerCase
-    def pick(lo: Int, hi: Int) = if (isMin) lo else hi
-    dt match {
-      case FloatType | DoubleType =>
-        val i = pick(7, 8)
-        val vs = files.map(fl => byFileCol((fl, c)))
-          .filter(!_.isNullAt(i)).map(_.getDouble(i))
-        if (vs.isEmpty) None
-        else {
-          val v = if (isMin) vs.min else vs.max
-          Some(if (dt == FloatType) v.toFloat else v)
-        }
-      case TimestampType | TimestampNTZType =>
-        val i = pick(9, 10)
-        val vs = files.map(fl => byFileCol((fl, c)))
-          .filter(!_.isNullAt(i)).map(_.getLong(i))
-        if (vs.isEmpty) None else Some(if (isMin) vs.min else vs.max)
-      case org.apache.spark.sql.types.StringType =>
-        val i = pick(13, 14)
-        val vs = files.map(fl => byFileCol((fl, c)))
-          .filter(!_.isNullAt(i)).map(_.getString(i))
-        if (vs.isEmpty) None
-        else Some(org.apache.spark.unsafe.types.UTF8String.fromString(
-          if (isMin) vs.min(graft.ops.Stats.utf8Ordering)
-          else vs.max(graft.ops.Stats.utf8Ordering)))
-      case _ => // integer family + date (int32 days ride lo_l/hi_l)
-        val i = pick(5, 6)
-        val vs = files.map(fl => byFileCol((fl, c)))
-          .filter(!_.isNullAt(i)).map(_.getLong(i))
-        if (vs.isEmpty) None
-        else {
-          val v = if (isMin) vs.min else vs.max
-          Some(dt match {
-            case LongType => v
-            case ByteType => v.toByte
-            case ShortType => v.toShort
-            case _ => v.toInt // IntegerType, DateType
-          })
-        }
-    }
-  }
-
-  /** `avg(col)` over `files` from metadata, served ONLY when the scan's
-    * own double accumulation is provably lossless in any partial-merge
-    * order (Spark averages the integer family through a DoubleType
-    * sum):
-    *  - every value shares one sign (footer bounds: global lo >= 0 or
-    *    global hi <= 0) — so every intermediate partial sum is a
-    *    monotone prefix bounded by the total;
-    *  - |total| <= 2^53 — so every bounded intermediate (and every
-    *    individual value) is an exactly-representable integer double.
-    * Under those two gates the scan's result is total/count to the last
-    * bit, independent of partitioning. Everything else declines — a
-    * metadata answer must never differ from the scan's, even in the
-    * last ulp. Null counts of sum-bearing files are data-exact (the
-    * same pass that recorded the sums), so the divisor is trustworthy.
-    */
-  private def avgOver(files: Seq[String], physLower: String,
-      byFileCol: Map[(String, String), org.apache.spark.sql.Row],
-      flags: SideFlags): Option[Option[Double]] =
-    sumOver(files, physLower, byFileCol, flags).flatMap {
-      case None => Some(None) // no non-null input: avg IS NULL
-      case Some(total) =>
-        var n = 0L
-        var lo = Long.MaxValue
-        var hi = Long.MinValue
-        files.foreach { fl =>
-          val r = byFileCol((fl, physLower)) // present: sumOver covered it
-          if (!r.isNullAt(17)) {
-            // value-bearing file: needs exact footer bounds for the
-            // sign gate (and must not be a decimal-backed unscaled row)
-            if (!r.getBoolean(4) || r.isNullAt(5) || !r.isNullAt(16))
-              return None
-            lo = math.min(lo, r.getLong(5))
-            hi = math.max(hi, r.getLong(6))
-            n += r.getLong(2) - r.getLong(3)
-          }
-        }
-        val sameSign = lo >= 0L || hi <= 0L
-        // spelled as two comparisons: math.abs(Long.MinValue) overflows
-        val smallEnough = total <= (1L << 53) && total >= -(1L << 53)
-        if (!sameSign || !smallEnough || n == 0L) None
-        else Some(Some(total.toDouble / n))
-    }
-
-  /** The `_stats` rows of `dir` ([[graft.ops.Stats.sidecarRows]]: the
-    * fixed layout, absent era columns padded with typed nulls so row
-    * indices stay stable) and the [[SideFlags]] that still gate the
-    * DECLINE decision — an all-null padded column must never read as
-    * "all-null data", only as "this sidecar cannot answer".
-    */
-  private[graft] def answeringRows(dir: String)
-      : (graft.ops.SidecarRows, SideFlags) = {
-    val side = graft.ops.Stats.sidecarRows(SparkSession.active, dir)
-    (side, SideFlags(
-      hasTs = side.columns("lo_t") && side.columns("t_exact"),
-      hasS = side.columns("s_exact"), hasSum = side.columns("sum_l")))
-  }
-
-  /** Answer each requested aggregate from the sidecar, or None when any
-    * live file is uncovered (exactness cannot be proven). `Some(null)`
-    * inside the result is a real SQL NULL (min/max over an all-null
-    * column), distinct from declining.
+  /** Answer each requested aggregate over the whole version from the
+    * sidecar through the same trust rules and answers as the filtered
+    * and grouped paths, or None when any live file is uncovered
+    * (exactness cannot be proven). `Some(null)` inside the result is a
+    * real SQL NULL (min/max over an all-null column), distinct from
+    * declining.
     */
   private def metaValues(dir: String, kinds: Seq[Kind],
-      rootOpt: Option[String]): Option[Seq[Any]] = {
+      root: String): Option[Seq[Any]] = {
     // under a deletion vector the sidecar describes PRE-delete files.
     // count(*) stays answerable — vector entries are unique positions
     // in live files (COW never reaches a DV version, carries preserve
@@ -1128,129 +751,35 @@ object MetaCountRewrite extends Rule[LogicalPlan] {
     if (graft.ops.EqDel.exists(dir)) return None
     val dv = graft.ops.Dv.exists(dir)
     if (dv && kinds.exists(_ != Star)) return None
-    val sidecar = Paths.get(dir, graft.ops.Stats.Sidecar)
-    if (!Files.isDirectory(sidecar)) return None
+    if (!Files.isDirectory(Paths.get(dir, Stats.Sidecar))) return None
+    val live = liveFiles(dir).toSeq
+    if (live.isEmpty) return None
+    // the nested sidecar read contains no aggregate, so the rule cannot
+    // re-enter; old sidecars decline what their era cannot answer
+    // (flags), never mis-answer it
+    val a = new Answering(dir)
+    if (!a.covers(live.toSet)) return None
     val dvCount =
       if (!dv) 0L
       else graft.ops.Dv.cardinality(SparkSession.active, dir)
-    val live = graft.io.Fs.walkParquet(Paths.get(dir))
-      .map(_.toString.stripPrefix(dir).stripPrefix("/")).toSet
-    if (live.isEmpty) return None
-    // the nested sidecar read contains no aggregate, so the rule cannot
-    // re-enter; old sidecars decline timestamp bounds (flags), never
-    // mis-answer them
-    val (side, flags) = answeringRows(dir)
-    val SideFlags(hasTs, hasS, _) = flags
-    val (byFile, byFileCol) = (side.byFile, side.byFileCol)
-    if (!live.forall(byFile.contains)) return None
-    // every live file's trusted entry for column `c`, or None (decline);
-    // the sidecar speaks PHYSICAL names, the aggregate LOGICAL ones
-    def covered(c: String): Option[Seq[org.apache.spark.sql.Row]] = {
-      val phys = graft.ops.ColMap.toPhysicalName(dir, c)
-      val per = live.toSeq.map(f =>
-        byFile(f).find(r => r.getString(1).equalsIgnoreCase(phys) && r.getBoolean(4)))
-      if (per.exists(_.isEmpty)) None else Some(per.flatten)
-    }
-    val total = live.toSeq.map(f => byFile(f).head.getLong(2)).sum - dvCount
-    val values: Seq[Option[Any]] = kinds.map {
-      case Star => Some(total)
-      case OfColumn(c) => covered(c).map(_.map(r => r.getLong(2) - r.getLong(3)).sum)
-      // round-14: sum/avg from the data-exact per-file sums (None =
-      // decline; an inner null is the real SQL NULL of an empty input)
+    every(kinds) {
+      case Star => Some(live.map(a.rowsOf).sum - dvCount)
       case DistinctPart(c) =>
         // the distinct non-null values among IDENTITY partition
         // directories holding at least one row — nulls are excluded
         // exactly as count(DISTINCT) excludes them; any undecodable
         // file (mixed-layout leg) declines. DVs decline above: a
         // vector could have emptied a directory's last rows.
-        rootOpt.flatMap { root =>
-          graft.ops.Sinks.partitionSchemaFor(root, dir).flatMap { ps =>
-            val phys = graft.ops.ColMap.toPhysicalName(dir, c)
-            val identity = ps.fields.exists(f =>
-              f.name.equalsIgnoreCase(phys) &&
-                graft.ops.Transforms.parse(f.name).isEmpty)
-            if (!identity) None
-            else {
-              val per = live.toSeq
-                .filter(f => byFile(f).head.getLong(2) > 0)
-                .map(f => partitionValue(f, phys, ps))
-              if (per.exists(_.isEmpty)) None
-              else Some(per.flatten.collect { case Some(v) => v }
-                .distinct.size.toLong)
-            }
-          }
+        graft.ops.Sinks.partitionSchemaFor(root, dir).flatMap { ps =>
+          val phys = ColMap.toPhysicalName(dir, c)
+          val identity = ps.fields.exists(f =>
+            f.name.equalsIgnoreCase(phys) &&
+              graft.ops.Transforms.parse(f.name).isEmpty)
+          if (!identity) None
+          else every(live.filter(a.rowsOf(_) > 0))(partitionValue(_, phys, ps))
+            .map(_.flatten.distinct.size.toLong)
         }
-      case SumOf(c) =>
-        sumOver(live.toSeq, graft.ops.ColMap.toPhysicalName(dir, c).toLowerCase,
-          byFileCol, flags).map(_.map(Long.box).orNull)
-      case AvgOf(c) =>
-        avgOver(live.toSeq, graft.ops.ColMap.toPhysicalName(dir, c).toLowerCase,
-          byFileCol, flags).map(_.map(Double.box).orNull)
-      case BoundOf(c, dt, isMin) => covered(c).flatMap { rs =>
-        // files whose bounds are absent hold only nulls for this column
-        // (bounds ignore nulls); all files all-null => the answer IS null
-        def longs(i: Int) = rs.filter(!_.isNullAt(i)).map(_.getLong(i))
-        def dbls(i: Int) = rs.filter(!_.isNullAt(i)).map(_.getDouble(i))
-        dt match {
-          case FloatType | DoubleType =>
-            val vs = if (isMin) dbls(7) else dbls(8)
-            if (vs.isEmpty) Some(null)
-            else {
-              val v = if (isMin) vs.min else vs.max
-              Some(if (dt == FloatType) v.toFloat else v)
-            }
-          case org.apache.spark.sql.types.StringType =>
-            if (!hasS) None // pre-round-14 sidecar: decline, never guess
-            else {
-              // every VALUE-BEARING row must be data-exact (`s_exact`):
-              // footer binary bounds may be truncated — pruning-grade,
-              // not answering-grade. Boundless covered rows are all-null
-              // files (bounds ignore nulls); all files all-null => NULL.
-              val bearing = rs.filter(!_.isNullAt(13))
-              if (bearing.exists(r => r.isNullAt(15) || !r.getBoolean(15))) None
-              else if (bearing.isEmpty) Some(null)
-              else {
-                val vs = bearing.map(r =>
-                  if (isMin) r.getString(13) else r.getString(14))
-                val v =
-                  if (isMin) vs.min(graft.ops.Stats.utf8Ordering)
-                  else vs.max(graft.ops.Stats.utf8Ordering)
-                // LocalRelation rows carry INTERNAL values
-                Some(org.apache.spark.unsafe.types.UTF8String.fromString(v))
-              }
-            }
-          case TimestampType | TimestampNTZType =>
-            if (!hasTs) None // pre-upgrade sidecar: decline, never guess
-            else {
-              // every value-bearing row must be VALUE-exact micros of the
-              // right flavor (adjusted for TIMESTAMP, wall-clock for NTZ);
-              // a ns-floored or flavor-mismatched file declines the whole
-              // answer — pruning-grade bounds are not answering-grade
-              val wantAdj = dt == TimestampType
-              val bearing = rs.filter(!_.isNullAt(9))
-              if (bearing.exists(r => r.isNullAt(12) || !r.getBoolean(12) ||
-                  r.isNullAt(11) || r.getBoolean(11) != wantAdj)) None
-              else if (bearing.isEmpty) Some(null)
-              else {
-                val vs = bearing.map(r => if (isMin) r.getLong(9) else r.getLong(10))
-                Some(if (isMin) vs.min else vs.max) // internal micros Long
-              }
-            }
-          case _ =>
-            val vs = if (isMin) longs(5) else longs(6)
-            if (vs.isEmpty) Some(null)
-            else {
-              val v = if (isMin) vs.min else vs.max
-              Some(dt match {
-                case LongType => v
-                case ByteType => v.toByte
-                case ShortType => v.toShort
-                case _ => v.toInt // IntegerType, DateType (int32 days)
-              })
-            }
-        }
-      }
+      case k => if (live.forall(a.exact(_, k))) a.partial(k, live) else None
     }
-    if (values.exists(_.isEmpty)) None else Some(values.map(_.get))
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types._
 
 import graft.catalog.GraftSnapshotDir
 import graft.ops.{Bloom, ColMap, Sinks, Stats}
@@ -19,15 +18,16 @@ import graft.ops.{Bloom, ColMap, Sinks, Stats}
   * the surviving partitions; this rule closes the same gap for the SQL
   * door that B109 closed for the library door.
   *
-  * Fires when a top-level conjunct compares a sidecar-covered column to
-  * a literal (`=`, `<`, `<=`, `>`, `>=`, `IN`; `BETWEEN` arrives
-  * desugared). Each usable conjunct prunes independently and the file
-  * sets INTERSECT — exactly the conservative per-file contract of
-  * [[Stats.prunedFilesBounds]]: a file survives unless its recorded
-  * range provably excludes every satisfying value, so keeping the
-  * ORIGINAL filter above the swapped scan preserves exact results by
-  * construction. When nothing prunes, the plan is left untouched (a
-  * DV/mapped/mixed table then still swaps through [[DvReadRule]]).
+  * Fires when a top-level conjunct ([[Stats.conjOf]]) compares a
+  * sidecar-covered column to a literal (`=`, `<`, `<=`, `>`, `>=`, `IN`;
+  * `BETWEEN` arrives desugared). Every file is classified against every
+  * such conjunct by [[Stats.verdict]] — the classifier the metadata
+  * answers ([[MetaCountRewrite]]) use too — and survives unless some
+  * conjunct proves it NONE, so keeping the ORIGINAL filter above the
+  * swapped scan preserves exact results by construction. Strict
+  * endpoints stay strict: `k > 5` drops a file whose maximum is 5. When
+  * nothing prunes, the plan is left untouched (a DV/mapped/mixed table
+  * then still swaps through [[DvReadRule]]).
   *
   * The swapped scan reads the kept files through [[Sinks.snapshotRead]]
   * — deletion vectors subtract, mixed layouts union per leg, column
@@ -36,11 +36,11 @@ import graft.ops.{Bloom, ColMap, Sinks, Stats}
   * (a pruned swap already contains the subtraction; an unpruned
   * relation falls through to it).
   *
-  * Planning-time cost: one sidecar read per pruning conjunct
-  * (metadata-scale, the same class of read [[MetaCountRewrite]] does)
-  * and a driver file listing — paid once per query, never per row.
+  * Planning-time cost: the version's one memoized sidecar read
+  * ([[Stats.sidecarRows]], shared with [[MetaCountRewrite]]) and a
+  * driver file listing — paid once per query, never per row.
   */
-object StatsSkipRule extends Rule[LogicalPlan] {
+object StatsSkipRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     lazy val referenced: Set[Long] =
@@ -60,84 +60,6 @@ object StatsSkipRule extends Rule[LogicalPlan] {
     }
   }
 
-  /** Sidecar-comparable literal value, or None for types whose stored
-    * domain the sidecar cannot compare exactly. Internal Catalyst
-    * values: dates are days (Int) — parquet DATE is ALWAYS days, so the
-    * domains agree. TIMESTAMP literals (internal: epoch micros) compare
-    * against the sidecar's `lo_t/hi_t` micros — the round-13 upgrade:
-    * `Stats.annotate` now normalizes each footer's raw int64 to micros
-    * AT WRITE TIME (the annotator sees the file's unit; ms-written
-    * files exist), so the read side never guesses a unit. The
-    * instant/wall-clock flavor rides along ([[graft.ops.Stats]] TsVal)
-    * and [[Stats.prunedFilesBounds]] keeps any file whose footer flavor
-    * can't be compared under the session zone. Time-range predicates on
-    * event tables are THE dominant 100 TB scan filter — this is the
-    * highest-leverage conjunct the rule serves.
-    */
-  private def boundValue(l: Literal): Option[Any] = l.dataType match {
-    case ByteType | ShortType | IntegerType | LongType | DateType
-        if l.value != null => Some(l.value)
-    case FloatType | DoubleType if l.value != null => Some(l.value)
-    case StringType if l.value != null => Some(l.value.toString)
-    case TimestampType if l.value != null =>
-      Some(Stats.TsVal(l.value.asInstanceOf[Long], instant = true))
-    case TimestampNTZType if l.value != null =>
-      Some(Stats.TsVal(l.value.asInstanceOf[Long], instant = false))
-    // DECIMAL (round-13): the sidecar stores int-backed decimals as
-    // (unscaled, scale) — the bound travels as exact BigDecimal and
-    // [[Stats.prunedFilesBounds]] rescales it to each FILE's recorded
-    // scale (floor/ceil per side), so precision drift between literal
-    // and column can only widen the kept set
-    case _: DecimalType if l.value != null =>
-      Some(l.value.asInstanceOf[org.apache.spark.sql.types.Decimal]
-        .toJavaBigDecimal)
-    case _ => None
-  }
-
-  private sealed trait Bound
-  private final case class Lo(v: Any) extends Bound
-  private final case class Hi(v: Any) extends Bound
-  private final case class Point(v: Any) extends Bound
-  private final case class Points(vs: Seq[Any]) extends Bound
-
-  /** (column attribute, bound) of one conjunct, when usable. Strict
-    * bounds relax to inclusive — pruning keeps any overlapping file, so
-    * the relaxation only keeps more.
-    */
-  private def boundOf(c: Expression): Option[(Attribute, Bound)] = c match {
-    case EqualTo(a: Attribute, l: Literal) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Point(v))
-    case EqualTo(l: Literal, a: Attribute) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Point(v))
-    case GreaterThan(a: Attribute, l: Literal) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Lo(v))
-    case GreaterThanOrEqual(a: Attribute, l: Literal) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Lo(v))
-    case LessThan(a: Attribute, l: Literal) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Hi(v))
-    case LessThanOrEqual(a: Attribute, l: Literal) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Hi(v))
-    case GreaterThan(l: Literal, a: Attribute) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Hi(v))
-    case GreaterThanOrEqual(l: Literal, a: Attribute) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Hi(v))
-    case LessThan(l: Literal, a: Attribute) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Lo(v))
-    case LessThanOrEqual(l: Literal, a: Attribute) if l.dataType == a.dataType =>
-      boundValue(l).map(v => a -> Lo(v))
-    case In(a: Attribute, list) if list.nonEmpty &&
-        list.forall(e => e.isInstanceOf[Literal] &&
-          e.dataType == a.dataType) =>
-      val vs = list.flatMap(e => boundValue(e.asInstanceOf[Literal]))
-      if (vs.size == list.size) Some(a -> Points(vs)) else None
-    case _ => None
-  }
-
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, rr) => splitAnd(l) ++ splitAnd(rr)
-    case other => Seq(other)
-  }
-
   private def trySwap(f: Filter, cond: Expression, r: DataSourceV2Relation,
       t: GraftSnapshotDir): Option[LogicalPlan] = {
     val spark = SparkSession.active
@@ -153,38 +75,15 @@ object StatsSkipRule extends Rule[LogicalPlan] {
     // build's CAST AS STRING — the build restricts indexable types so
     // the two spellings agree)
     val bloomCovered = Bloom.sidecarCols(spark, dir).map(_.toLowerCase).toSet
-    def pointy(b: Bound) = b match {
-      case Point(_) | Points(_) => true
-      case _ => false
-    }
-    val usable = splitAnd(cond).flatMap(boundOf).filter { case (a, b) =>
-      val phys = ColMap.toPhysicalName(dir, a.name).toLowerCase
-      statsCovered(phys) || (bloomCovered(phys) && pointy(b))
-    }
-    if (usable.isEmpty) return None
+    def phys(c: Stats.Conj) = ColMap.toPhysicalName(dir, c.colName)
+    val conjs = splitConjunctivePredicates(cond).flatMap(Stats.conjOf)
+    val byStats = conjs.filter(c => statsCovered(phys(c).toLowerCase))
+    val byBloom = conjs.filter(c => c.cmp == Stats.CEq && bloomCovered(phys(c).toLowerCase))
+    if (byStats.isEmpty && byBloom.isEmpty) return None
     val all = graft.io.Fs.walkParquet(java.nio.file.Paths.get(dir))
       .map(_.toString).toSet
-    val kept = usable.foldLeft(all) { case (acc, (a, b)) =>
-      val phys = ColMap.toPhysicalName(dir, a.name)
-      val fromStats =
-        if (!statsCovered(phys.toLowerCase)) all
-        else (b match {
-          case Lo(v) => Stats.prunedFilesBounds(spark, dir, phys, Some(v), None)
-          case Hi(v) => Stats.prunedFilesBounds(spark, dir, phys, None, Some(v))
-          case Point(v) => Stats.prunedFilesBounds(spark, dir, phys, Some(v), Some(v))
-          case Points(vs) => vs.flatMap(v =>
-            Stats.prunedFilesBounds(spark, dir, phys, Some(v), Some(v))).distinct
-        }).toSet
-      val fromBloom =
-        if (!bloomCovered(phys.toLowerCase)) all
-        else b match {
-          case Point(v) =>
-            Bloom.prunedFilesEqAny(spark, dir, phys, Seq(v.toString)).toSet
-          case Points(vs) =>
-            Bloom.prunedFilesEqAny(spark, dir, phys, vs.map(_.toString)).toSet
-          case _ => all
-        }
-      acc.intersect(fromStats).intersect(fromBloom)
+    val kept = byBloom.foldLeft(Stats.keptFiles(spark, dir, byStats).toSet) { (acc, c) =>
+      acc.intersect(Bloom.prunedFilesEqAny(spark, dir, phys(c), c.vs.map(_.toString)).toSet)
     }
     // nothing pruned: leave the plan for the ordinary scan (and, on
     // DV/mapped/mixed tables, for DvReadRule's swap)

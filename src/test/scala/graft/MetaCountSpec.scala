@@ -338,6 +338,26 @@ class MetaCountSpec extends AnyFunSuite {
     assert(r2.getLong(0) == 100 && r2.getLong(1) == 599 && r2.getLong(2) == 500)
   }
 
+  test("filtered count with a DECIMAL conjunct classifies per file and equals the scan") {
+    root
+    import spark.implicits._
+    val tbl = s"$root/fdec"
+    // price = k / 4 as DECIMAL(12,2) over 4 disjoint k-range files:
+    // [0.00,62.25] [62.50,124.75] [125.00,187.25] [187.50,249.75]
+    val df = (0L until 1000L).toDF("k")
+      .select($"k", ($"k" / 4).cast("decimal(12,2)").as("price"))
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
+    Sinks.publishVersioned(df, tbl, None, statsCols = Seq("k", "price"))
+    // the strict lower edge sits on the second file's maximum, so only
+    // the third file can hold a match
+    val pred = "price > 124.75 AND price <= 187.25"
+    val q = spark.sql(s"SELECT count(*) AS n FROM graftmeta.fdec WHERE $pred")
+    val want = Sinks.readCurrent(spark, tbl).filter(pred).count()
+    assert(q.collect().head.getLong(0) == want && want == 250)
+    assert(q.inputFiles.length == 1,
+      s"only the overlapping file must open, got ${q.inputFiles.mkString(", ")}")
+  }
+
   test("filtered count: deletion-vector files are forced into the boundary scan (round-14)") {
     root
     import spark.implicits._
@@ -535,8 +555,9 @@ class MetaCountSpec extends AnyFunSuite {
     val tbl = s"$root/gsum"
     graft.ops.TableProps.update(tbl)(_ +
       (graft.ops.TableProps.PartitionKey -> "cat STRING"))
+    // 'a:b' is stored Hive-escaped (cat=a%3Ab)
     val df = (0 until 330).map { i =>
-      val cat = if (i >= 300) null else Seq("a", "b", "c")(i % 3)
+      val cat = if (i >= 300) null else Seq("a", "b", "c", "a:b")(i % 4)
       (i.toLong, cat, if (i % 5 == 0) null else java.lang.Long.valueOf(i * 2L))
     }.toDF("k", "cat", "v")
     Sinks.publishVersioned(df, tbl, None, statsCols = Seq("k", "v"))
@@ -551,6 +572,12 @@ class MetaCountSpec extends AnyFunSuite {
       .map(r => Option(r.getString(0)).getOrElse("NULL") ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4), r.getLong(5)))).toMap
     assert(got == want, s"got $got want $want")
+    // the escaped directory decodes as Spark's partition discovery
+    // decodes it, in the grouped answer and in the .partitions meta-table
+    assert(got.contains("a:b"), s"got ${got.keySet}")
+    val parts = spark.sql("SELECT cat, n_rows FROM graftmeta.gsum.partitions").collect()
+      .map(r => Option(r.getString(0)).getOrElse("NULL") -> r.getLong(1)).toMap
+    assert(parts == want.map { case (c, w) => c -> w._1 }, s"partitions $parts want $want")
   }
 
   test("count(DISTINCT partition col) answers from directories; non-partition distinct declines (round-14)") {
